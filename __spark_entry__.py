@@ -12,6 +12,7 @@ import os
 import sys
 from collections.abc import Callable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 # The driver may import this file by path; make the sibling package
@@ -21,6 +22,7 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 from gigapi_querier_spark import inventory  # noqa: E402
+from gigapi_querier_spark.session import SQL_CONF  # noqa: E402
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
@@ -54,22 +56,13 @@ def _with_conf(fn: Callable[[SparkSession, str], DataFrame]):
 
 
 def _ensure_session_conf(spark: SparkSession) -> None:
-    """The driver may hand us a session built without our bootstrap; pin
-    the confs the engine's semantics rely on (UTC, int64-ns time model)."""
-    for k, v in (
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        ("spark.sql.parquet.inferTimestampNTZ.enabled", "true"),
-        ("spark.sql.adaptive.enabled", "true"),
-        # InferFiltersFromGenerate duplicates expensive shingle/transform
-        # generators below the exchange (see session.py) — runtime-
-        # settable, so pin it on driver-provided sessions too
-        (
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        ),
-    ):
+    """A caller may hand us a session built without our bootstrap; apply
+    the same runtime SQL conf ``get_spark`` builds with (UTC, int64-ns time
+    model, AQE and scan shape)."""
+    for k, v in SQL_CONF.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
+        except AnalysisException:
+            # a session that refuses a key (CANNOT_MODIFY_*CONFIG) keeps its
+            # own value; every key here is runtime-settable on plain Spark
             pass

@@ -8,7 +8,7 @@ driver as an Arrow table (``df.toArrow()``), so the number covers scan →
 shuffle → result transfer. Arrow is the reference's own result edge — its
 FlightSQL endpoint streams Arrow record batches (flightsql.go DoGet) — and
 the symmetric DuckDB baseline (tools/baseline_duckdb.py) materializes via
-``.arrow()`` under the same warmup + min-of-2 protocol.
+``.arrow()`` under the same warmup + min-of-3 protocol.
 """
 
 from __future__ import annotations

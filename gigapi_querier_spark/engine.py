@@ -46,21 +46,6 @@ class QueryError(Exception):
     querier/server.go:206-212)."""
 
 
-def _transpile_duckdb(sql: str) -> str | None:
-    """duckdb → spark via sqlglot, or None when sqlglot is unavailable
-    or can't parse. Import-gated: sqlglot is not bundled in every
-    environment; the regex shims cover the common paste-ins without it."""
-    try:
-        import sqlglot
-    except ImportError:
-        return None
-    try:
-        out = sqlglot.transpile(sql, read="duckdb", write="spark")
-    except Exception:
-        return None
-    return out[0] if out else None
-
-
 @dataclass
 class QueryStats:
     """Per-query timing mirroring the reference's instrumentation
@@ -93,12 +78,6 @@ class QueryEngine:
     # ------------------------------------------------------------------
     def query(self, sql: str, db: str | None = None) -> DataFrame:
         """Execute a query, returning a DataFrame."""
-        from gigapi_querier_spark.sources.tables import release_small_profile
-
-        # If the fixture loader tuned this shared session for a small
-        # interactive input (AQE off), revert before serving engine
-        # queries — their inputs are unrelated to the fixture dir.
-        release_small_profile(self.spark)
         db = db or self.DEFAULT_DB
         sql = normalize(sql)
         upper = sql.upper().rstrip(";")
@@ -298,19 +277,9 @@ class QueryEngine:
         try:
             df = self.spark.sql(to_spark_sql(rewrite_qualify_all(sql)))
         except Exception as e:
-            # Last resort for DuckDB-isms beyond the regex shims
-            # (struct_pack, QUALIFY in a subquery, named lambdas, …): a
-            # real duckdb→spark transpile when sqlglot is installed; the
-            # original error surfaces unchanged when it isn't or when the
-            # transpile also fails (reference passthrough accepts the
-            # full dialect, queryClient.go:778-815).
-            transpiled = _transpile_duckdb(sql)
-            if transpiled is None:
-                raise QueryError(str(e)) from e
-            try:
-                df = self.spark.sql(transpiled)
-            except Exception:
-                raise QueryError(str(e)) from e
+            # DuckDB-isms beyond the regex shims (e.g. a `[1, 2]` list
+            # literal) surface as a QueryError with Spark's message.
+            raise QueryError(str(e)) from e
         if QUALIFY_COL in df.columns:
             df = df.drop(QUALIFY_COL)
         return df

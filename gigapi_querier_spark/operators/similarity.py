@@ -11,14 +11,14 @@ are reproducible and oracle-checkable.
 
 Vector math comes in two forms:
 
-- column expressions (``dot``/``cosine``/``l2sq``) built from zip_with +
-  aggregate — JVM-side but **interpreted** (higher-order functions are
-  CodegenFallback), kept for composability in arbitrary expressions;
+- JVM column expressions built from zip_with + aggregate (small-corpus
+  ``cosine_topk``, ``ivf_assign_expr_jvm``) — no Python worker round
+  trip, but **interpreted** (higher-order functions are CodegenFallback);
 - Arrow-batched pandas UDFs (``_cosine_udf``/``_bucket_udf``/
   ``_nearest_cid_udf``) that do the same math as one BLAS matrix op per
-  batch — the hot-path form the operators use. Measured ~10-30× faster
-  than the interpreted fold at 64-dim; rounding stays JVM-side
-  (``F.round``) so oracle parity is unaffected.
+  batch — the hot-path form at scale. Measured ~10-30× faster than the
+  interpreted fold at 64-dim; rounding stays JVM-side (``F.round``) so
+  oracle parity is unaffected.
 """
 
 from __future__ import annotations
@@ -36,31 +36,6 @@ from pyspark.sql.functions import pandas_udf
 def _mat(vecs: pd.Series) -> np.ndarray:
     """Stack an Arrow list<float> series into an (n, d) float64 matrix."""
     return np.array([np.asarray(v, dtype=np.float64) for v in vecs])
-
-
-def _as_double(col: Column) -> Column:
-    return col.cast("array<double>")
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Dot product via zip_with + left-fold aggregate (deterministic order)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
-def lit_vector(values: Sequence[float]) -> Column:
-    return F.array(*[F.lit(float(v)) for v in values])
 
 
 #: below this input size the JVM expression path beats the Arrow round
@@ -275,15 +250,6 @@ def lsh_topk(
             qbucket |= 1 << j
     bucketed = df.where(lsh_bucket(F.col(vec_col), hyperplanes) == F.lit(qbucket))
     return cosine_topk(bucketed, query, k=k, id_col=id_col, vec_col=vec_col, decimals=decimals)
-
-
-def l2sq(a: Column, b: Column) -> Column:
-    """Squared L2 distance via zip_with + left-fold aggregate."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def ivf_assign_expr(

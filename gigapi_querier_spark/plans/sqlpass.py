@@ -704,10 +704,16 @@ def _rewrite_arg_transforms(sql: str) -> str:
                 repl = f"split({args[0]}, '{delim}')"
             else:
                 # Non-literal delimiter: DuckDB splits on the VALUE, Spark
-                # split() treats it as a regex — wrap in \Q…\E so metachars
-                # in the runtime value stay literal (ADVICE r3). The SQL
-                # string layer eats one backslash, hence the double.
-                repl = f"split({args[0]}, concat('\\\\Q', {args[1]}, '\\\\E'))"
+                # split() treats it as a regex — backslash-escape every
+                # non-word character of the runtime value so it matches
+                # literally (Java regex reads a backslash before any
+                # non-alphabetic character as that character; a \Q…\E
+                # wrapper broke on values containing \E). The SQL string
+                # layer eats one backslash, hence the doubles.
+                repl = (
+                    f"split({args[0]}, "
+                    f"regexp_replace({args[1]}, '(\\\\W)', '\\\\\\\\$1'))"
+                )
         elif fn in ("string_split_regex", "str_split_regex") and len(args) == 2:
             repl = f"split({args[0]}, {args[1]})"
         elif fn == "list_slice" and len(args) == 3:

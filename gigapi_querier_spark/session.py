@@ -1,6 +1,7 @@
 """SparkSession bootstrap — counterpart of the reference's Initialize()
-(/root/reference/querier/queryClient.go:46-64, which opens one shared DuckDB
-handle). Here one shared SparkSession, tuned for Parquet analytics.
+(querier/queryClient.go:46-64, which opens one shared DuckDB handle). Here
+one shared SparkSession, tuned for Parquet analytics; its SQL conf is the
+one ``SQL_CONF`` mapping below.
 
 Scale notes (targets a 1000-executor cluster; tested on local[N]):
 - AQE on: runtime coalescing of shuffle partitions, skew-join splitting,
@@ -27,6 +28,61 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "16"))
 
 
+#: The session's runtime-settable SQL conf — the single place the engine's
+#: execution profile is written. ``get_spark`` passes it to the builder and
+#: ``__spark_entry__._ensure_session_conf`` applies it to a session a
+#: caller built without us, so both paths run the same profile.
+SQL_CONF: dict[str, str] = {
+    # --- time model (reference parity) ---
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "true",
+    # Broadcast threshold 2 MB (default 10 MB): the default is sized for
+    # "fits in memory", not "worth collecting to the driver and shipping
+    # to every executor" — at the default, a borderline FACT side
+    # (lineitem at small SF) gets broadcast, paying a 600k-row driver
+    # collect per query. 2 MB keeps genuinely fixed-size dims
+    # (region/nation/supplier) on the broadcast path and pushes anything
+    # that grows with data volume to shuffle joins — the scale-correct
+    # default; AQE may still upgrade a join whose runtime (post-filter)
+    # size fits.
+    "spark.sql.autoBroadcastJoinThreshold": "2097152",
+    # --- adaptive execution: runtime re-plan at scale ---
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Advisory size tuned for analytics where post-shuffle work is
+    # CPU-heavy per byte (hashing, string ops): 8 MB keeps coalesced
+    # partitions numerous enough to use the cluster; at 100 TB this
+    # yields more, smaller tasks — safe, just more scheduling.
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
+    # InferFiltersFromGenerate duplicates the generator expression into a
+    # pushed-down Filter; for expensive generators (shingle arrays,
+    # per-row transforms ahead of explode) that doubles the dominant cost
+    # and runs it below the parallelizing exchange. The rule only saves
+    # work for rows with empty arrays — not worth it here.
+    "spark.sql.optimizer.excludedRules": (
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+    ),
+    "spark.sql.shuffle.partitions": str(DEFAULT_SHUFFLE_PARTITIONS),
+    # --- scan shape ---
+    "spark.sql.files.maxPartitionBytes": "134217728",
+    # Parquet split floor. Spark sizes scan splits as
+    # ``min(maxPartitionBytes, max(openCostInBytes, totalBytes/parallelism))``;
+    # the default 4 MB floor pins a 20-100 MB table to a handful of tasks
+    # (measured: events @ sf1.0 = 6 tasks while 26 cores idle). 1 MB says
+    # "a task is worth spawning per MB of parquet" — right for page-cached
+    # local reads and harmless at 100 TB, where bytes per core far exceed
+    # maxPartitionBytes and splits stay at 128 MB regardless.
+    "spark.sql.files.openCostInBytes": str(1024 * 1024),
+    "spark.sql.parquet.filterPushdown": "true",
+    "spark.sql.parquet.aggregatePushdown": "true",
+    # --- Python <-> JVM boundary is Arrow-batched everywhere ---
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+}
+
+
 def get_spark(
     app_name: str = "gigapi-querier-spark",
     master: str | None = None,
@@ -37,57 +93,17 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
-        # --- time model (reference parity) ---
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-        # Broadcast threshold 2 MB (default 10 MB): the default is sized
-        # for "fits in memory", not "worth collecting to the driver and
-        # shipping to every executor" — at the default, a borderline FACT
-        # side (lineitem at small SF) gets broadcast, paying a 600k-row
-        # driver collect per query. 2 MB keeps genuinely fixed-size dims
-        # (region/nation/supplier) on the broadcast path and pushes
-        # anything that grows with data volume to shuffle joins — the
-        # scale-correct default; AQE may still upgrade a join whose
-        # runtime (post-filter) size fits.
-        .config("spark.sql.autoBroadcastJoinThreshold", "2097152")
-        # --- adaptive execution: runtime re-plan at scale ---
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Advisory size tuned for analytics where post-shuffle work is
-        # CPU-heavy per byte (hashing, string ops): 8 MB keeps coalesced
-        # partitions numerous enough to use the cluster; at 100 TB this
-        # yields more, smaller tasks — safe, just more scheduling.
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-        # InferFiltersFromGenerate duplicates the generator expression into
-        # a pushed-down Filter; for expensive generators (shingle arrays,
-        # per-row transforms ahead of explode) that doubles the dominant
-        # cost and runs it below the parallelizing exchange. The rule only
-        # saves work for rows with empty arrays — not worth it here.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
-        .config("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
-        # --- scan shape ---
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.parquet.aggregatePushdown", "true")
-        # Whole-stage-codegen class cache (STATIC conf — takes effect at
-        # session creation). The default 100 entries thrashes under a
-        # mixed workload: ~16 distinct queries generate ~100 classes per
-        # cycle, so every query recompiled every cycle (~0.3-0.5 s each).
-        # A query service compiles each plan once and keeps it.
+        # Static confs: fixed at session creation, so builder-only.
+        # Whole-stage-codegen class cache: the default 100 entries thrashes
+        # under a mixed workload: ~16 distinct queries generate ~100
+        # classes per cycle, so every query recompiled every cycle
+        # (~0.3-0.5 s each). A query service compiles each plan once and
+        # keeps it.
         .config("spark.sql.codegen.cache.maxEntries", "5000")
-        # --- Python <-> JVM boundary is Arrow-batched everywhere ---
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config(map={**SQL_CONF, **(extra_conf or {})})
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     _register_session_functions(spark)
     return spark

@@ -4,7 +4,8 @@ Physical layout (reference SURVEY.md §1.2):
 
     {root}/{db}/{table}/data/date=YYYY-MM-DD/hour=HH/*.parquet
                         + per-folder metadata.json
-                        + tmp/ dirs with half-written files (skipped)
+                        + tmp/, _temporary/, .hidden/ dirs holding no
+                          committed data (skipped, ``is_staging_dir``)
 
 This is the engine-side counterpart of the reference's catalog layer:
 - metadata.json schema            → querier/queryClient.go:340-356
@@ -35,6 +36,15 @@ from gigapi_querier_spark.plans.sqlpass import NS_PER_S, TimeRange
 
 _DATE_DIR = re.compile(r"^date=(.+)$")
 _HOUR_DIR = re.compile(r"^hour=(\d+)$")
+
+
+def is_staging_dir(name: str) -> bool:
+    """A directory below a table root that holds no committed data:
+    ``tmp/`` (half-written files, reference :496-499) or a Hadoop hidden
+    path — a name starting with ``_`` or ``.``, e.g. the ``_temporary/``
+    staging tree of an in-flight Spark write. Applied only below the table
+    root, never to db or table names."""
+    return name == "tmp" or name.startswith(("_", "."))
 
 
 @dataclass(frozen=True)
@@ -94,7 +104,7 @@ class Catalog:
 
         Walks the tree; honors per-folder metadata.json (folder rollup
         then per-file min/max), prunes date=/hour= partition dirs from
-        the range, skips tmp/ dirs, and drops stale entries whose files
+        the range, skips staging dirs, and drops stale entries whose files
         no longer exist.
         """
         tr = tr or TimeRange()
@@ -107,9 +117,6 @@ class Catalog:
 
     def _walk(self, path: str, tr: TimeRange, out: list[str]) -> None:
         name = os.path.basename(path)
-        if name == "tmp":
-            # may hold half-written parquet (reference :496-499)
-            return
         m = _DATE_DIR.match(name)
         if m and not self._date_in_range(m.group(1), tr):
             return
@@ -129,7 +136,8 @@ class Catalog:
         for e in entries:
             sub = os.path.join(path, e)
             if os.path.isdir(sub):
-                self._walk(sub, tr, out)
+                if not is_staging_dir(e):
+                    self._walk(sub, tr, out)
             elif e.endswith(".parquet"):
                 out.append(sub)
 

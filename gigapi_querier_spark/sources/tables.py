@@ -39,118 +39,6 @@ BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"
 #: re-paying that I/O (plans are immutable and reusable).
 _TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
-#: Planned-input threshold below which adaptive execution is skipped.
-#: AQE exists to RE-PLAN LARGE SHUFFLES at runtime (stage-by-stage
-#: materialization, re-optimization, skew splitting) — that machinery
-#: costs ~20-40 ms of extra stage scheduling per query, pure overhead
-#: when the whole input is a few hundred MB and every shuffle is tiny.
-#: A query service sizes this by table stats: small interactive inputs
-#: run the static plan with few shuffle partitions; anything at data
-#: scale keeps AQE + env-scaled partitions (the 100 TB default). The
-#: results are identical either way — AQE only changes physical
-#: execution.
-SMALL_INPUT_BYTES = 64 * 1024 * 1024
-SMALL_INPUT_SHUFFLE = "8"
-
-_SIZE_CACHE: dict[str, int] = {}
-#: applicationId -> (sf_dir, "small" | "scale") last applied.
-_TUNED_FOR: dict[str, tuple[str, str]] = {}
-#: applicationId -> pre-tune conf snapshot, taken before the FIRST
-#: mutation so the session's own profile (a user's AQE pin, the
-#: bootstrap defaults) can be restored (ADVICE r3 — the small fixture
-#: profile must not leak into engine/HTTP queries sharing the session).
-_ORIG_CONF: dict[str, dict[str, str | None]] = {}
-
-_PROFILE_KEYS = (
-    "spark.sql.adaptive.enabled",
-    "spark.sql.shuffle.partitions",
-    "spark.sql.files.openCostInBytes",
-)
-
-#: Scale-profile parquet split floor. Spark sizes scan splits as
-#: ``min(maxPartitionBytes, max(openCostInBytes, totalBytes/parallelism))``
-#: — the formula already adapts to input size per scan, but the default
-#: 4 MB openCost floor pins a 20-100 MB table to a handful of tasks
-#: (measured: events @ sf1.0 = 6 tasks, 1-task-per-4MB JSON parsing while
-#: 26 cores idle). 1 MB says "a task is worth spawning per MB of parquet"
-#: — right for page-cached local reads AND harmless at 100 TB, where
-#: bytesPerCore >> maxPartitionBytes keeps splits at 128 MB regardless.
-SCALE_OPEN_COST = str(1024 * 1024)
-
-
-def _dir_input_bytes(sf_dir: str) -> int:
-    total = _SIZE_CACHE.get(sf_dir)
-    if total is None:
-        try:
-            # Recursive: a "table.parquet" may be a DIRECTORY of part
-            # files (Spark writer layout) — a flat scandir measured those
-            # as ~0 bytes and wrongly took the small profile (ADVICE r3).
-            total = 0
-            for dirpath, _dirnames, filenames in os.walk(sf_dir):
-                for fn in filenames:
-                    if fn.endswith(".parquet"):
-                        total += os.stat(os.path.join(dirpath, fn)).st_size
-        except OSError:
-            total = SMALL_INPUT_BYTES  # unknown → keep the scale defaults
-        _SIZE_CACHE[sf_dir] = total
-    return total
-
-
-def _snapshot_conf(spark: SparkSession, app: str) -> None:
-    if app not in _ORIG_CONF:
-        snap: dict[str, str | None] = {}
-        for k in _PROFILE_KEYS:
-            try:
-                snap[k] = spark.conf.get(k, None)
-            except Exception:
-                snap[k] = None
-        _ORIG_CONF[app] = snap
-
-
-def release_small_profile(spark: SparkSession) -> None:
-    """Restore the session's pre-tune confs if the small fixture profile
-    is active. The engine calls this on its query path so interactive
-    fixture tuning (AQE off, 8 shuffle partitions) never bleeds into
-    engine/HTTP queries sharing the session; the next ``load_tables``
-    re-applies whatever profile its input warrants. No-op (one dict
-    lookup) when nothing small is active."""
-    app = spark.sparkContext.applicationId
-    tuned = _TUNED_FOR.get(app)
-    if tuned is None or tuned[1] != "small":
-        return
-    for k, v in _ORIG_CONF.get(app, {}).items():
-        try:
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-        except Exception:
-            pass
-    del _TUNED_FOR[app]
-
-
-def tune_for_input(spark: SparkSession, sf_dir: str) -> None:
-    """Apply the input-size-aware execution profile (idempotent per
-    (session, sf_dir); both confs are runtime-settable)."""
-    app = spark.sparkContext.applicationId
-    tuned = _TUNED_FOR.get(app)
-    if tuned is not None and tuned[0] == sf_dir:
-        return
-    from gigapi_querier_spark.session import DEFAULT_SHUFFLE_PARTITIONS
-
-    _snapshot_conf(spark, app)
-    if _dir_input_bytes(sf_dir) < SMALL_INPUT_BYTES:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", SMALL_INPUT_SHUFFLE)
-        _TUNED_FOR[app] = (sf_dir, "small")
-    else:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS)
-        )
-        spark.conf.set("spark.sql.files.openCostInBytes", SCALE_OPEN_COST)
-        _TUNED_FOR[app] = (sf_dir, "scale")
-
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table as a DataFrame (schema-memoized)."""
@@ -170,7 +58,6 @@ def load_tables(
     Registration is idempotent and cheap (lazy plans; nothing is scanned
     until an action runs).
     """
-    tune_for_input(spark, sf_dir)
     out: dict[str, DataFrame] = {}
     for name in names:
         df = table(spark, sf_dir, name)

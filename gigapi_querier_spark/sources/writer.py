@@ -24,6 +24,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gigapi_querier_spark.sources.catalog import is_staging_dir
+
 NS_PER_S = 1_000_000_000
 
 
@@ -69,7 +71,7 @@ def write_metadata(base: str, time_col: str = "time") -> int:
 
     n = 0
     for dirpath, dirnames, filenames in os.walk(base):
-        dirnames[:] = [d for d in dirnames if d != "tmp"]
+        dirnames[:] = [d for d in dirnames if not is_staging_dir(d)]
         parquet_files = sorted(f for f in filenames if f.endswith(".parquet"))
         if not parquet_files:
             continue
@@ -156,7 +158,7 @@ def compact_table(
     base = os.path.join(root, db, table, "data")
     compacted = 0
     for dirpath, dirnames, filenames in os.walk(base):
-        dirnames[:] = [d for d in dirnames if d != "tmp"]
+        dirnames[:] = [d for d in dirnames if not is_staging_dir(d)]
         files = sorted(f for f in filenames if f.endswith(".parquet"))
         if len(files) < min_files:
             continue

@@ -2,11 +2,13 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from gigapi_querier_spark.plans.sqlpass import TimeRange
 from gigapi_querier_spark.sources.catalog import Catalog
-from tests.fixtures import NS, _ns, build_weather_root
+from tests.fixtures import NS, _ns, _write_file, build_weather_root
 
 
 @pytest.fixture(scope="module")
@@ -23,6 +25,29 @@ def test_full_scan_discovers_all_and_skips_tmp(root):
     assert not any("/data/tmp/" in f for f in files)
     # stale metadata entry (gone.parquet) not included
     assert not any(f.endswith("gone.parquet") for f in files)
+
+
+def test_staging_dirs_skipped_below_table_root_only(tmp_path):
+    """An in-flight Spark write stages parquet under data/_temporary/…;
+    it is neither discovered nor indexed. The rule applies only below the
+    table root: a table whose own name starts with '_' is still served."""
+    from gigapi_querier_spark.sources.writer import write_metadata
+
+    root = str(tmp_path)
+    part = "date=2024-01-01/hour=00"
+    for table in ("events", "_events"):
+        data = os.path.join(root, "mydb", table, "data")
+        committed = os.path.join(data, part, "part-0.parquet")
+        _write_file(committed, [_ns(2024, 1, 1)])
+        _write_file(
+            os.path.join(data, "_temporary", "0", part, "part-1.parquet"),
+            [_ns(2024, 1, 1)],
+        )
+        assert Catalog(root).find_files("mydb", table) == [committed]
+        write_metadata(data)
+        metas = [dp for dp, _, fs in os.walk(data) if "metadata.json" in fs]
+        assert metas == [os.path.dirname(committed)]
+        assert Catalog(root).find_files("mydb", table) == [committed]
 
 
 def test_date_hour_pruning(root):

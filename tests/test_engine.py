@@ -89,6 +89,13 @@ def test_fallback_version(engine):
 def test_unknown_table_errors(engine):
     with pytest.raises(QueryError):
         engine.query_rows("SELECT * FROM nosuchtable", "mydb")
+    # the raw-SQL fallback surfaces what Spark cannot run as a QueryError
+    # (HTTP 400), not a crash: a DuckDB-ism beyond every regex shim (the
+    # `[1, 2]` list literal) and SQL that parses as nothing
+    with pytest.raises(QueryError):
+        engine.query_rows("SELECT list_transform([1, 2], lambda x: x + 1) AS xs")
+    with pytest.raises(QueryError):
+        engine.query_rows("SELECT definitely not sql !!!")
 
 
 def test_empty_time_range_errors(engine):
@@ -186,6 +193,20 @@ def test_dialect_str_split_dot_delimiter(engine):
     assert rows == [{"xs": ["a", "b", "c"]}]
 
 
+def test_dialect_str_split_runtime_delimiter_literal(engine):
+    # a runtime (column) delimiter splits on its value: regex metachars and
+    # a backslash-E pair inside it stay literal
+    rows = engine.query_rows(
+        "SELECT str_split(s, d) AS xs"
+        " FROM (SELECT 'a\\\\E.b\\\\E.c' AS s, '\\\\E.' AS d)"
+    )
+    assert rows == [{"xs": ["a", "b", "c"]}]
+    rows = engine.query_rows(
+        "SELECT str_split(s, d) AS xs FROM (SELECT 'a.*b.*c' AS s, '.*' AS d)"
+    )
+    assert rows == [{"xs": ["a", "b", "c"]}]
+
+
 def test_dialect_list_slice_inclusive_end(engine):
     # ADVICE r2 (medium): DuckDB list_slice end is inclusive
     rows = engine.query_rows(
@@ -207,38 +228,6 @@ def test_dialect_lambda_int_body(engine):
         "SELECT transform(list_value(5, 6), x -> 0) AS out"
     )
     assert rows == [{"out": [0, 0]}]
-
-
-def test_dialect_sqlglot_fallback_wiring(engine, monkeypatch):
-    """When the regex shims can't fix a DuckDB-ism, the engine consults
-    sqlglot (import-gated; faked here since it isn't bundled) and runs
-    the transpiled SQL; without it the original error still surfaces."""
-    import sys
-    import types
-
-    from gigapi_querier_spark.engine import QueryError
-
-    # DuckDB's `lambda` keyword form — beyond every regex shim
-    bad = "SELECT list_transform([1, 2], lambda x: x + 1) AS xs"
-    with pytest.raises(QueryError):
-        engine.query_rows(bad)
-
-    fake = types.ModuleType("sqlglot")
-
-    def transpile(sql, read=None, write=None):
-        assert read == "duckdb" and write == "spark"
-        if "lambda" in sql:
-            return ["SELECT transform(array(1, 2), x -> x + 1) AS xs"]
-        raise ValueError("parse error")
-
-    fake.transpile = transpile
-    monkeypatch.setitem(sys.modules, "sqlglot", fake)
-    rows = engine.query_rows(bad)
-    assert rows == [{"xs": [2, 3]}]
-
-    # transpiler also failing -> original QueryError, not a crash
-    with pytest.raises(QueryError):
-        engine.query_rows("SELECT definitely not sql !!!")
 
 
 def test_dialect_using_sample_rows(engine):
@@ -373,31 +362,6 @@ def test_concurrent_describe_and_query_no_view_race(engine):
             assert {"time", "temperature"} <= res, res
         else:
             assert res == 24, res
-
-
-def test_engine_query_releases_small_profile(engine, tmp_path):
-    """A fixture-tuned small profile (AQE off) on the shared session must
-    not govern engine queries (ADVICE r3)."""
-    from gigapi_querier_spark.sources import tables as T
-
-    spark = engine.spark
-    sf = tmp_path / "tiny_sf"
-    sf.mkdir()
-    (sf / "t.parquet").write_bytes(b"\0" * 16)
-    app = spark.sparkContext.applicationId
-    orig_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    orig_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        T.tune_for_input(spark, str(sf))
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-        assert engine.query_rows("SELECT 1 AS x", "mydb") == [{"x": 1}]
-        assert spark.conf.get("spark.sql.adaptive.enabled") == orig_aqe
-    finally:
-        T._TUNED_FOR.pop(app, None)
-        T._ORIG_CONF.pop(app, None)
-        T._SIZE_CACHE.clear()
-        spark.conf.set("spark.sql.adaptive.enabled", orig_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", orig_shuffle)
 
 
 def test_duckdb_session_statements_noop(engine):

@@ -418,16 +418,17 @@ def test_shim_struct_pack_and_list_aggregate(spark):
 
 def test_shim_str_split_nonliteral_delimiter(spark):
     # ADVICE r3: a non-literal delimiter is a VALUE in DuckDB but a REGEX
-    # in Spark split() — wrap it in \Q…\E so metachars stay literal
+    # in Spark split() — backslash-escape its non-word chars so metachars
+    # stay literal
     assert to_spark_sql("SELECT str_split(s, d) FROM t") == (
-        "SELECT split(s, concat('\\\\Q', d, '\\\\E')) FROM t"
+        "SELECT split(s, regexp_replace(d, '(\\\\W)', '\\\\\\\\$1')) FROM t"
     )
     # end-to-end: '.' as a runtime value splits literally, not match-all
     row = spark.sql(
         to_spark_sql("SELECT str_split('a.b.c', substr('x.', 2)) AS xs")
     ).first()
     assert row["xs"] == ["a", "b", "c"]
-    # NULL delimiter → NULL (DuckDB parity: concat propagates the NULL)
+    # NULL delimiter → NULL (DuckDB parity: regexp_replace propagates it)
     row = spark.sql(
         to_spark_sql("SELECT str_split('a.b', CAST(NULL AS STRING)) AS xs")
     ).first()
