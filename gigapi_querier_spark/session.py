@@ -75,6 +75,13 @@ SQL_CONF: dict[str, str] = {
     # local reads and harmless at 100 TB, where bytes per core far exceed
     # maxPartitionBytes and splits stay at 128 MB regardless.
     "spark.sql.files.openCostInBytes": str(1024 * 1024),
+    # List input paths on the driver, never in a distributed job. Above the
+    # default threshold (32 paths) Spark lists with one task per path: 720
+    # tasks for a 30-day range. The engine passes leaf files the catalog
+    # has already found and isfile-checked, so there is nothing to discover
+    # and serial driver-side listing is the cheap path (binding 720 local
+    # files, median of 5 on 4 cores: 4.6 s -> 0.29 s).
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "1000000",
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
     # --- Python <-> JVM boundary is Arrow-batched everywhere ---

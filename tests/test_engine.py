@@ -128,19 +128,19 @@ def test_pg_cast_shim(engine):
 
 
 def test_schema_cache_hits_on_repeat(engine):
-    engine._schema_cache.clear()
+    engine._relations.clear()
     engine.query_rows("SELECT count(*) AS value FROM weather", "mydb")
-    assert len(engine._schema_cache) == 1
+    assert len(engine._relations) == 1
     # identical file set → cache hit (no new entry, same schema applied)
     engine.query_rows("SELECT count(*) AS value FROM weather", "mydb")
-    assert len(engine._schema_cache) == 1
+    assert len(engine._relations) == 1
     # different (pruned) file set → separate entry
     engine.query_rows(
         "SELECT count(*) AS value FROM weather"
         " WHERE time >= '2024-01-02T00:00:00Z' AND time <= '2024-01-02T23:59:59Z'",
         "mydb",
     )
-    assert len(engine._schema_cache) == 2
+    assert len(engine._relations) == 2
 
 
 def test_read_parquet_compat(engine):
@@ -370,3 +370,121 @@ def test_duckdb_session_statements_noop(engine):
         assert rows == [{"status": "ok"}]
     # plain queries still work after
     assert engine.query_rows("SELECT 1 AS x", "mydb") == [{"x": 1}]
+
+
+# -- relation cache over a 40-file hourly lake (above Spark's default
+#    32-path threshold for a distributed listing job) ----------------------
+
+HOURLY_ROWS = 10
+
+
+def _write_hour(root: str, hour: int) -> None:
+    """One ``date=/hour=`` folder of the ``mydb.hourly`` table: a parquet
+    file of HOURLY_ROWS rows plus its metadata.json."""
+    import json
+    import os
+
+    from tests.fixtures import NS, _ns, _write_file
+
+    t0 = _ns(2024, 2, 1 + hour // 24, hour % 24)
+    folder = os.path.join(
+        root, "mydb", "hourly", "data", f"date=2024-02-{1 + hour // 24:02d}",
+        f"hour={hour % 24:02d}",
+    )
+    entry = _write_file(
+        os.path.join(folder, "part-0.parquet"),
+        [t0 + i * 60 * NS for i in range(HOURLY_ROWS)],
+    )
+    with open(os.path.join(folder, "metadata.json"), "w") as f:
+        json.dump(
+            {"type": "parquet", "row_count": HOURLY_ROWS, "min_time": entry["min_time"],
+             "max_time": entry["max_time"], "files": [entry]},
+            f,
+        )
+
+
+@pytest.fixture
+def hourly(spark, tmp_path):
+    root = str(tmp_path)
+    for h in range(40):
+        _write_hour(root, h)
+    return QueryEngine(spark, root=root), root
+
+
+def _spark_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn launched on this thread)."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"bind-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events reach the tracker
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+HOURLY_ALL = "SELECT count(*) AS n FROM hourly"
+
+
+def test_first_bind_launches_no_listing_job(hourly, spark):
+    eng, _ = hourly
+    df, jobs = _spark_jobs(spark, lambda: eng.query(HOURLY_ALL, "mydb"))
+    assert eng.last_stats.n_files == 40
+    assert not eng.last_stats.relation_cached
+    assert jobs <= 1, jobs  # the footer merge only; no per-path listing job
+    assert df.collect()[0]["n"] == 40 * HOURLY_ROWS
+
+
+def test_repeat_bind_launches_no_spark_job(hourly, spark):
+    eng, _ = hourly
+    eng.query(HOURLY_ALL, "mydb")
+    df, jobs = _spark_jobs(spark, lambda: eng.query(HOURLY_ALL, "mydb"))
+    assert eng.last_stats.relation_cached
+    assert jobs == 0, jobs
+    assert df.collect()[0]["n"] == 40 * HOURLY_ROWS
+
+
+def test_new_hour_in_cached_range_misses(hourly):
+    eng, root = hourly
+    eng.query(HOURLY_ALL, "mydb")
+    _write_hour(root, 40)
+    rows = eng.query_rows(HOURLY_ALL, "mydb")
+    assert not eng.last_stats.relation_cached
+    assert eng.last_stats.n_files == 41
+    assert rows == [{"n": 41 * HOURLY_ROWS}]
+
+
+def test_concurrent_relation_cache_stays_bounded(hourly, monkeypatch):
+    """Threads hitting, missing and evicting at once: no error, correct
+    counts, and the cache never holds more than its bound."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    eng, _ = hourly
+    monkeypatch.setattr(eng, "RELATION_CACHE_SIZE", 4)
+    sizes = []
+
+    def three_hours(start: int) -> int:
+        rows = eng.query_rows(
+            "SELECT count(*) AS n FROM hourly"
+            f" WHERE time >= '2024-02-02T{start:02d}:00:00Z'"
+            f" AND time < '2024-02-02T{start + 3:02d}:00:00Z'",
+            "mydb",
+        )
+        with eng._relations_lock:
+            sizes.append(len(eng._relations))
+        return rows[0]["n"]
+
+    starts = list(range(12)) * 3
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(8) as ex:
+            results = list(ex.map(three_hours, starts, timeout=300))
+    finally:
+        sys.setswitchinterval(interval)
+    assert results == [3 * HOURLY_ROWS] * len(starts)
+    assert max(sizes) <= 4

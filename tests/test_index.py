@@ -132,11 +132,11 @@ def test_engine_scans_uri_paths_from_index(spark, redis_root):
     )
     assert rows == [{"n": 8, "s": 12.0}]
     # schema cache signatures came from the Hadoop FS branch (real sizes)
-    key = next(iter(eng._schema_cache))
+    key = next(iter(eng._relations))
     assert all(size > 0 and mtime > 0 for (_, size, mtime) in key[2])
     # rewrite-in-place invalidation: overwrite one file with a different
     # schema; the (size, mtime) signature must miss the cache
-    before = len(eng._schema_cache)
+    before = len(eng._relations)
     df2 = spark.createDataFrame(
         [(NS, 1.0, "x")], "time long, v double, extra string"
     ).coalesce(1)
@@ -152,7 +152,7 @@ def test_engine_scans_uri_paths_from_index(spark, redis_root):
     meta[new_uri] = entry
     rows = eng.query_rows("SELECT count(*) AS n FROM metrics", "rdb")
     assert rows == [{"n": 5}]
-    assert len(eng._schema_cache) > before  # fresh schema, not stale
+    assert len(eng._relations) > before  # fresh schema, not stale
 
 
 def test_index_from_env_selects_backend(tmp_path, monkeypatch):
@@ -246,5 +246,5 @@ def test_engine_time_prunes_layer_resolved_uris(spark, tmp_path):
     assert rows == [{"n": 4, "s": 6.0}]
     assert eng.last_stats.n_files < n_all
     # the bind's schema-cache signatures came through the Hadoop FS branch
-    key = next(iter(eng._schema_cache))
+    key = next(iter(eng._relations))
     assert all(size > 0 and mtime > 0 for (_, size, mtime) in key[2])
