@@ -35,6 +35,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
+from gigapi_querier_spark.formats import arrow_rows
 from gigapi_querier_spark.plans.sqlpass import (
     ParseError,
     normalize,
@@ -210,27 +211,28 @@ class QueryEngine:
         self, sql: str, db: str | None = None, max_rows: int | None = None
     ) -> list[dict]:
         """Collect results as row dicts with the reference's count-null→0
-        rule applied (queryClient.go:911-914). Raises QueryError when the
-        result exceeds ``max_rows`` (default ``MAX_JSON_ROWS``)."""
-        df = self.query(sql, db)
+        rule applied (queryClient.go:911-914).
+
+        The result is fetched with one ``toArrow()``: one Spark job whose
+        partitions are collected in parallel. Like the Flight edge's
+        ``to_arrow``, that collect is bounded by
+        ``spark.driver.maxResultSize``. The row cap ``max_rows`` (default
+        ``MAX_JSON_ROWS``) is checked on the Arrow table before any Python
+        row is built, so Python memory stays bounded by the cap; a larger
+        result raises QueryError."""
+        table = self.query(sql, db).toArrow()
         cap = self.MAX_JSON_ROWS if max_rows is None else max_rows
-        if cap and cap > 0:
-            collected = df.take(cap + 1)
-            if len(collected) > cap:
-                raise QueryError(
-                    f"result exceeds {cap} rows for format=json; "
-                    "add a LIMIT or use format=ndjson (streamed)"
-                )
-        else:
-            collected = df.collect()
-        count_cols = {c for c in df.columns if "count" in c}
-        rows = []
-        for r in collected:
-            d = r.asDict(recursive=True)
+        if cap and cap > 0 and table.num_rows > cap:
+            raise QueryError(
+                f"result exceeds {cap} rows for format=json; "
+                "add a LIMIT or use format=ndjson (streamed)"
+            )
+        rows = arrow_rows(table)
+        count_cols = [c for c in table.column_names if "count" in c]
+        for d in rows:
             for c in count_cols:
-                if d.get(c) is None:
+                if d[c] is None:
                     d[c] = 0
-            rows.append(d)
         return rows
 
     # ------------------------------------------------------------------

@@ -9,10 +9,12 @@
 
 stdlib ThreadingHTTPServer: the Spark driver is the natural home of the
 query frontend (one SparkSession shared across requests, like the
-reference's single DuckDB handle). NDJSON streams row-by-row from
-toLocalIterator — results never fully materialize in driver memory
-(improvement over the reference's full row-map materialization,
-queryClient.go:886-920).
+reference's single DuckDB handle). JSON is fetched with one parallel
+Arrow collect (``QueryEngine.query_rows``), as the reference materializes
+a result once per request (queryClient.go:886-920). NDJSON streams
+partition by partition from ``toLocalIterator``, prefetching the next
+partition while one is encoded, and writes one HTTP chunk per ~64 KB of
+lines — results never fully materialize in driver memory.
 """
 
 from __future__ import annotations
@@ -23,6 +25,8 @@ from datetime import datetime, timezone
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
+from pyspark.sql.types import TimestampType
+
 from gigapi_querier_spark.engine import QueryEngine, QueryError
 from gigapi_querier_spark.formats import json_format, transform_value
 
@@ -31,6 +35,9 @@ _CORS = {
     "Access-Control-Allow-Methods": "POST, GET, OPTIONS",
     "Access-Control-Allow-Headers": "Content-Type",
 }
+
+#: NDJSON lines are joined into HTTP chunks of about this many bytes.
+CHUNK_BYTES = 64 * 1024
 
 
 class _HeadersAlreadySent(Exception):
@@ -124,8 +131,15 @@ def make_handler(engine: QueryEngine):
             # first-partition execution) runs here so errors still produce
             # a clean 400/500 response.
             df = engine.query(sql, db)
-            count_cols = {c for c in df.columns if "count" in c}
-            it = df.toLocalIterator()
+            names = df.columns
+            count_idx = [i for i, c in enumerate(names) if "count" in c]
+            # Rows carry TimestampType as naive local time: make it UTC.
+            utc_idx = [
+                i
+                for i, f in enumerate(df.schema.fields)
+                if isinstance(f.dataType, TimestampType)
+            ]
+            it = df.toLocalIterator(True)  # prefetch the next partition
             self.send_response(200)
             self.send_header("Content-Type", "application/x-ndjson")
             for k, v in _CORS.items():
@@ -133,15 +147,24 @@ def make_handler(engine: QueryEngine):
             self.send_header("Transfer-Encoding", "chunked")
             self.end_headers()
             try:
+                lines, size = [], 0
                 for row in it:
-                    d = row.asDict(recursive=True)
-                    for c in count_cols:
-                        if d.get(c) is None:
-                            d[c] = 0
-                    line = (
-                        json.dumps({k: transform_value(v) for k, v in d.items()}) + "\n"
-                    ).encode()
-                    self.wfile.write(f"{len(line):x}\r\n".encode() + line + b"\r\n")
+                    if count_idx or utc_idx:
+                        row = list(row)
+                        for i in count_idx:
+                            if row[i] is None:
+                                row[i] = 0
+                        for i in utc_idx:
+                            if row[i] is not None:
+                                row[i] = row[i].astimezone(timezone.utc)
+                    line = json.dumps({k: transform_value(v) for k, v in zip(names, row)})
+                    lines.append(line)
+                    size += len(line) + 1
+                    if size >= CHUNK_BYTES:
+                        self._write_chunk(lines)
+                        lines, size = [], 0
+                if lines:
+                    self._write_chunk(lines)
             except Exception as e:
                 # terminate the chunked body; do NOT start a second response
                 try:
@@ -150,6 +173,10 @@ def make_handler(engine: QueryEngine):
                     pass
                 raise _HeadersAlreadySent(str(e)) from e
             self.wfile.write(b"0\r\n\r\n")
+
+        def _write_chunk(self, lines: list[str]):
+            data = ("\n".join(lines) + "\n").encode()
+            self.wfile.write(b"%x\r\n%s\r\n" % (len(data), data))
 
     return Handler
 

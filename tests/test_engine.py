@@ -457,6 +457,18 @@ def test_new_hour_in_cached_range_misses(hourly):
     assert rows == [{"n": 41 * HOURLY_ROWS}]
 
 
+def test_query_rows_fetches_in_one_job(hourly, spark):
+    """The json edge collects every partition in one parallel job (a
+    ``take`` would scan one partition alone first, then scale up)."""
+    eng, _ = hourly
+    sql = "SELECT * FROM hourly"
+    assert eng.query(sql, "mydb").rdd.getNumPartitions() >= 4  # binds, too
+    rows, jobs = _spark_jobs(spark, lambda: eng.query_rows(sql, "mydb"))
+    assert eng.last_stats.relation_cached
+    assert jobs == 1, jobs
+    assert len(rows) == 40 * HOURLY_ROWS
+
+
 def test_concurrent_relation_cache_stays_bounded(hourly, monkeypatch):
     """Threads hitting, missing and evicting at once: no error, correct
     counts, and the cache never holds more than its bound."""

@@ -8,7 +8,7 @@ from datetime import datetime, timezone
 import pyarrow as pa
 
 from gigapi_querier_spark.arrow_out import normalize_arrow
-from gigapi_querier_spark.formats import json_format, ndjson_format, transform_value
+from gigapi_querier_spark.formats import arrow_rows, json_format, transform_value
 
 
 def test_int64_renders_as_string():
@@ -36,11 +36,6 @@ def test_timestamp_rfc3339nano():
 def test_json_envelope():
     out = json.loads(json_format([{"a": 1, "b": "x"}]))
     assert out == {"results": [{"a": "1", "b": "x"}]}
-
-
-def test_ndjson_lines():
-    lines = list(ndjson_format([{"a": 1}, {"a": 2}]))
-    assert [json.loads(l) for l in lines] == [{"a": "1"}, {"a": "2"}]
 
 
 def test_arrow_column_order_time_first_rest_alpha():
@@ -91,3 +86,29 @@ def test_arrow_string_timestamp_layouts():
     assert col[1].value == base
     assert col[2].value == base + 123456789
     assert col[3].as_py() is None and col[4].as_py() is None
+
+
+def test_arrow_rows_match_row_dicts():
+    # the json edge's column-wise rows: NumPy-converted columns keep
+    # to_pylist's values and types, and maps (nested too) become dicts
+    m = pa.map_(pa.string(), pa.int64())
+    t = pa.table(
+        {
+            "i": pa.array([1, 2], pa.int32()),
+            "n": pa.array([None, 3], pa.int64()),
+            "f": pa.array([0.5, None]),
+            "b": pa.array([True, False]),
+            "s": pa.array(["x", None]),
+            "m": pa.array([[("k", 1)], None], m),
+            "lm": pa.array([[[("a", 2)]], []], pa.list_(m)),
+            "st": pa.array([{"c": [("q", 3)]}, {"c": None}], pa.struct([("c", m)])),
+        }
+    )
+    rows = arrow_rows(t)
+    assert rows == [
+        {"i": 1, "n": None, "f": 0.5, "b": True, "s": "x",
+         "m": {"k": 1}, "lm": [{"a": 2}], "st": {"c": {"q": 3}}},
+        {"i": 2, "n": 3, "f": None, "b": False, "s": None,
+         "m": None, "lm": [], "st": {"c": None}},
+    ]
+    assert type(rows[0]["i"]) is int and type(rows[0]["b"]) is bool

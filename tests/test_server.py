@@ -158,3 +158,67 @@ def test_ui_disabled_via_env(base_url, monkeypatch):
     with pytest.raises(urllib.error.HTTPError) as ei:
         urllib.request.urlopen(base_url + "/")
     assert ei.value.code == 404
+
+
+def _ndjson(url: str, body: dict) -> list[dict]:
+    code, out = _post(url, body)
+    assert code == 200, out
+    return [json.loads(l) for l in out.decode().splitlines()]
+
+
+#: every type family the edges encode, over enough rows (~0.5 MB of
+#: ndjson) that the stream spans several HTTP chunks
+MIXED = """
+SELECT CAST(id AS INT) AS i32, id * 3000000000 AS i64, id / 4 AS dbl,
+       concat('s', id) AS str, id % 2 = 0 AS flag,
+       date_add(DATE'2024-01-01', CAST(id AS INT)) AS day,
+       CAST(concat('b', id) AS BINARY) AS bin, array(id, id + 1) AS arr,
+       map('k', id, 'j', -id) AS m,
+       named_struct('a', id, 'b', named_struct('c', concat('z', id),
+                                               'm', map('q', array(id)))) AS st,
+       CAST(NULL AS BIGINT) AS count,
+       TIMESTAMP'2024-01-02 03:04:05.123456 UTC' + make_dt_interval(0, 0, 0, id) AS ts
+FROM range(2000)
+"""
+
+
+def test_json_and_ndjson_rows_agree(base_url, spark):
+    code, body = _post(base_url + "/query", {"query": MIXED})
+    assert code == 200, body
+    rows = json.loads(body)["results"]
+    assert len(rows) == 2000
+    assert _ndjson(base_url + "/query?format=ndjson", {"query": MIXED}) == rows
+    assert rows[1] == {
+        "i32": "1", "i64": "3000000000", "dbl": 0.25, "str": "s1", "flag": False,
+        "day": "2024-01-02", "bin": b"b1".hex(), "arr": ["1", "2"],
+        "m": {"k": "1", "j": "-1"},
+        "st": {"a": "1", "b": {"c": "z1", "m": {"q": ["1"]}}},
+        "count": "0", "ts": "2024-01-02T03:04:06.123456Z",
+    }
+    # maps and structs come back as dicts, nested ones too
+    row = QueryEngine(spark, root="/nonexistent").query_rows(MIXED)[1]
+    assert row["m"] == {"k": 1, "j": -1}
+    assert row["st"] == {"a": 1, "b": {"c": "z1", "m": {"q": [1]}}}
+    assert row["count"] == 0
+
+
+def test_timestamps_are_utc_on_a_non_utc_host(base_url):
+    import os
+    import time
+
+    body = {"query": "SELECT TIMESTAMP'2024-01-02 03:04:05.123456 UTC' AS ts"}
+    want = {"ts": "2024-01-02T03:04:05.123456Z"}
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        code, out = _post(base_url + "/query", body)
+        assert code == 200, out
+        assert json.loads(out)["results"] == [want]
+        assert _ndjson(base_url + "/query?format=ndjson", body) == [want]
+    finally:
+        if old is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
