@@ -13,7 +13,8 @@ re-expresses that architecture Spark-first:
                   dialect shims; the *original* SQL then runs through
                   ``spark.sql`` against a bound temp view
                   (reference: querier/queryClient.go:87-337, :838-861).
-- ``functions`` — epoch_ns / time_bucket helpers for the int64-ns time model.
+- ``session``   — SparkSession + conf; the int64-ns time model: ``time_ns``
+                  (any stored unit → ns), ``epoch_ns`` / ``time_bucket_ns``.
 - ``operators`` — Spark-native extensions: dedup (exact/minhash/simhash/
                   jaccard), similarity search, text analysis, multimodal
                   column plumbing, as-of join.

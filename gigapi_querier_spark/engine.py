@@ -44,6 +44,7 @@ from gigapi_querier_spark.plans.sqlpass import (
     strip_db_qualifier,
     to_spark_sql,
 )
+from gigapi_querier_spark.session import TIMESTAMP_TYPES, time_ns
 
 
 class QueryError(Exception):
@@ -165,7 +166,8 @@ class QueryEngine:
     def _relation(self, db: str, table: str, files: list[str]) -> DataFrame:
         """The bound relation over ``files``: cached, or one mergeSchema
         read. The read runs outside both locks, so a slow miss blocks
-        neither other binds nor cache hits."""
+        neither other binds nor cache hits. A timestamp ``time`` column is
+        bound as int64 ns, like the literals ``rewrite_time_literals`` folds."""
         key = (db, table, frozenset(self._sig(f) for f in files))
         with self._relations_lock:
             df = self._relations.get(key)
@@ -174,6 +176,10 @@ class QueryEngine:
         self.last_stats.relation_cached = df is not None
         if df is None:
             df = self.spark.read.option("mergeSchema", "true").parquet(*files)
+            if "time" in df.columns and isinstance(
+                df.schema["time"].dataType, TIMESTAMP_TYPES
+            ):
+                df = df.withColumn("time", time_ns(df, "time"))
             with self._relations_lock:
                 self._relations[key] = df
                 if len(self._relations) > self.RELATION_CACHE_SIZE:

@@ -1,6 +1,6 @@
 """Time-series queries over the int64-ns time model (reference data model:
 ``time`` columns are epoch nanoseconds — querier/queryClient.go:185-337;
-``events.ts`` surfaces as LongType ns via nanosAsLong).
+``events.ts`` is loaded as LongType ns through ``session.time_ns``).
 
 Oracle note: DuckDB reads the same parquet as timestamp and truncates ns→µs,
 so every cross-engine comparison buckets at µs or coarser.
@@ -13,9 +13,8 @@ from pyspark.sql import functions as F
 
 from gigapi_querier_spark.inventory import register
 from gigapi_querier_spark.operators.asof import asof_join
+from gigapi_querier_spark.plans.sqlpass import NS_PER_S
 from gigapi_querier_spark.sources import load_tables
-
-NS_PER_S = 1_000_000_000
 
 
 # --------------------------------------------------------------------------

@@ -18,8 +18,9 @@ Divergences from the reference (documented; all strictly-saner):
 - ``>``/``<`` vs ``>=``/``<=`` is preserved in the bounds used for
   pruning (pruning by overlap is inclusive either way, so this only
   matters for the echoed TimeCondition);
-- the dialect shim rewrites ``x::TYPE`` and timestamp-literal casts for
-  Spark instead of rewriting to ``epoch_ns`` string splices.
+- ``time`` comparisons against timestamp literals fold to int64-ns
+  literals (``rewrite_time_literals``) instead of ``epoch_ns`` string
+  splices.
 """
 
 from __future__ import annotations
@@ -358,9 +359,6 @@ def rewrite_time_literals(sql: str) -> str:
 
 
 # --- DuckDB → Spark dialect shim ---------------------------------------------
-
-_PG_CAST = re.compile(r"'([^']*)'::TIMESTAMP\b", re.IGNORECASE)
-_PG_CAST_GENERIC = re.compile(r"(\w+|'[^']*')::(\w+)")
 
 #: DuckDB list_/aggregate function names → Spark equivalents (same arity &
 #: argument order; applied only when followed by ``(`` and outside string
@@ -744,10 +742,8 @@ def _rewrite_arg_transforms(sql: str) -> str:
 def to_spark_sql(sql: str) -> str:
     """Rewrite the DuckDB-isms the reference's own API surface accepts so
     Spark SQL parses them (the reference passes the full DuckDB dialect to
-    its embedded engine, queryClient.go:778-815):
+    its embedded engine, queryClient.go:778-815; ``x::TYPE`` needs none):
 
-    - ``'lit'::TIMESTAMP``      → ``TIMESTAMP 'lit'``
-    - ``expr::TYPE``            → ``CAST(expr AS TYPE)``
     - ``x -> 'a' ->> 'b'``      → ``get_json_object(x, '$.a.b')``
     - ``list_*``/``str_split``/… → Spark array/string equivalents
     - ``list_sum/avg/count(x)`` → higher-order ``aggregate`` folds
@@ -777,8 +773,6 @@ def to_spark_sql(sql: str) -> str:
     )
     sql = _SIMILAR_TO.sub(lambda m: f"RLIKE '^(?:{m.group(1)})$'", sql)
     sql = _outside_quotes(sql, lambda s: _STAR_EXCLUDE.sub(r"\1EXCEPT\2", s))
-    sql = _PG_CAST.sub(lambda m: f"TIMESTAMP '{m.group(1)}'", sql)
-    sql = _PG_CAST_GENERIC.sub(lambda m: f"CAST({m.group(1)} AS {m.group(2)})", sql)
     return sql
 
 

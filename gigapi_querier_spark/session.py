@@ -10,6 +10,8 @@ Scale notes (targets a 1000-executor cluster; tested on local[N]):
   nanoseconds (SURVEY.md §1.3). Spark's TimestampType is µs, so ns-unit
   parquet columns are surfaced as LongType ns — matching the reference
   exactly — and converted only at presentation edges.
+- ``time_ns``: coarser-unit parquet (timestamp[us]) surfaces as TIMESTAMP or
+  TIMESTAMP_NTZ; every reader of a time-model column goes through it.
 - Session timezone pinned to UTC so timestamp semantics are stable across
   drivers/executors.
 """
@@ -18,7 +20,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampNTZType, TimestampType
 
 # Shuffle partitions scale with data volume, not a constant: a 100 TB /
 # 1000-executor deployment sets this to 2-3× total cores (or a high
@@ -88,6 +92,23 @@ SQL_CONF: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
 }
+
+
+#: Column types ``time_ns`` converts; any other type is taken as int64 ns.
+TIMESTAMP_TYPES = (TimestampType, TimestampNTZType)
+
+
+def time_ns(df: DataFrame, name: str) -> Column:
+    """Column ``name`` of ``df`` as int64 epoch ns, at µs precision and
+    whatever the session time zone (NTZ is read as UTC, as DuckDB does).
+    An int64 column is ns already and passes through."""
+    dtype, c = df.schema[name].dataType, F.col(name)
+    if isinstance(dtype, TimestampType):
+        return F.unix_micros(c) * 1000
+    if isinstance(dtype, TimestampNTZType):
+        epoch = F.expr("TIMESTAMP_NTZ'1970-01-01 00:00:00'")
+        return F.timestamp_diff("MICROSECOND", epoch, c) * 1000
+    return c
 
 
 def get_spark(

@@ -124,9 +124,9 @@ class Catalog:
         if m and not self._hour_in_range(path, int(m.group(1)), tr):
             return
 
-        meta = os.path.join(path, "metadata.json")
-        if os.path.isfile(meta):
-            out.extend(e.path for e in self._prune_metadata(meta, tr))
+        kept = self._prune_metadata(os.path.join(path, "metadata.json"), tr)
+        if kept is not None:
+            out.extend(e.path for e in kept)
             return  # metadata is authoritative for this folder (reference :530)
 
         try:
@@ -141,14 +141,17 @@ class Catalog:
             elif e.endswith(".parquet"):
                 out.append(sub)
 
-    def _prune_metadata(self, meta_path: str, tr: TimeRange) -> list[FileEntry]:
+    def _prune_metadata(self, meta_path: str, tr: TimeRange) -> list[FileEntry] | None:
         """metadata.json folder: rollup check, then per-file overlap +
-        existence (reference enumFolderWithMetadata, :358-391)."""
+        existence (reference enumFolderWithMetadata, :358-391). None when
+        the file is absent or unparseable: the caller lists the folder."""
         try:
             with open(meta_path) as f:
                 meta = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            return []
+        except (OSError, ValueError):
+            return None
+        if not isinstance(meta, dict):
+            return None
         if not _overlaps(tr, meta.get("min_time"), meta.get("max_time")):
             return []
         folder = os.path.dirname(meta_path)

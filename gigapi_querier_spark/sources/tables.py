@@ -5,10 +5,10 @@ The driver materializes one parquet file per table under
 registers temp views so both the DataFrame-API and ``spark.sql`` paths see
 the same names DuckDB's oracle sees.
 
-``events.ts`` is parquet timestamp[ns]; with
-``spark.sql.legacy.parquet.nanosAsLong=true`` it surfaces as LongType epoch
-nanoseconds — the reference's time model (int64 ns ``time`` column,
-querier/queryClient.go:185-337).
+``events.ts`` is loaded as LongType epoch nanoseconds — the reference's time
+model (int64 ns ``time`` column, querier/queryClient.go:185-337) — whatever
+its parquet unit (the fixtures store timestamp[us]; ``session.time_ns``).
+Other timestamp columns (the TPC-H dates) keep their type.
 """
 
 from __future__ import annotations
@@ -16,6 +16,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from gigapi_querier_spark.session import time_ns
 
 TABLE_NAMES = (
     "region",
@@ -46,6 +48,8 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = _TABLE_CACHE.get(key)
     if df is None:
         df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        if name == "events":
+            df = df.withColumn("ts", time_ns(df, "ts"))
         _TABLE_CACHE[key] = df
     return df
 

@@ -6,9 +6,9 @@ The reference querier is read-only; its companion writer lays data out as
     + per-folder metadata.json  ({min_time, max_time, files:[...]} —
       querier/queryClient.go:340-356)
 
-This module writes that layout from any DataFrame with an int64-ns time
-column, so the engine's catalog pruning (and the reference itself) can
-query the result.
+This module writes that layout from any DataFrame with a time column
+(int64 ns or a timestamp; stored as int64 ns), so the engine's catalog
+pruning (and the reference itself) can query the result.
 
 Scale: the write is a standard ``partitionBy("date", "hour")`` parquet
 write — fully distributed, one task per output partition split. Only the
@@ -20,13 +20,14 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gigapi_querier_spark.plans.sqlpass import NS_PER_S
+from gigapi_querier_spark.session import time_ns
 from gigapi_querier_spark.sources.catalog import is_staging_dir
-
-NS_PER_S = 1_000_000_000
 
 
 def write_table(
@@ -39,16 +40,17 @@ def write_table(
 ) -> str:
     """Write ``df`` as a reference-layout table; returns the table path.
 
-    ``time_col`` must be int64 epoch ns (the engine's time model); the
-    hive ``date``/``hour`` partition columns are derived from it.
+    ``time_col`` (int64 epoch ns or a timestamp) is stored as int64 ns,
+    and the hive ``date``/``hour`` partition columns derive from it.
     """
     base = os.path.join(root, db, table, "data")
+    df = df.withColumn(time_col, time_ns(df, time_col))
     # date/hour derive from epoch ARITHMETIC, not date_format/hour (those
     # follow spark.sql.session.timeZone — under a non-UTC session the
     # layout would disagree with Catalog's UTC interpretation of the
     # directory names and partition pruning would skip live files).
     # from_unixtime is also tz-dependent; day/hour index math is not.
-    secs = F.expr(f"{time_col} DIV 1000000000")
+    secs = F.expr(f"{time_col} DIV {NS_PER_S}")
     day = F.date_add(
         F.lit("1970-01-01").cast("date"), F.floor(secs / 86400).cast("int")
     )
@@ -66,7 +68,9 @@ def write_table(
 
 def write_metadata(base: str, time_col: str = "time") -> int:
     """Generate per-folder metadata.json from parquet footer statistics
-    (no data reads). Returns the number of folders written."""
+    (no data reads), times in epoch ns whatever the parquet unit. Returns
+    the number of folders written. Each file is renamed into place from a
+    hidden unique name, so a concurrent reader never sees a partial one."""
     import pyarrow.parquet as pq
 
     n = 0
@@ -87,11 +91,13 @@ def write_metadata(base: str, time_col: str = "time") -> int:
                     time_idx = i
                     break
             if time_idx is not None:
+                unit = getattr(schema.to_arrow_schema().field(time_col).type, "unit", "ns")
+                scale = {"s": NS_PER_S, "ms": 1_000_000, "us": 1_000, "ns": 1}[unit]
                 for rg in range(meta.num_row_groups):
                     stats = meta.row_group(rg).column(time_idx).statistics
                     if stats is None or not stats.has_min_max:
                         continue
-                    lo, hi = stats.min, stats.max
+                    lo, hi = stats.min_raw * scale, stats.max_raw * scale
                     min_t = lo if min_t is None else min(min_t, lo)
                     max_t = hi if max_t is None else max(max_t, hi)
             entries.append(
@@ -117,8 +123,10 @@ def write_metadata(base: str, time_col: str = "time") -> int:
             ),
             "files": entries,
         }
-        with open(os.path.join(dirpath, "metadata.json"), "w") as f:
+        tmp = os.path.join(dirpath, f".metadata.{uuid.uuid4().hex}.json")
+        with open(tmp, "x") as f:
             json.dump(folder_meta, f)
+        os.replace(tmp, os.path.join(dirpath, "metadata.json"))
         n += 1
     return n
 
@@ -153,7 +161,6 @@ def compact_table(
     """
     import math
     import shutil
-    import uuid
 
     base = os.path.join(root, db, table, "data")
     compacted = 0

@@ -18,7 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-NS_PER_S = 1_000_000_000
+from gigapi_querier_spark.plans.sqlpass import NS_PER_S
+from gigapi_querier_spark.session import TIMESTAMP_TYPES, time_ns
 
 
 def stream_table(
@@ -85,6 +86,13 @@ def windowed_counts(
     ).agg(F.count("*").alias("n"))
 
 
+def _with_ticks(events: DataFrame, time_col: str, ticks_per_second: int):
+    """A timestamp time column becomes int64 ns (``NS_PER_S`` ticks)."""
+    if isinstance(events.schema[time_col].dataType, TIMESTAMP_TYPES):
+        return events.withColumn(time_col, time_ns(events, time_col)), NS_PER_S
+    return events, ticks_per_second
+
+
 def sessionize_batch(
     events: DataFrame,
     time_col: str = "ts",
@@ -97,16 +105,17 @@ def sessionize_batch(
     (lag → cumulative sum) — one shuffle on the user key; this is also
     the semantic oracle for the streaming session operator.
 
-    ``ticks_per_second`` sets the time column's unit (ns default; pass
-    1_000_000 for µs columns).
+    ``ticks_per_second`` sets an int64 time column's unit (ns default;
+    1_000_000 for µs); a timestamp column is read as ns (``time_ns``).
     """
     from pyspark.sql import Window
 
-    gap_ns = gap_minutes * 60 * ticks_per_second
+    events, ticks_per_second = _with_ticks(events, time_col, ticks_per_second)
+    gap = gap_minutes * 60 * ticks_per_second
     w = Window.partitionBy(user_col).orderBy(F.col(time_col), F.col("event_id"))
     prev = F.lag(F.col(time_col)).over(w)
     new_session = F.when(
-        prev.isNull() | ((F.col(time_col) - prev) > gap_ns), 1
+        prev.isNull() | ((F.col(time_col) - prev) > gap), 1
     ).otherwise(0)
     cum = Window.partitionBy(user_col).orderBy(F.col(time_col), F.col("event_id")).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -143,6 +152,7 @@ def sessionize_native(
     """
     from pyspark.sql import Window
 
+    events, ticks_per_second = _with_ticks(events, time_col, ticks_per_second)
     if ticks_per_second == 1_000_000:
         ts = F.timestamp_micros(F.col(time_col))
     elif ticks_per_second == NS_PER_S:

@@ -121,3 +121,66 @@ def test_unknown_index_kind():
 
     with _pytest.raises(ValueError):
         make_index("zookeeper", "x")
+
+
+def _hourly_folders(root: str, n: int) -> str:
+    """``mydb.hourly``: ``n`` hour folders of one parquet file each, no
+    metadata.json yet; returns the table's data dir."""
+    data = os.path.join(root, "mydb", "hourly", "data")
+    for h in range(n):
+        folder = os.path.join(data, f"date=2024-01-{1 + h // 24:02d}", f"hour={h % 24:02d}")
+        _write_file(os.path.join(folder, "part-0.parquet"), [_ns(2024, 1, 1 + h // 24, h % 24)])
+    return data
+
+
+def test_unreadable_metadata_lists_the_folder(tmp_path):
+    """A metadata.json that is not a JSON object does not make its folder
+    look empty: the folder's parquet files are listed instead."""
+    root = str(tmp_path)
+    data = _hourly_folders(root, 2)
+    folders = sorted(dp for dp, _, fs in os.walk(data) if "part-0.parquet" in fs)
+    for folder, body in zip(folders, ("{not json", "[]")):
+        with open(os.path.join(folder, "metadata.json"), "w") as f:
+            f.write(body)
+    expect = [os.path.join(f, "part-0.parquet") for f in folders]
+    assert Catalog(root).find_files("mydb", "hourly") == expect
+
+
+def test_metadata_rewrite_never_hides_files(tmp_path):
+    """A reader racing write_metadata sees every file on every read: the
+    writer replaces metadata.json atomically, so no read finds it partial."""
+    import sys
+    import threading
+    import time
+
+    from gigapi_querier_spark.sources.writer import write_metadata
+
+    root = str(tmp_path)
+    n = 48
+    data = _hourly_folders(root, n)
+    write_metadata(data)
+    stop = threading.Event()
+    rewrites = []
+
+    def rewrite():
+        while not stop.is_set():
+            rewrites.append(write_metadata(data))
+
+    writer = threading.Thread(target=rewrite)
+    counts = []
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    writer.start()
+    try:
+        deadline = time.monotonic() + 2.0
+        while time.monotonic() < deadline:
+            counts.append(len(Catalog(root).find_files("mydb", "hourly")))
+    finally:
+        stop.set()
+        writer.join(timeout=60)
+        sys.setswitchinterval(interval)
+    assert not writer.is_alive()
+    assert rewrites and set(rewrites) == {n}  # the writer ran without error
+    assert counts and [c for c in counts if c != n] == []
+    leftovers = [f for _, _, fs in os.walk(data) for f in fs if f.startswith(".metadata")]
+    assert leftovers == []

@@ -127,6 +127,20 @@ def test_pg_cast_shim(engine):
     assert rows == [{"value": 24}]
 
 
+def test_pg_cast_native(engine):
+    # ``::`` inside a string literal is text, and a parameterised type
+    # keeps its parameters
+    rows = engine.query_rows(
+        "SELECT 'a::int' AS s, 1.2345::DECIMAL(10,2) AS d, '7'::BIGINT AS n",
+        "mydb",
+    )
+    assert [(r["s"], str(r["d"]), r["n"]) for r in rows] == [("a::int", "1.23", 7)]
+    rows = engine.query_rows(
+        "SELECT max(temperature::DECIMAL(10,2)) AS t FROM weather", "mydb"
+    )
+    assert len(rows) == 1 and rows[0]["t"] is not None
+
+
 def test_schema_cache_hits_on_repeat(engine):
     engine._relations.clear()
     engine.query_rows("SELECT count(*) AS value FROM weather", "mydb")
@@ -500,3 +514,51 @@ def test_concurrent_relation_cache_stays_bounded(hourly, monkeypatch):
         sys.setswitchinterval(interval)
     assert results == [3 * HOURLY_ROWS] * len(starts)
     assert max(sizes) <= 4
+
+
+@pytest.mark.parametrize("time_type", ["timestamp[us]", "timestamp[us, tz=UTC]"])
+def test_timestamp_lake_matches_int64_ns_lake(spark, tmp_path, time_type):
+    """The same rows stored with ``time`` as int64 ns and as a µs timestamp
+    prune to the same files and return the same rows: the timestamp
+    column is bound as int64 ns."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gigapi_querier_spark.sources.writer import write_metadata
+    from tests.fixtures import NS, _ns
+
+    unit_type = {
+        "timestamp[us]": pa.timestamp("us"),
+        "timestamp[us, tz=UTC]": pa.timestamp("us", tz="UTC"),
+    }[time_type]
+    roots = {"ns": str(tmp_path / "ns"), "us": str(tmp_path / "us")}
+    for h in range(6):
+        times = [_ns(2024, 3, 1, h) + i * 7 * 60 * NS + i * 1000 for i in range(9)]
+        cols = {"v": pa.array([h * 10 + i for i in range(9)], pa.int64())}
+        for kind, time_col in (
+            ("ns", pa.array(times, pa.int64())),
+            ("us", pa.array([t // 1000 for t in times], pa.int64()).cast(unit_type)),
+        ):
+            folder = os.path.join(
+                roots[kind], "mydb", "m", "data", "date=2024-03-01", f"hour={h:02d}"
+            )
+            os.makedirs(folder)
+            pq.write_table(
+                pa.table({"time": time_col, **cols}),
+                os.path.join(folder, "part-0.parquet"),
+            )
+    for root in roots.values():
+        write_metadata(os.path.join(root, "mydb", "m", "data"))
+    sql = (
+        "SELECT time, v FROM m WHERE time >= '2024-03-01T01:30:00Z'"
+        " AND time < '2024-03-01T04:00:00.000007Z' ORDER BY time"
+    )
+    got = {}
+    for kind, root in roots.items():
+        eng = QueryEngine(spark, root=root)
+        got[kind] = (eng.query_rows(sql, "mydb"), eng.last_stats.n_files)
+    rows, n_files = got["ns"]
+    assert n_files == 4 and len(rows) == 4 + 9 + 9 + 1
+    assert got["us"] == got["ns"]

@@ -102,10 +102,14 @@ def test_parse_query_no_from_raises():
 
 
 def test_dialect_shim():
-    assert to_spark_sql("SELECT '2023-01-01T00:00:00'::TIMESTAMP") == (
-        "SELECT TIMESTAMP '2023-01-01T00:00:00'"
-    )
-    assert to_spark_sql("SELECT x::INT FROM t") == "SELECT CAST(x AS INT) FROM t"
+    # Spark parses ``::`` casts natively, so they pass through unchanged
+    for sql in (
+        "SELECT '2023-01-01T00:00:00'::TIMESTAMP",
+        "SELECT x::INT FROM t",
+        "SELECT 'a::int'",
+        "SELECT x::DECIMAL(10,2) FROM t",
+    ):
+        assert to_spark_sql(sql) == sql
 
 
 def test_strip_db_qualifier():

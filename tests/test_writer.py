@@ -77,6 +77,42 @@ def test_roundtrip_values_match_direct(spark, written_root, sf_dir):
     assert {r["event_type"]: r["n"] for r in got} == exp
 
 
+def _folder_meta(root: str) -> dict:
+    """{hour folder: (min_time, max_time, row_count)} of a written table."""
+    base = os.path.join(root, "mydb", "events", "data")
+    out = {}
+    for dp, _, fs in os.walk(base):
+        if "metadata.json" in fs:
+            m = json.load(open(os.path.join(dp, "metadata.json")))
+            out[os.path.relpath(dp, base)] = (m["min_time"], m["max_time"], m["row_count"])
+    return out
+
+
+def test_timestamp_time_col_matches_int64_ns(spark, written_root, sf_dir, tmp_path):
+    """written_root's time column is the fixture's timestamp[us]; the same
+    rows given as int64 ns land in the same folders with the same
+    metadata min_time/max_time."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    src = pq.read_table(
+        f"{sf_dir}/events.parquet",
+        columns=["ts", "event_id", "user_id", "event_type", "value"],
+    )
+    ns = pc.multiply(src["ts"].cast(pa.int64()), 1000)
+    pq.write_table(src.drop(["ts"]).append_column("time", ns), str(tmp_path / "ns.parquet"))
+    ns_root = str(tmp_path / "ns_root")
+    write_table(spark.read.parquet(str(tmp_path / "ns.parquet")), ns_root, "mydb", "events")
+    got, want = _folder_meta(written_root), _folder_meta(ns_root)
+    assert len(got) > 1 and got == want
+    # the stored time column is int64 ns either way
+    engine = QueryEngine(spark, root=written_root)
+    assert engine.query_rows("SELECT min(time) AS t FROM events") == [
+        {"t": pc.min(ns).as_py()}
+    ]
+
+
 def test_partition_layout_timezone_independent(spark, tmp_path):
     """ADVICE r1: date=/hour= must come from UTC epoch arithmetic, not the
     session timezone — otherwise pruning (which reads dir names as UTC)
