@@ -10,11 +10,12 @@ re-expresses that architecture Spark-first:
                   hive date=/hour= awareness, storage layers
                   (reference: querier/queryClient.go:340-710).
 - ``plans``     — light SQL pre-pass: table + time-bound extraction and
-                  dialect shims; the *original* SQL then runs through
+                  dialect shims (``epoch_ns`` / ``time_bucket_ns`` become
+                  inline expressions); the *original* SQL then runs through
                   ``spark.sql`` against a bound temp view
                   (reference: querier/queryClient.go:87-337, :838-861).
 - ``session``   — SparkSession + conf; the int64-ns time model: ``time_ns``
-                  (any stored unit → ns), ``epoch_ns`` / ``time_bucket_ns``.
+                  (any stored unit → ns).
 - ``operators`` — Spark-native extensions: dedup (exact/minhash/simhash/
                   jaccard), similarity search, text analysis, multimodal
                   column plumbing, as-of join.

@@ -2,32 +2,41 @@
 regex parser (ParseQuery, querier/queryClient.go:87-182) and time-range
 extractor (extractTimeRange, :185-337).
 
-Spark SQL parses the query fully at execution time; this pass only needs
-the pieces the *engine* acts on before execution:
+Spark SQL parses the statement itself at execution time; this pass only
+finds what the *engine* acts on before execution:
 
 - the target ``db.table`` (to resolve + prune parquet files and bind a
   temp view),
 - the ``time`` bounds (to prune files against the catalog's
-  [min_time, max_time] index),
-- clause text (SELECT list / WHERE / GROUP BY / HAVING / ORDER BY / LIMIT)
-  for parity with the reference's ParsedQuery shape.
+  [min_time, max_time] index).
+
+``rewrite_time_literals`` is the one place that recognises the
+reference's four timestamp-literal wrappers: it folds ``time <op> <lit>``
+and ``time BETWEEN <lit> AND <lit>`` to ns integers. ``extract_time_range``
+reads bounds from the folded text only.
 
 Divergences from the reference (documented; all strictly-saner):
 - one-sided time ranges are extracted and *do* prune (the reference
   requires both bounds — queryClient.go:370, :380-381);
-- ``>``/``<`` vs ``>=``/``<=`` is preserved in the bounds used for
-  pruning (pruning by overlap is inclusive either way, so this only
-  matters for the echoed TimeCondition);
-- ``time`` comparisons against timestamp literals fold to int64-ns
-  literals (``rewrite_time_literals``) instead of ``epoch_ns`` string
-  splices.
+- bounds come only from top-level AND-conjuncts of the outer WHERE, so a
+  pruned file can hold no row the query would return. A ``time``
+  comparison under OR, NOT or CASE, in a subquery or CTE body, or in a
+  statement with a set operation gives none (the reference takes every
+  match in the clause);
+- ``>``/``<`` bounds are ``v+1``/``v-1``, so ``time < X`` does not keep
+  a file that starts at ``X``;
+- ``time <op> <ns integer>`` prunes like the folded literal;
+- literals fold to int64-ns integers instead of ``epoch_ns`` string
+  splices, and no ``TimeCondition`` text is synthesised;
+- ``epoch_*`` and ``time_bucket_ns`` are rewritten to inline expressions
+  (``to_spark_sql``), not registered per session.
 """
 
 from __future__ import annotations
 
 import re
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from datetime import datetime, timezone
 
 NS_PER_S = 1_000_000_000
@@ -75,13 +84,18 @@ def parse_time_literal_ns(literal: str) -> int | None:
     return base * NS_PER_S + ns
 
 
-# --- time-range extraction --------------------------------------------------
+# --- time literals: one grammar ---------------------------------------------
 
-#: The four literal wrappers the reference recognizes
-#: (querier/queryClient.go:199-218): plain '<lit>', cast('<lit>' as
-#: timestamp), epoch_ns('<lit>'[::TIMESTAMP]), epoch_ns(cast('<lit>' as
-#: timestamp)[::TIMESTAMP]).
-_LIT = r"'([^']+)'"
+#: A timestamp literal in any of the four wrappers the reference recognizes
+#: (querier/queryClient.go:199-218): '<lit>'[::TIMESTAMP],
+#: cast('<lit>' as timestamp), epoch_ns('<lit>'[::TIMESTAMP]) and
+#: epoch_ns(cast('<lit>' as timestamp)[::TIMESTAMP]).
+_WRAPPED = (
+    r"(?:'[^']+'(?:::TIMESTAMP)?"
+    r"|cast\s*\(\s*'[^']+'\s+as\s+timestamp\s*\)"
+    r"|epoch_ns\s*\(\s*(?:'[^']+'|cast\s*\(\s*'[^']+'\s+as\s+timestamp\s*\))"
+    r"(?:::TIMESTAMP)?\s*\))"
+)
 
 #: ``time`` must be a standalone identifier: reject a preceding word char,
 #: ``.`` (qualified columns like ``events.time`` are left untouched — a
@@ -89,154 +103,149 @@ _LIT = r"'([^']+)'"
 #: reference's own regexes lack this boundary (Go regexp has no lookbehind;
 #: querier/queryClient.go:199-218) so ``endtime >= '...'`` matches there —
 #: a bug class we deliberately do NOT reproduce.
-_TIME_IDENT = r"(?<![\w.\"])time"
-
-_WRAPPERS = (
-    # plain literal, optionally PG-cast: '...' or '...'::TIMESTAMP
-    _LIT + r"(?:::TIMESTAMP)?",
-    rf"cast\s*\(\s*{_LIT}\s+as\s+timestamp\s*\)",
-    rf"epoch_ns\s*\(\s*{_LIT}(?:::TIMESTAMP)?\s*\)",
-    rf"epoch_ns\s*\(\s*cast\s*\(\s*{_LIT}\s+as\s+timestamp\s*\)(?:::TIMESTAMP)?\s*\)",
+_TIME_LITERAL_CMP = re.compile(
+    rf"(?<![\w.\"])time(?:\s*(>=|>|<=|<|=)\s*({_WRAPPED})"
+    rf"|\s+BETWEEN\s+({_WRAPPED})\s+AND\s+({_WRAPPED}))",
+    re.IGNORECASE,
 )
+_LIT = re.compile(r"'([^']+)'")
+
+
+def rewrite_time_literals(sql: str) -> str:
+    """Fold ``time <op> <lit>`` and ``time BETWEEN <lit> AND <lit>`` to
+    int64-ns integers, for every wrapper. The reference instead splices
+    ``epoch_ns('<lit>'::TIMESTAMP)`` (querier/queryClient.go:848-850); an
+    integer hits the int64-ns column directly and is a constant for
+    Catalyst. An unparseable literal leaves its comparison untouched."""
+
+    def fold(m: re.Match) -> str:
+        op, *wrapped = m.groups()
+        ns = [parse_time_literal_ns(_LIT.search(w).group(1)) for w in wrapped if w]
+        if None in ns:
+            return m.group(0)
+        if op:
+            return f"time {op} {ns[0]}"
+        return f"time BETWEEN {ns[0]} AND {ns[1]}"
+
+    return _TIME_LITERAL_CMP.sub(fold, sql)
 
 
 @dataclass
 class TimeRange:
-    """Extracted time bounds in epoch ns (reference: TimeRange,
-    querier/queryClient.go:80-84)."""
+    """Inclusive time bounds in epoch ns; None is unbounded (reference:
+    TimeRange, querier/queryClient.go:80-84)."""
 
     start: int | None = None
     end: int | None = None
-    time_condition: str = ""
 
     @property
     def is_empty(self) -> bool:
         return self.start is None and self.end is None
 
 
-def _mask_literals(sql: str) -> str:
-    """Blank out single-quoted literal contents (keeps positions valid
-    for scans that must not match inside strings)."""
-    return re.sub(r"'(?:[^']|'')*'", "''", sql)
+#: Quoted text: string literals (with backslash escapes) and quoted
+#: identifiers. Scans that look for SQL structure skip or blank these.
+_QUOTED = re.compile(r"'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\"|`[^`]*`")
+
+#: Text in whose presence a ``time`` conjunct of the WHERE clause need not
+#: bound every scan of the table: a subquery or CTE body, a set operation
+#: (``* EXCEPT (cols)`` is a star modifier, not one) or a comment.
+_NOT_ONE_SCAN = re.compile(
+    r"\(\s*SELECT\b|\b(?:UNION|INTERSECT|MINUS)\b|(?<!\* )\bEXCEPT\b|--|/\*",
+    re.IGNORECASE,
+)
+
+#: Tokens that shape a boolean clause: nesting, and the keywords whose
+#: depth-0 occurrences decide its conjuncts.
+_STRUCTURE = re.compile(r"[()]|\b(?:CASE|END|AND|OR|BETWEEN)\b", re.IGNORECASE)
+
+#: A conjunct that bounds ``time``, once its literals are folded.
+_TIME_BOUND = re.compile(
+    r"time\s*(>=|>|<=|<|=)\s*(-?\d+)|time\s+BETWEEN\s+(-?\d+)\s+AND\s+(-?\d+)",
+    re.IGNORECASE,
+)
 
 
-def _has_top_level_disjunction(where_clause: str) -> bool:
-    """True when the WHERE clause has a top-level ``OR`` or ``NOT``
-    (outside parentheses and single-quoted literals). A time predicate
-    that is not a top-level AND-conjunct must NOT drive file pruning:
-    ``WHERE time >= X OR other_cond`` still admits rows from older files
-    via ``other_cond``. (The reference prunes only with both bounds but
-    shares this blind spot; we skip pruning instead.)"""
-    depth = 0
-    in_str = False
-    i, n = 0, len(where_clause)
-    while i < n:
-        ch = where_clause[i]
-        if in_str:
-            if ch == "'":
-                in_str = False
-            i += 1
-            continue
-        if ch == "'":
-            in_str = True
-        elif ch == "(":
+def _conjuncts(clause: str) -> list[str] | None:
+    """The depth-0 AND operands of a quote-blanked clause (``BETWEEN a AND
+    b`` kept whole; ``CASE … END`` nests like parentheses), or None when
+    the clause has a depth-0 OR or closes a parenthesis it did not open."""
+    out, start, depth, between = [], 0, 0, False
+    for m in _STRUCTURE.finditer(clause):
+        tok = m.group().upper()
+        if tok in ("(", "CASE"):
             depth += 1
-        elif ch == ")":
+        elif tok in (")", "END"):
             depth -= 1
-        elif depth == 0 and ch in "oOnN":
-            tail = where_clause[i:]
-            if re.match(r"(?i)or(?:\s|\()", tail) or re.match(
-                r"(?i)not(?:\s|\()", tail
-            ):
-                # word-start check: previous char must not be part of an
-                # identifier (e.g. the 'or' in 'priority')
-                if i == 0 or not (where_clause[i - 1].isalnum() or where_clause[i - 1] in "_."):
-                    # 'IS NOT' (NULL / DISTINCT FROM) is a single
-                    # operator, not a negation scope — `sensor IS NOT
-                    # NULL` must not disable time pruning (ADVICE r2)
-                    if ch in "nN" and re.search(
-                        r"(?i)\bIS\s*$", where_clause[:i]
-                    ):
-                        i += 1
-                        continue
-                    return True
-        i += 1
-    return False
+            if depth < 0:
+                return None
+        elif depth:
+            continue
+        elif tok == "OR":
+            return None
+        elif tok == "BETWEEN":
+            between = True
+        elif between:
+            between = False  # the AND of ``BETWEEN a AND b``
+        else:
+            out.append(clause[start : m.start()])
+            start = m.end()
+    out.append(clause[start:])
+    return out
 
 
 def extract_time_range(where_clause: str) -> TimeRange:
-    """Extract ``[start_ns, end_ns]`` from a WHERE clause.
+    """The ``[start, end]`` ns bounds a WHERE clause puts on ``time``.
 
-    Recognizes ``time (>=|>|<=|<|=|BETWEEN)`` against the four literal
-    wrappers — the same 16 shapes as the reference, in one pass.
-    ``time`` must be a standalone identifier (``endtime``/``events.time``
-    never match), and extraction is skipped entirely when the clause has a
-    top-level OR/NOT — in both cases pruning on the extracted bound would
-    be unsound.
+    Only top-level conjuncts that are, once ``rewrite_time_literals`` has
+    folded them, exactly ``time <op> <int>`` or ``time BETWEEN <int> AND
+    <int>`` give bounds, and the tightest win. A row outside the range
+    therefore fails the clause, whatever the rest of it says — the
+    condition for pruning files on it. ``>`` and ``<`` become ``v+1`` and
+    ``v-1`` (``time`` is an integer). A clause with a depth-0 OR, a
+    subquery, a set operation or a comment gives no bounds.
     """
     tr = TimeRange()
-    if not where_clause:
+    clause = _QUOTED.sub("''", rewrite_time_literals(where_clause))
+    if _NOT_ONE_SCAN.search(clause):
         return tr
-    if _has_top_level_disjunction(where_clause):
-        return tr
-    # A subquery inside the clause may contain its OWN `time` predicate
-    # (EXISTS/IN against another relation); regex extraction can't scope
-    # it to the right table, so pruning on it would be unsound — skip
-    # extraction entirely (safe direction: full scan, correct rows).
-    if re.search(r"\(\s*SELECT\b", _mask_literals(where_clause), re.IGNORECASE):
-        return tr
-
-    start_ns: int | None = None
-    end_ns: int | None = None
-    start_op = ">="
-    end_op = "<="
-
-    for wrapper in _WRAPPERS:
-        # BETWEEN <w> AND <w>
-        for m in re.finditer(
-            rf"{_TIME_IDENT}\s+BETWEEN\s+{wrapper}\s+AND\s+{wrapper}",
-            where_clause,
-            re.IGNORECASE,
-        ):
-            s = parse_time_literal_ns(m.group(1))
-            e = parse_time_literal_ns(m.group(2))
-            if s is not None and e is not None:
-                start_ns, end_ns = s, e
-                start_op, end_op = ">=", "<="
-        # time = <w>
-        for m in re.finditer(
-            rf"{_TIME_IDENT}\s*=\s*{wrapper}", where_clause, re.IGNORECASE
-        ):
-            v = parse_time_literal_ns(m.group(1))
-            if v is not None:
-                start_ns = end_ns = v
-                start_op, end_op = ">=", "<="
-        # time >=/>/<=/< <w>
-        for m in re.finditer(
-            rf"{_TIME_IDENT}\s*(>=|>|<=|<)\s*{wrapper}", where_clause, re.IGNORECASE
-        ):
-            v = parse_time_literal_ns(m.group(2))
-            if v is None:
-                continue
-            op = m.group(1)
-            if op in (">=", ">"):
-                start_ns, start_op = v, op
-            else:
-                end_ns, end_op = v, op
-
-    def _fmt(ns: int) -> str:
-        dt = datetime.fromtimestamp(ns // NS_PER_S, tz=timezone.utc)
-        return dt.strftime("%Y-%m-%dT%H:%M:%SZ")
-
-    conds = []
-    if start_ns is not None:
-        tr.start = start_ns
-        conds.append(f"time {start_op} epoch_ns('{_fmt(start_ns)}'::TIMESTAMP)")
-    if end_ns is not None:
-        tr.end = end_ns
-        conds.append(f"time {end_op} epoch_ns('{_fmt(end_ns)}'::TIMESTAMP)")
-    tr.time_condition = " AND ".join(conds)
+    for conjunct in _conjuncts(clause) or ():
+        m = _TIME_BOUND.fullmatch(conjunct.strip())
+        if not m:
+            continue
+        op, v, lo, hi = m.groups()
+        if op is None:
+            start, end = int(lo), int(hi)
+        else:
+            v = int(v)
+            start = {">=": v, ">": v + 1, "=": v}.get(op)
+            end = {"<=": v, "<": v - 1, "=": v}.get(op)
+        if start is not None:
+            tr.start = start if tr.start is None else max(tr.start, start)
+        if end is not None:
+            tr.end = end if tr.end is None else min(tr.end, end)
     return tr
+
+
+def _depth0_match(kw: re.Pattern, sql: str) -> re.Match | None:
+    """First match of ``kw`` outside parentheses and quoted text."""
+    depth, i, n = 0, 0, len(sql)
+    while i < n:
+        ch = sql[i]
+        q = _QUOTED.match(sql, i) if ch in "'\"`" else None
+        if q:
+            i = q.end()
+            continue
+        if ch == "(":
+            depth += 1
+        elif ch == ")":
+            depth -= 1
+        elif depth == 0:
+            m = kw.match(sql, i)
+            if m:
+                return m
+        i += 1
+    return None
 
 
 # --- query parsing -----------------------------------------------------------
@@ -244,17 +253,12 @@ def extract_time_range(where_clause: str) -> TimeRange:
 
 @dataclass
 class ParsedQuery:
-    """Reference ParsedQuery shape (querier/queryClient.go:67-77)."""
+    """What the engine acts on before Spark parses the statement: the
+    target table and the time bounds that prune its files."""
 
-    columns: str = "*"
-    db_name: str = ""
-    measurement: str = ""
-    time_range: TimeRange = field(default_factory=TimeRange)
-    where_conditions: str = ""
-    order_by: str = ""
-    group_by: str = ""
-    having: str = ""
-    limit: int = 0
+    db_name: str
+    measurement: str
+    time_range: TimeRange
 
 
 class ParseError(ValueError):
@@ -267,95 +271,31 @@ def normalize(sql: str) -> str:
     return re.sub(r"\s+", " ", sql.replace("\n", " ").replace("\r", " ")).strip()
 
 
+_FROM_TABLE = re.compile(r"FROM\s+(?:(\w+)\.)?(\w+)", re.IGNORECASE)
+_WHERE_KW = re.compile(r"\sWHERE\s", re.IGNORECASE)
+_WHERE_END = re.compile(
+    r"\s(?:GROUP\s+BY|HAVING|QUALIFY|WINDOW|ORDER\s+BY|LIMIT)\b", re.IGNORECASE
+)
+
+
 def parse_query(sql: str, db_name: str = "") -> ParsedQuery:
-    """Extract table + clauses (reference semantics, queryClient.go:87-182)."""
-    sql = normalize(sql)
-
-    cols_m = re.search(r"SELECT\s+(.*?)\s+FROM", sql, re.IGNORECASE)
-    columns = cols_m.group(1).strip() if cols_m else "*"
-
-    from_m = re.search(r"FROM\s+(?:(\w+)\.)?(\w+)", sql, re.IGNORECASE)
+    """The first FROM target (``db.table`` or ``table`` in ``db_name``)
+    and the time bounds of the statement's depth-0 WHERE clause, which
+    ends at a depth-0 GROUP BY / HAVING / QUALIFY / WINDOW / ORDER BY /
+    LIMIT (reference: queryClient.go:87-182). A statement with a subquery,
+    CTE body or set operation gets no bounds: its own ``time`` conjuncts
+    need not bound every scan of the table."""
+    sql = normalize(sql).rstrip(";")
+    from_m = _FROM_TABLE.search(sql)
     if not from_m:
         raise ParseError("invalid query: FROM clause not found or invalid")
-    if from_m.group(1):
-        db_name = from_m.group(1)
-    measurement = from_m.group(2)
-
-    where_clause = ""
-    parts = re.split(r"\sWHERE\s", sql, maxsplit=1, flags=re.IGNORECASE)
-    if len(parts) == 2:
-        where_clause = parts[1]
-        upper = where_clause.upper()
-        cut = len(where_clause)
-        for clause in (" GROUP BY ", " ORDER BY ", " LIMIT ", " HAVING "):
-            idx = upper.find(clause)
-            if idx != -1:
-                cut = min(cut, idx)
-        where_clause = where_clause[:cut]
-
-    def _clause(pattern: str) -> str:
-        m = re.search(pattern, sql, re.IGNORECASE)
-        return m.group(1).strip() if m else ""
-
-    order_by = _clause(r"ORDER\s+BY\s+(.*?)(?:\s+(?:LIMIT|GROUP|HAVING)\s|$)")
-    group_by = _clause(r"GROUP\s+BY\s+(.*?)(?:\s+(?:ORDER|LIMIT|HAVING)\s|$)")
-    having = _clause(r"HAVING\s+(.*?)(?:\s+(?:ORDER|LIMIT)\s|$)")
-    limit_m = re.search(r"LIMIT\s+(\d+)", sql, re.IGNORECASE)
-    limit = int(limit_m.group(1)) if limit_m else 0
-
-    return ParsedQuery(
-        columns=columns,
-        db_name=db_name,
-        measurement=measurement,
-        time_range=extract_time_range(where_clause),
-        where_conditions=where_clause,
-        order_by=order_by,
-        group_by=group_by,
-        having=having,
-        limit=limit,
-    )
-
-
-# --- timestamp-literal normalization (A10) -----------------------------------
-# The reference rewrites `time <op> cast('lit' as timestamp)` to
-# `time <op> epoch_ns('lit'::TIMESTAMP)` so comparisons hit the int64-ns
-# column (querier/queryClient.go:848-850). Here every recognized literal
-# wrapper is folded straight to the ns integer — uniform, dialect-free,
-# and constant for Catalyst.
-
-
-def rewrite_time_literals(sql: str) -> str:
-    """Fold ``time <op> <timestamp literal>`` comparisons (all four
-    wrappers + BETWEEN) into int64-ns literals."""
-
-    def _fold(lit: str) -> str | None:
-        ns = parse_time_literal_ns(lit)
-        return None if ns is None else str(ns)
-
-    for wrapper in _WRAPPERS:
-
-        def _sub_between(m: re.Match) -> str:
-            a, b = _fold(m.group(1)), _fold(m.group(2))
-            return m.group(0) if a is None or b is None else f"time BETWEEN {a} AND {b}"
-
-        sql = re.sub(
-            rf"{_TIME_IDENT}\s+BETWEEN\s+{wrapper}\s+AND\s+{wrapper}",
-            _sub_between,
-            sql,
-            flags=re.IGNORECASE,
-        )
-
-        def _sub_cmp(m: re.Match) -> str:
-            v = _fold(m.group(2))
-            return m.group(0) if v is None else f"time {m.group(1)} {v}"
-
-        sql = re.sub(
-            rf"{_TIME_IDENT}\s*(>=|>|<=|<|=)\s*{wrapper}",
-            _sub_cmp,
-            sql,
-            flags=re.IGNORECASE,
-        )
-    return sql
+    where = _depth0_match(_WHERE_KW, sql)
+    time_range = TimeRange()
+    if where and not _NOT_ONE_SCAN.search(_QUOTED.sub("''", sql)):
+        clause = sql[where.end() :]
+        end = _depth0_match(_WHERE_END, clause)
+        time_range = extract_time_range(clause[: end.start()] if end else clause)
+    return ParsedQuery(from_m.group(1) or db_name, from_m.group(2), time_range)
 
 
 # --- DuckDB → Spark dialect shim ---------------------------------------------
@@ -372,7 +312,6 @@ _FN_ALIASES = {
     "list_min": "array_min",
     "list_max": "array_max",
     "list_append": "array_append",
-    "list_prepend": "array_prepend",
     "list_sort": "sort_array",
     "list_concat": "concat",
     "list_cat": "concat",
@@ -642,9 +581,27 @@ def _split_top_args(argstr: str) -> list[str]:
 _ARG_XFORM = re.compile(
     r"\b(str_split|string_split|string_to_array|string_split_regex"
     r"|str_split_regex|list_slice|list_position|list_indexof"
-    r"|struct_pack|list_aggregate|list_aggr)\s*\(",
+    r"|struct_pack|list_aggregate|list_aggr|list_prepend"
+    r"|epoch_ns|epoch_us|epoch_ms|epoch_s|time_bucket_ns)\s*\(",
     re.IGNORECASE,
 )
+
+#: Functions that become an expression over their arguments, by arity:
+#: DuckDB's epoch family, ``time_bucket_ns(width_ns, time_ns)`` (bucket
+#: start in ns, for the int64-ns time model), and ``list_prepend(elem,
+#: list)``, whose arguments Spark's ``array_prepend`` takes the other way
+#: round. Inline expressions need no per-session registration and stay
+#: inside whole-stage codegen.
+_ARG_TEMPLATES: dict[tuple[str, int], Callable[..., str]] = {
+    ("epoch_ns", 1): lambda x: f"(unix_micros(CAST({x} AS TIMESTAMP)) * 1000)",
+    ("epoch_us", 1): lambda x: f"unix_micros(CAST({x} AS TIMESTAMP))",
+    ("epoch_ms", 1): lambda x: f"(unix_micros(CAST({x} AS TIMESTAMP)) DIV 1000)",
+    ("epoch_s", 1): lambda x: f"unix_seconds(CAST({x} AS TIMESTAMP))",
+    ("time_bucket_ns", 2): lambda w, t: (
+        f"((CAST({t} AS BIGINT) DIV CAST({w} AS BIGINT)) * CAST({w} AS BIGINT))"
+    ),
+    ("list_prepend", 2): lambda e, xs: f"array_prepend({xs}, {e})",
+}
 
 #: struct_pack named argument: name := expr
 _NAMED_ARG = re.compile(r"^([A-Za-z_]\w*)\s*:=\s*(.+)$", re.DOTALL)
@@ -677,6 +634,10 @@ def _rewrite_arg_transforms(sql: str) -> str:
       only where DuckDB itself is surprising.
     - ``list_position/list_indexof(l, v)`` → ``nullif(array_position(l,
       v), 0)`` — DuckDB returns NULL on a miss, Spark returns 0.
+    - ``_ARG_TEMPLATES`` (epoch family, ``time_bucket_ns``,
+      ``list_prepend``).
+
+    Arguments are rewritten first, so calls nest.
     """
     spans = _quoted_spans(sql)
     out = []
@@ -693,9 +654,13 @@ def _rewrite_arg_transforms(sql: str) -> str:
             out.append(sql[pos:])
             return "".join(out)
         fn = m.group(1).lower()
-        args = _split_top_args(sql[m.end() : end - 1])
+        args = [
+            _rewrite_arg_transforms(a) for a in _split_top_args(sql[m.end() : end - 1])
+        ]
         repl = None
-        if fn in ("str_split", "string_split", "string_to_array") and len(args) == 2:
+        if (fn, len(args)) in _ARG_TEMPLATES:
+            repl = _ARG_TEMPLATES[fn, len(args)](*args)
+        elif fn in ("str_split", "string_split", "string_to_array") and len(args) == 2:
             lit = _PLAIN_LIT.match(args[1])
             if lit:
                 delim = re.escape(lit.group(1)).replace("\\", "\\\\")
@@ -732,11 +697,13 @@ def _rewrite_arg_transforms(sql: str) -> str:
             if template:
                 repl = template(args[0])
         if repl is None:
-            out.append(sql[pos : end])
+            # no rewrite for this call: keep it, rewrite inside it
+            out.append(sql[pos : m.end()])
+            pos = m.end()
         else:
             out.append(sql[pos : m.start()])
             out.append(repl)
-        pos = end
+            pos = end
 
 
 def to_spark_sql(sql: str) -> str:
@@ -749,8 +716,8 @@ def to_spark_sql(sql: str) -> str:
     - ``list_sum/avg/count(x)`` → higher-order ``aggregate`` folds
     - ``USING SAMPLE n% | n ROWS`` → ``TABLESAMPLE (…)``
     - ``SIMILAR TO 'pat'``      → anchored ``RLIKE``
-    - ``epoch_ns/epoch_ms/epoch_us/epoch_s`` stay — registered as session
-      SQL functions (session.py).
+    - ``epoch_ns/epoch_us/epoch_ms/epoch_s(ts)``, ``time_bucket_ns(w, t)``
+      → inline ``unix_micros``/``DIV`` expressions
     """
     sql = _rewrite_json_arrows(sql)
     sql = _outside_quotes(sql, _rewrite_lambda_kw)
@@ -787,17 +754,8 @@ _TAIL_KW = re.compile(r"\s(ORDER\s+BY|LIMIT)\s", re.IGNORECASE)
 def _split_top_level_tail(s: str) -> tuple[str, str]:
     """Split off a trailing ORDER BY / LIMIT that sits OUTSIDE any
     parentheses (an ORDER BY inside an OVER(...) must stay put)."""
-    depth = 0
-    for i, ch in enumerate(s):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            m = _TAIL_KW.match(s, i)
-            if m:
-                return s[:i], s[i:]
-    return s, ""
+    m = _depth0_match(_TAIL_KW, s)
+    return (s[: m.start()], s[m.start() :]) if m else (s, "")
 
 
 _FROM_KW = re.compile(r"\sFROM\s", re.IGNORECASE)
@@ -820,35 +778,13 @@ def rewrite_qualify(sql: str) -> str:
     return _qualify_one(normalize(sql), drop=False)
 
 
-def _depth0_qualify(sql: str) -> "re.Match | None":
-    """First `` QUALIFY `` at paren-depth 0 outside quoted literals."""
-    depth = 0
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            i += 1
-            while i < n and sql[i] != "'":
-                i += 1
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            m = _QUALIFY_KW.match(sql, i)
-            if m:
-                return m
-        i += 1
-    return None
-
-
 def _qualify_one(sql: str, drop: bool) -> str:
     """Rewrite THIS query level's QUALIFY. ``drop=True`` excludes the
     helper column in the rewritten text (``SELECT * EXCEPT``) — needed
     when the query is a subquery whose schema must not grow; the
     top-level form leaves it for the engine to drop post-execution
     (pre-Spark-3.4 EXCEPT-free compatibility)."""
-    m = _depth0_qualify(sql)
+    m = _depth0_match(_QUALIFY_KW, sql)
     if not m:
         return sql
     body = sql[: m.start()]

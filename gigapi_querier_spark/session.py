@@ -14,6 +14,9 @@ Scale notes (targets a 1000-executor cluster; tested on local[N]):
   TIMESTAMP_NTZ; every reader of a time-model column goes through it.
 - Session timezone pinned to UTC so timestamp semantics are stable across
   drivers/executors.
+- Nothing is registered on a session: ``epoch_*``/``time_bucket_ns`` are
+  inline rewrites (``plans.sqlpass.to_spark_sql``), so any session runs
+  the engine's SQL.
 """
 
 from __future__ import annotations
@@ -132,40 +135,5 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config(map={**SQL_CONF, **(extra_conf or {})})
     )
-    spark = builder.getOrCreate()
-    _register_session_functions(spark)
-    return spark
+    return builder.getOrCreate()
 
-
-#: SQL scalar helpers registered on every session. Pure SQL expression
-#: bodies — they inline into Catalyst plans and stay inside whole-stage
-#: codegen (no Python UDF in the hot path).
-_SQL_FUNCTIONS = (
-    # epoch_ns(ts) -> int64 nanoseconds (reference rewrites time literals to
-    # epoch_ns(...) — querier/queryClient.go:848-850). Spark timestamps are
-    # µs precision, so the low 3 digits are zero.
-    """CREATE OR REPLACE TEMPORARY FUNCTION epoch_ns(x TIMESTAMP)
-       RETURNS BIGINT RETURN unix_micros(x) * 1000""",
-    # DuckDB's epoch extraction family, so passthrough queries written
-    # against the reference keep working on the fallback path.
-    """CREATE OR REPLACE TEMPORARY FUNCTION epoch_ms(x TIMESTAMP)
-       RETURNS BIGINT RETURN unix_micros(x) DIV 1000""",
-    """CREATE OR REPLACE TEMPORARY FUNCTION epoch_us(x TIMESTAMP)
-       RETURNS BIGINT RETURN unix_micros(x)""",
-    """CREATE OR REPLACE TEMPORARY FUNCTION epoch_s(x TIMESTAMP)
-       RETURNS BIGINT RETURN unix_seconds(x)""",
-    # time_bucket(width_ns, time_ns) -> bucket start in ns, for the int64-ns
-    # time model (DuckDB/Influx-style time_bucket; SURVEY.md §2.B).
-    """CREATE OR REPLACE TEMPORARY FUNCTION time_bucket_ns(width BIGINT, t BIGINT)
-       RETURNS BIGINT RETURN (t DIV width) * width""",
-)
-
-
-def _register_session_functions(spark: SparkSession) -> None:
-    for ddl in _SQL_FUNCTIONS:
-        try:
-            spark.sql(ddl)
-        except Exception:
-            # Older Spark without SQL scalar functions: engine falls back to
-            # expression rewriting in plans/sqlpass.py.
-            break

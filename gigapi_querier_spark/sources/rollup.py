@@ -20,6 +20,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gigapi_querier_spark.session import time_ns
 from gigapi_querier_spark.sources.writer import write_table
 
 
@@ -58,7 +59,8 @@ def materialize_rollup(
     ``start_ns``/``end_ns`` bound an incremental refresh: only source
     rows in [start, end) re-roll (bucket-aligned bounds recommended —
     buckets are disjoint so re-materializing a window is exact).
-    Returns the destination table path.
+    The source ``time_col`` is read as int64 ns whatever its stored unit
+    (``session.time_ns``). Returns the destination table path.
     """
     import os
 
@@ -67,6 +69,7 @@ def materialize_rollup(
         .option("pathGlobFilter", "*.parquet")  # skip metadata.json sidecars
         .parquet(os.path.join(root, db, src_table, "data"))
     )
+    src = src.withColumn(time_col, time_ns(src, time_col))
     if start_ns is not None:
         src = src.where(F.col(time_col) >= int(start_ns))
     if end_ns is not None:

@@ -107,6 +107,66 @@ def test_empty_time_range_errors(engine):
         )
 
 
+_D2, _D3 = 1_704_153_600_000_000_000, 1_704_240_000_000_000_000  # Jan 2 / Jan 3
+_ISO = {"D2": "'2024-01-02T00:00:00Z'", "D3": "'2024-01-03T00:00:00Z'"}
+
+
+@pytest.mark.parametrize(
+    "sql, n_files",
+    [
+        # a time predicate that does not bound every row prunes nothing
+        ("SELECT count(*) AS n FROM weather"
+         " WHERE location = 'east' AND (time >= {D3} OR time < {D2})", 8),
+        ("SELECT count(*) AS n FROM weather"
+         " WHERE (time >= {D3} OR location = 'east')", 8),
+        ("SELECT count(*) AS n FROM weather WHERE location = 'east'"
+         " AND CASE WHEN time >= {D3} THEN true ELSE true END", 8),
+        ("WITH r AS (SELECT * FROM weather WHERE time >= {D3})"
+         " SELECT count(*) AS n FROM weather", 8),
+        ("SELECT count(*) AS n FROM weather"
+         " UNION ALL SELECT count(*) AS n FROM weather WHERE time >= {D3}", 8),
+        ("SELECT count(*) AS n FROM weather"
+         " WHERE location = 'east' /* AND time >= {D3} AND */ AND true", 8),
+        # top-level conjuncts do; ``<`` is exclusive, so Jan 3 00:00 is out
+        ("SELECT count(*) AS n FROM weather WHERE time >= {D2} AND time < {D3}", 2),
+        (f"SELECT count(*) AS n FROM weather WHERE time >= {_D3}", 4),
+    ],
+    ids=["and_or", "or", "case", "cte", "union", "comment", "conjuncts", "ns_literal"],
+)
+def test_time_pruning_matches_duckdb(engine, sql, n_files):
+    """Rows equal DuckDB's over the table's full file list, and only
+    top-level ``time`` conjuncts prune files."""
+    import duckdb
+
+    files = engine.catalog.find_files("mydb", "weather", None)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW weather AS SELECT * FROM read_parquet({files!r}, union_by_name=true)"
+    )
+    expect = sorted(con.execute(sql.format(D2=_D2, D3=_D3)).fetchall())
+    rows = engine.query_rows(sql.format(**_ISO), "mydb")
+    assert sorted(tuple(r.values()) for r in rows) == expect
+    assert engine.last_stats.n_files == n_files
+
+
+def test_sql_functions_on_a_new_session(engine, spark):
+    """``epoch_*`` and ``time_bucket_ns`` need nothing registered on the
+    session."""
+    eng = QueryEngine(spark.newSession(), root=engine.root)
+    rows = eng.query_rows(
+        "SELECT time_bucket_ns(3600000000000, time) AS b,"
+        " epoch_ms('2024-01-01T00:00:00'::TIMESTAMP) AS ms,"
+        " epoch_ns('2024-01-01T00:00:00.000001'::TIMESTAMP) AS ns,"
+        " epoch_s('2024-01-01T00:00:01'::TIMESTAMP) AS s"
+        " FROM weather WHERE time = '2024-01-01T00:05:00Z'",
+        "mydb",
+    )
+    assert rows == [
+        {"b": 1704067200000000000, "ms": 1704067200000, "ns": 1704067200000001000,
+         "s": 1704067201}
+    ]
+
+
 def test_qualify_shim(engine):
     rows = engine.query_rows(
         "SELECT location, temperature FROM weather"
@@ -235,6 +295,12 @@ def test_dialect_list_position_null_on_miss(engine):
         " list_position(list_value(1, 2, 3), 2) AS q"
     )
     assert rows == [{"p": None, "q": 2}]
+
+
+def test_dialect_list_prepend_duckdb_order(engine):
+    # DuckDB: list_prepend(elem, list); Spark: array_prepend(array, elem)
+    rows = engine.query_rows("SELECT list_prepend(1, list_value(2, 3)) AS xs")
+    assert rows == [{"xs": [1, 2, 3]}]
 
 
 def test_dialect_lambda_int_body(engine):

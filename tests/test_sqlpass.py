@@ -51,10 +51,11 @@ def test_extract_equality_pins_both_bounds():
 
 
 def test_extract_one_sided():  # divergence: reference wouldn't prune these
+    # bounds are inclusive and ``time`` is an integer: > v is >= v+1
     tr = extract_time_range("time > '2023-01-01T00:00:00Z'")
-    assert tr.start == JAN1 and tr.end is None
+    assert tr.start == JAN1 + 1 and tr.end is None
     tr = extract_time_range("time < '2023-01-02T00:00:00Z'")
-    assert tr.start is None and tr.end == JAN2
+    assert tr.start is None and tr.end == JAN2 - 1
 
 
 def test_extract_nano_precision():
@@ -73,27 +74,27 @@ def test_parse_query_reference_case():
         " AND time <= '2023-01-02T00:00:00Z'",
         "ignored",
     )
-    assert q.columns == "COUNT(*) AS value"
     assert q.db_name == "hep"
     assert q.measurement == "hep_1"
     assert (q.time_range.start, q.time_range.end) == (JAN1, JAN2)
-    assert "epoch_ns" in q.time_range.time_condition
-    assert q.where_conditions.startswith("time >= ")
 
 
 def test_parse_query_clauses():
-    q = parse_query(
-        "SELECT location, avg(temperature) FROM weather WHERE time >= '2023-01-01T00:00:00Z'"
-        " GROUP BY location HAVING avg(temperature) > 5 ORDER BY location LIMIT 10",
-        "mydb",
-    )
-    assert q.db_name == "mydb"
-    assert q.measurement == "weather"
-    assert q.group_by == "location"
-    assert q.having == "avg(temperature) > 5"
-    assert q.order_by == "location"
-    assert q.limit == 10
-    assert "GROUP BY" not in q.where_conditions
+    # the WHERE clause ends at a depth-0 GROUP BY / HAVING / QUALIFY /
+    # WINDOW / ORDER BY / LIMIT; Spark parses those clauses itself
+    for tail in (
+        "GROUP BY location HAVING avg(temperature) > 5 ORDER BY location LIMIT 10",
+        "QUALIFY row_number() OVER (PARTITION BY location ORDER BY time) = 1",
+        "WINDOW w AS (ORDER BY time) ORDER BY location",
+        "LIMIT 10;",
+    ):
+        q = parse_query(
+            "SELECT location FROM weather WHERE temperature < 5"
+            f" AND time >= '2023-01-01T00:00:00Z' {tail}",
+            "mydb",
+        )
+        assert (q.db_name, q.measurement) == ("mydb", "weather")
+        assert (q.time_range.start, q.time_range.end) == (JAN1, None)
 
 
 def test_parse_query_no_from_raises():

@@ -8,6 +8,9 @@ and literal-preservation of rewrites.
 
 from __future__ import annotations
 
+import functools
+import itertools
+import operator
 from datetime import datetime, timezone
 
 from hypothesis import given, settings
@@ -15,6 +18,7 @@ from hypothesis import strategies as st
 
 from gigapi_querier_spark.plans.sqlpass import (
     extract_time_range,
+    parse_query,
     parse_time_literal_ns,
     rewrite_time_literals,
     strip_db_qualifier,
@@ -81,3 +85,147 @@ def test_rewrite_time_literals_is_constant_fold(dt):
     ns = parse_time_literal_ns(lit)
     out = rewrite_time_literals(f"SELECT * FROM t WHERE time >= '{lit}'")
     assert out == f"SELECT * FROM t WHERE time >= {ns}"
+
+
+# --- pruning soundness -------------------------------------------------------
+# A WHERE clause is a tree of time comparisons and opaque leaves joined by
+# AND/OR/NOT, parentheses and CASE WHEN. Each node is (sql, precedence,
+# value(t, env)), valued in SQL's three-valued logic (None is NULL), and
+# rendered with only the parentheses SQL precedence needs (OR < AND < NOT
+# < predicate), so the text means what the tree says.
+
+_T0 = 1_704_067_200 * NS  # 2024-01-01T00:00:00Z
+_INSTANTS = [_T0 + h * 3600 * NS + d for h in range(3) for d in (-1, 0, 1)]
+_OPAQUE = ("x = 1", "y = 2", "z = 3")
+_CMP = {
+    ">=": operator.ge,
+    ">": operator.gt,
+    "<=": operator.le,
+    "<": operator.lt,
+    "=": operator.eq,
+}
+
+
+def _iso(ns: int) -> str:
+    sec = datetime.fromtimestamp(ns // NS, tz=timezone.utc)
+    return sec.strftime("%Y-%m-%dT%H:%M:%S") + f".{ns % NS:09d}Z"
+
+
+#: the reference's four literal wrappers, and a bare ns integer
+_WRAPS = (
+    lambda ns: f"'{_iso(ns)}'",
+    lambda ns: f"cast('{_iso(ns)}' as timestamp)",
+    lambda ns: f"epoch_ns('{_iso(ns)}'::TIMESTAMP)",
+    lambda ns: f"epoch_ns(cast('{_iso(ns)}' as timestamp)::TIMESTAMP)",
+    str,
+)
+_instant = st.sampled_from(_INSTANTS)
+_wrap = st.sampled_from(_WRAPS)
+
+
+def _cmp_leaf(op, v, wrap):
+    return (f"time {op} {wrap(v)}", 4, lambda t, env: _CMP[op](t, v))
+
+
+def _between_leaf(a, b, wrap_a, wrap_b):
+    return (
+        f"time BETWEEN {wrap_a(a)} AND {wrap_b(b)}",
+        4,
+        lambda t, env: a <= t <= b,
+    )
+
+
+def _opaque_leaf(name):
+    return (name, 4, lambda t, env: env[name])
+
+
+def _at(node, prec):
+    return node[0] if node[1] >= prec else f"({node[0]})"
+
+
+def _and(a, b):
+    def value(t, env):
+        va, vb = a[2](t, env), b[2](t, env)
+        if va is False or vb is False:
+            return False
+        return None if va is None or vb is None else True
+
+    return (f"{_at(a, 2)} AND {_at(b, 2)}", 2, value)
+
+
+def _or(a, b):
+    def value(t, env):
+        va, vb = a[2](t, env), b[2](t, env)
+        if va is True or vb is True:
+            return True
+        return None if va is None or vb is None else False
+
+    return (f"{_at(a, 1)} OR {_at(b, 1)}", 1, value)
+
+
+def _not(a):
+    def value(t, env):
+        v = a[2](t, env)
+        return None if v is None else not v
+
+    return (f"NOT {_at(a, 3)}", 3, value)
+
+
+def _case(c, a, b):
+    return (
+        f"CASE WHEN {c[0]} THEN {a[0]} ELSE {b[0]} END",
+        4,
+        lambda t, env: a[2](t, env) if c[2](t, env) is True else b[2](t, env),
+    )
+
+
+_leaf = st.one_of(
+    st.builds(_cmp_leaf, st.sampled_from(sorted(_CMP)), _instant, _wrap),
+    st.builds(_between_leaf, _instant, _instant, _wrap, _wrap),
+    st.builds(_opaque_leaf, st.sampled_from(_OPAQUE)),
+)
+
+
+def _conjunction(parts):
+    return functools.reduce(_and, parts)
+
+
+_tree = st.recursive(
+    _leaf,
+    lambda kids: st.one_of(
+        st.lists(kids, min_size=2, max_size=3).map(_conjunction),
+        st.builds(_or, kids, kids),
+        st.builds(_not, kids),
+        kids.map(lambda a: (f"({a[0]})", 4, a[2])),
+        st.builds(
+            _case, st.lists(kids, min_size=1, max_size=3).map(_conjunction), kids, kids
+        ),
+    ),
+    max_leaves=8,
+)
+
+#: a top-level conjunction, the shape bounds come from
+_clause = st.lists(st.one_of(_leaf, _tree), min_size=1, max_size=4).map(_conjunction)
+#: every instant where a clause's value can change, and beyond the ends
+_PROBES = sorted({v + d for v in _INSTANTS for d in (-1, 0, 1)} | {0, 2 * _T0})
+_ENVS = [
+    dict(zip(_OPAQUE, vals)) for vals in itertools.product((True, False, None), repeat=3)
+]
+
+
+@given(_clause)
+@settings(max_examples=300, deadline=None)
+def test_pruning_is_sound(clause):
+    """No row whose ``time`` lies outside the extracted range can satisfy
+    the clause, whatever its other predicates are: pruning the files of
+    such rows never changes the result."""
+    sql, _, value = clause
+    for tr in (
+        extract_time_range(sql),
+        parse_query(f"SELECT * FROM t WHERE {sql} ORDER BY time", "db").time_range,
+    ):
+        for t in _PROBES:
+            if (tr.start is None or t >= tr.start) and (tr.end is None or t <= tr.end):
+                continue
+            for env in _ENVS:
+                assert value(t, env) is not True, (sql, tr, t, env)

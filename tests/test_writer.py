@@ -263,3 +263,53 @@ def test_materialize_rollup_roundtrip(spark, tmp_path):
         .collect()
     }
     assert got == expect and len(got) == len(expect) > 0
+
+
+def test_rollup_of_timestamp_lake_matches_int64_ns_lake(spark, tmp_path):
+    """A raw table whose ``time`` is ``timestamp[us]`` rolls up to the same
+    rows as its int64-ns twin: the rollup reads ``time`` as ns."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gigapi_querier_spark.sources.rollup import materialize_rollup
+
+    ns, hour = 1_000_000_000, 3_600_000_000_000
+    t0 = 1_709_251_200 * ns  # 2024-03-01T00:00:00Z
+    times = [t0 + h * hour + i * 7 * 60 * ns + i * 1000 for h in range(4) for i in range(9)]
+    twins = {
+        "ns": pa.array(times, pa.int64()),
+        "us": pa.array([t // 1000 for t in times], pa.int64()).cast(pa.timestamp("us")),
+    }
+    got = {}
+    for kind, time_col in twins.items():
+        root = str(tmp_path / kind)
+        data = os.path.join(root, "rdb", "raw", "data")
+        os.makedirs(data)
+        table = pa.table(
+            {
+                "time": time_col,
+                "tag": pa.array(["a" if i % 2 else "b" for i in range(len(times))]),
+                "v": pa.array([float(i) for i in range(len(times))]),
+            }
+        )
+        pq.write_table(table, os.path.join(data, "part-0.parquet"))
+        materialize_rollup(
+            spark,
+            root,
+            "rdb",
+            "raw",
+            "raw_1h",
+            bucket_ns=hour,
+            keys=["tag"],
+            aggs={"n": F.count("*"), "sum_v": F.sum("v")},
+            start_ns=t0 + hour,
+            end_ns=t0 + 3 * hour,
+        )
+        got[kind] = sorted(
+            tuple(r.values())
+            for r in QueryEngine(spark, root=root).query_rows(
+                "SELECT time, tag, n, sum_v FROM raw_1h", "rdb"
+            )
+        )
+    assert got["us"] == got["ns"]
+    assert [r[0] for r in got["ns"]] == [t0 + hour] * 2 + [t0 + 2 * hour] * 2
