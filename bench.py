@@ -1,26 +1,33 @@
 """Benchmark harness — runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "queries_min": {...}, "queries_max": {...},
+"passes": n, "sf": ...}. A query's figure is its median over ``PASSES``
+interleaved passes (every pass runs each query once, in turn); ``value``
+is the sum of the medians.
 
 Each query is fully executed and its complete result materialized on the
 driver as an Arrow table (``df.toArrow()``), so the number covers scan →
 shuffle → result transfer. Arrow is the reference's own result edge — its
 FlightSQL endpoint streams Arrow record batches (flightsql.go DoGet) — and
 the symmetric DuckDB baseline (tools/baseline_duckdb.py) materializes via
-``.arrow()`` under the same warmup + min-of-3 protocol.
+``.arrow()`` under the same warmup + median-of-``PASSES`` protocol.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+#: Measured passes per query; the figure is their median.
+PASSES = 5
 
 #: Headline set: one per operator family (scan/agg, join, star join, window,
 #: time bucket, as-of, json, explode, minhash dedup, exact-pair dedup, ANN,
@@ -61,20 +68,21 @@ def main() -> None:
         qs[name](spark, SF_DIR).toArrow()
     spark.catalog.clearCache()
 
-    # Three measured passes, per-query MIN: the host is time-shared and
-    # single-pass numbers swing ±3×; the min of cold-data passes is the
-    # engine's actual cost. Caches are cleared before every measurement.
-    # (The DuckDB baseline runs the identical warmup + min-of-3 protocol.)
-    timings: dict[str, float] = {}
-    for _ in range(3):
+    # PASSES interleaved passes, per-query median with min and max: the
+    # host is time-shared and single passes swing widely, so one figure is
+    # not evidence; the spread shows how far to trust the median. Caches
+    # are cleared before every measurement. (The DuckDB baseline runs the
+    # identical warmup + median protocol.)
+    samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
+    for _ in range(PASSES):
         for name in HEADLINE:
             t0 = time.perf_counter()
             rows = qs[name](spark, SF_DIR).toArrow()
-            elapsed = round(time.perf_counter() - t0, 3)
-            timings[name] = min(timings.get(name, elapsed), elapsed)
+            samples[name].append(time.perf_counter() - t0)
             del rows
             spark.catalog.clearCache()  # operators may persist() intermediates
 
+    timings = {n: round(statistics.median(s), 3) for n, s in samples.items()}
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     print(
         json.dumps(
@@ -83,6 +91,9 @@ def main() -> None:
                 "value": round(sum(timings.values()), 3),
                 "unit": "sec",
                 "queries": timings,
+                "queries_min": {n: round(min(s), 3) for n, s in samples.items()},
+                "queries_max": {n: round(max(s), 3) for n, s in samples.items()},
+                "passes": PASSES,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
             }
         )

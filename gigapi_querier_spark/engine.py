@@ -10,9 +10,14 @@ Lifecycle per query (SURVEY.md §3.1, Spark-first):
    (reference fallback, queryClient.go:768-815);
 3. catalog prune → explicit parquet file list (sources/catalog.py);
 4. bind ``spark.read.parquet(*files)`` as a temp view named like the
-   table, then run the ORIGINAL SQL through ``spark.sql`` — no FROM-clause
+   table, then run the original SQL through ``spark.sql`` — no FROM-clause
    string surgery (deliberate divergence from queryClient.go:838-861;
-   same observable semantics, none of the self-reference bugs);
+   same observable semantics, none of the self-reference bugs). The
+   time literals are folded to ns integers, and when the index proves
+   every kept file holds only non-null ``time`` values inside the range
+   (``TableIndex.covers``), the top-level ``time`` conjuncts become
+   ``TRUE``: they hold on every row, and Spark skips re-checking them
+   per row group;
 5. hand back the DataFrame (callers choose collect / Arrow / stream).
 
 Scale: stage 3 is a metadata operation (index JSON, no data I/O). Stage 4
@@ -38,6 +43,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 from gigapi_querier_spark.formats import arrow_rows
 from gigapi_querier_spark.plans.sqlpass import (
     ParseError,
+    drop_time_conjuncts,
     normalize,
     parse_query,
     rewrite_time_literals,
@@ -61,6 +67,7 @@ class QueryStats:
     discovery_sec: float = 0.0
     build_sec: float = 0.0
     relation_cached: bool = False  # the bind reused a cached relation
+    time_conjuncts_dropped: bool = False  # the index covered the range
 
 
 class QueryEngine:
@@ -152,6 +159,10 @@ class QueryEngine:
         # time-literal normalization (A10): comparisons against the int64-ns
         # time column fold to ns integer literals
         run_sql = rewrite_time_literals(run_sql)
+        tr = parsed.time_range
+        if not tr.is_empty and self.catalog.covers(files, tr):
+            run_sql = drop_time_conjuncts(run_sql)
+            self.last_stats.time_conjuncts_dropped = True
         # Temp views are session-global: two concurrent queries on the same
         # table with different pruned file sets would race between bind and
         # analysis. spark.sql() resolves the view into the plan eagerly, so

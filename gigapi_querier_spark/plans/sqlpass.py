@@ -13,7 +13,9 @@ finds what the *engine* acts on before execution:
 ``rewrite_time_literals`` is the one place that recognises the
 reference's four timestamp-literal wrappers: it folds ``time <op> <lit>``
 and ``time BETWEEN <lit> AND <lit>`` to ns integers. ``extract_time_range``
-reads bounds from the folded text only.
+reads bounds from the folded text only, and ``drop_time_conjuncts``
+replaces exactly the conjuncts those bounds come from with ``TRUE`` (the
+engine does so when the catalog proves them true for every kept file).
 
 Divergences from the reference (documented; all strictly-saner):
 - one-sided time ranges are extracted and *do* prune (the reference
@@ -29,7 +31,11 @@ Divergences from the reference (documented; all strictly-saner):
 - literals fold to int64-ns integers instead of ``epoch_ns`` string
   splices, and no ``TimeCondition`` text is synthesised;
 - ``epoch_*`` and ``time_bucket_ns`` are rewritten to inline expressions
-  (``to_spark_sql``), not registered per session.
+  (``to_spark_sql``), not registered per session;
+- the target table is the first ``FROM <name>`` at depth 0 or directly in
+  a subquery, not one inside a function call (``extract(hour FROM …)``),
+  and ``normalize`` ends each ``--`` comment at its newline (the
+  reference takes the first ``FROM`` anywhere).
 """
 
 from __future__ import annotations
@@ -144,14 +150,24 @@ class TimeRange:
 
 
 #: Quoted text: string literals (with backslash escapes) and quoted
-#: identifiers. Scans that look for SQL structure skip or blank these.
+#: identifiers. Scans that look for SQL structure skip or mask these.
 _QUOTED = re.compile(r"'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\"|`[^`]*`")
+
+
+def _mask(sql: str) -> str:
+    """``sql`` with the inside of every quoted span blanked to spaces. It
+    keeps the length, so a span found in the mask is the same span of
+    ``sql``."""
+    return _QUOTED.sub(lambda m: m[0][0] + " " * (len(m[0]) - 2) + m[0][-1], sql)
+
+
+_SUBQUERY = re.compile(r"\(\s*SELECT\b", re.IGNORECASE)
 
 #: Text in whose presence a ``time`` conjunct of the WHERE clause need not
 #: bound every scan of the table: a subquery or CTE body, a set operation
 #: (``* EXCEPT (cols)`` is a star modifier, not one) or a comment.
 _NOT_ONE_SCAN = re.compile(
-    r"\(\s*SELECT\b|\b(?:UNION|INTERSECT|MINUS)\b|(?<!\* )\bEXCEPT\b|--|/\*",
+    rf"{_SUBQUERY.pattern}|\b(?:UNION|INTERSECT|MINUS)\b|(?<!\* )\bEXCEPT\b|--|/\*",
     re.IGNORECASE,
 )
 
@@ -166,10 +182,11 @@ _TIME_BOUND = re.compile(
 )
 
 
-def _conjuncts(clause: str) -> list[str] | None:
-    """The depth-0 AND operands of a quote-blanked clause (``BETWEEN a AND
-    b`` kept whole; ``CASE … END`` nests like parentheses), or None when
-    the clause has a depth-0 OR or closes a parenthesis it did not open."""
+def _conjuncts(clause: str) -> list[tuple[int, int]] | None:
+    """The ``(start, end)`` spans of the depth-0 AND operands of a masked
+    clause (``BETWEEN a AND b`` kept whole; ``CASE … END`` nests like
+    parentheses), or None when the clause has a depth-0 OR or closes a
+    parenthesis it did not open."""
     out, start, depth, between = [], 0, 0, False
     for m in _STRUCTURE.finditer(clause):
         tok = m.group().upper()
@@ -188,9 +205,26 @@ def _conjuncts(clause: str) -> list[str] | None:
         elif between:
             between = False  # the AND of ``BETWEEN a AND b``
         else:
-            out.append(clause[start : m.start()])
+            out.append((start, m.start()))
             start = m.end()
-    out.append(clause[start:])
+    out.append((start, len(clause)))
+    return out
+
+
+def _time_conjuncts(clause: str) -> list[re.Match]:
+    """The depth-0 conjuncts of a masked, folded clause that are exactly
+    ``time <op> <int>`` or ``time BETWEEN <int> AND <int>``. None qualify
+    when the clause has a depth-0 OR, a subquery, a set operation or a
+    comment."""
+    if _NOT_ONE_SCAN.search(clause):
+        return []
+    out = []
+    for start, end in _conjuncts(clause) or ():
+        text = clause[start:end]
+        lo = start + len(text) - len(text.lstrip())
+        m = _TIME_BOUND.fullmatch(clause, lo, start + len(text.rstrip()))
+        if m:
+            out.append(m)
     return out
 
 
@@ -206,13 +240,7 @@ def extract_time_range(where_clause: str) -> TimeRange:
     subquery, a set operation or a comment gives no bounds.
     """
     tr = TimeRange()
-    clause = _QUOTED.sub("''", rewrite_time_literals(where_clause))
-    if _NOT_ONE_SCAN.search(clause):
-        return tr
-    for conjunct in _conjuncts(clause) or ():
-        m = _TIME_BOUND.fullmatch(conjunct.strip())
-        if not m:
-            continue
+    for m in _time_conjuncts(_mask(rewrite_time_literals(where_clause))):
         op, v, lo, hi = m.groups()
         if op is None:
             start, end = int(lo), int(hi)
@@ -227,9 +255,13 @@ def extract_time_range(where_clause: str) -> TimeRange:
     return tr
 
 
-def _depth0_match(kw: re.Pattern, sql: str) -> re.Match | None:
-    """First match of ``kw`` outside parentheses and quoted text."""
-    depth, i, n = 0, 0, len(sql)
+def _depth0_match(
+    kw: re.Pattern, sql: str, in_subquery: bool = False
+) -> re.Match | None:
+    """First match of ``kw`` outside parentheses and quoted text; with
+    ``in_subquery``, also directly inside a parenthesised SELECT (but not
+    in a function call's parentheses)."""
+    depth, subqueries, i, n = 0, set(), 0, len(sql)
     while i < n:
         ch = sql[i]
         q = _QUOTED.match(sql, i) if ch in "'\"`" else None
@@ -238,9 +270,12 @@ def _depth0_match(kw: re.Pattern, sql: str) -> re.Match | None:
             continue
         if ch == "(":
             depth += 1
+            if in_subquery and _SUBQUERY.match(sql, i):
+                subqueries.add(depth)
         elif ch == ")":
+            subqueries.discard(depth)
             depth -= 1
-        elif depth == 0:
+        elif depth == 0 or depth in subqueries:
             m = kw.match(sql, i)
             if m:
                 return m
@@ -267,35 +302,76 @@ class ParseError(ValueError):
     (reference: querier/queryClient.go:768-815)."""
 
 
+#: Quoted text or a block comment (kept as is), or a run of whitespace and
+#: ``--`` comments, each ending at its newline (one space).
+_NORMALIZE = re.compile(rf"({_QUOTED.pattern}|/\*.*?\*/)|(?:\s|--[^\n]*)+", re.DOTALL)
+
+
 def normalize(sql: str) -> str:
-    return re.sub(r"\s+", " ", sql.replace("\n", " ").replace("\r", " ")).strip()
+    """The statement with its ``--`` comments dropped and each run of
+    whitespace outside quoted text and block comments made one space. A
+    ``--`` comment ends at its newline, so joining the lines never lets
+    it comment out the rest of the statement."""
+    return _NORMALIZE.sub(lambda m: m[1] or " ", sql).strip()
 
 
-_FROM_TABLE = re.compile(r"FROM\s+(?:(\w+)\.)?(\w+)", re.IGNORECASE)
+_FROM_TABLE = re.compile(r"(?<!\w)FROM\s+(?:(\w+)\.)?(\w+)", re.IGNORECASE)
 _WHERE_KW = re.compile(r"\sWHERE\s", re.IGNORECASE)
 _WHERE_END = re.compile(
     r"\s(?:GROUP\s+BY|HAVING|QUALIFY|WINDOW|ORDER\s+BY|LIMIT)\b", re.IGNORECASE
 )
 
 
+def _where_clause(masked: str) -> tuple[int, int] | None:
+    """The span of a masked statement's depth-0 WHERE clause: from after
+    WHERE to a depth-0 GROUP BY / HAVING / QUALIFY / WINDOW / ORDER BY /
+    LIMIT, or to the end (a trailing ``;`` excluded)."""
+    where = _depth0_match(_WHERE_KW, masked)
+    if not where:
+        return None
+    start = where.end()
+    end = _depth0_match(_WHERE_END, masked[start:])
+    if end:
+        return start, start + end.start()
+    return start, len(masked.rstrip("; "))
+
+
 def parse_query(sql: str, db_name: str = "") -> ParsedQuery:
-    """The first FROM target (``db.table`` or ``table`` in ``db_name``)
-    and the time bounds of the statement's depth-0 WHERE clause, which
-    ends at a depth-0 GROUP BY / HAVING / QUALIFY / WINDOW / ORDER BY /
-    LIMIT (reference: queryClient.go:87-182). A statement with a subquery,
-    CTE body or set operation gets no bounds: its own ``time`` conjuncts
-    need not bound every scan of the table."""
+    """The FROM target (``db.table`` or ``table`` in ``db_name``) and the
+    time bounds of the statement's depth-0 WHERE clause (reference:
+    queryClient.go:87-182). The target is the first ``FROM <name>`` at
+    depth 0 or directly in a subquery or CTE body, never one inside a
+    function call such as ``extract(hour FROM …)``. A statement with a
+    subquery, CTE body or set operation gets no bounds: its own ``time``
+    conjuncts need not bound every scan of the table."""
     sql = normalize(sql).rstrip(";")
-    from_m = _FROM_TABLE.search(sql)
+    masked = _mask(sql)
+    from_m = _depth0_match(_FROM_TABLE, masked, in_subquery=True)
     if not from_m:
         raise ParseError("invalid query: FROM clause not found or invalid")
-    where = _depth0_match(_WHERE_KW, sql)
+    span = _where_clause(masked)
     time_range = TimeRange()
-    if where and not _NOT_ONE_SCAN.search(_QUOTED.sub("''", sql)):
-        clause = sql[where.end() :]
-        end = _depth0_match(_WHERE_END, clause)
-        time_range = extract_time_range(clause[: end.start()] if end else clause)
+    if span and not _NOT_ONE_SCAN.search(masked):
+        time_range = extract_time_range(sql[span[0] : span[1]])
     return ParsedQuery(from_m.group(1) or db_name, from_m.group(2), time_range)
+
+
+def drop_time_conjuncts(sql: str) -> str:
+    """``sql`` with each top-level ``time`` conjunct of its WHERE clause
+    replaced by ``TRUE``: exactly the conjuncts ``parse_query`` takes
+    bounds from, on text ``rewrite_time_literals`` has folded. Sound only
+    when every row the statement scans is known to have a non-null
+    ``time`` inside those bounds (the engine asks ``TableIndex.covers``);
+    then the conjuncts are TRUE on every row, and Spark need not push them
+    into the scan."""
+    masked = _mask(sql)
+    span = _where_clause(masked)
+    if span is None or _NOT_ONE_SCAN.search(masked):
+        return sql
+    start, end = span
+    for m in reversed(_time_conjuncts(masked[start:end])):
+        sql = f"{sql[: start + m.start()]}TRUE{sql[start + m.end() :]}"
+    return sql
 
 
 # --- DuckDB → Spark dialect shim ---------------------------------------------

@@ -20,16 +20,24 @@ where Catalyst adds row-group min/max skipping and column pruning on top.
 At cluster scale the listing consults an index (JSON here; the reference
 also supports Redis) rather than statting 100 TB of objects.
 
+Each folder's parsed metadata.json is kept, keyed on the file's
+``(st_ino, st_mtime_ns, st_size)``: a query stats a metadata file instead
+of re-parsing it, and a file replaced by the writer's atomic rename
+misses. The same entries answer ``covers``: whether every kept file is
+proven to hold only rows with a non-null ``time`` inside the query's
+range, in which case the engine drops the ``time`` conjuncts Spark would
+otherwise re-check per row group.
+
 Divergence (documented): one-sided time ranges prune here; the reference
 only prunes when both bounds are present (queryClient.go:370).
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
-from dataclasses import dataclass
 from datetime import datetime, timezone
 
 from gigapi_querier_spark.plans.sqlpass import NS_PER_S, TimeRange
@@ -45,17 +53,6 @@ def is_staging_dir(name: str) -> bool:
     staging tree of an in-flight Spark write. Applied only below the table
     root, never to db or table names."""
     return name == "tmp" or name.startswith(("_", "."))
-
-
-@dataclass(frozen=True)
-class FileEntry:
-    """A catalogued parquet file (reference: ParquetFile + IndexEntry)."""
-
-    path: str
-    size_bytes: int = 0
-    row_count: int = 0
-    min_time: int | None = None
-    max_time: int | None = None
 
 
 def _overlaps(tr: TimeRange, min_time: int | None, max_time: int | None) -> bool:
@@ -75,6 +72,9 @@ class Catalog:
 
     def __init__(self, root: str):
         self.root = root
+        # folder → (metadata.json (st_ino, st_mtime_ns, st_size), parsed
+        # metadata or None when unparseable). One entry per folder seen.
+        self._meta: dict[str, tuple[tuple[int, int, int], dict | None]] = {}
 
     # -- namespace listing (A12/A13) ------------------------------------
 
@@ -103,9 +103,9 @@ class Catalog:
         """All parquet files for a table overlapping the time range.
 
         Walks the tree; honors per-folder metadata.json (folder rollup
-        then per-file min/max), prunes date=/hour= partition dirs from
-        the range, skips staging dirs, and drops stale entries whose files
-        no longer exist.
+        then per-file min/max; parsed once per version of the file),
+        prunes date=/hour= partition dirs from the range, skips staging
+        dirs, and drops stale entries whose files no longer exist.
         """
         tr = tr or TimeRange()
         base = os.path.join(self.root, db, table)
@@ -124,9 +124,9 @@ class Catalog:
         if m and not self._hour_in_range(path, int(m.group(1)), tr):
             return
 
-        kept = self._prune_metadata(os.path.join(path, "metadata.json"), tr)
+        kept = self._prune_folder(path, tr)
         if kept is not None:
-            out.extend(e.path for e in kept)
+            out.extend(kept)
             return  # metadata is authoritative for this folder (reference :530)
 
         try:
@@ -141,20 +141,39 @@ class Catalog:
             elif e.endswith(".parquet"):
                 out.append(sub)
 
-    def _prune_metadata(self, meta_path: str, tr: TimeRange) -> list[FileEntry] | None:
+    def _folder_meta(self, folder: str) -> dict | None:
+        """The folder's parsed metadata.json, or None when it is absent or
+        not a JSON object. Parsed once per version of the file: a hit
+        costs one ``stat``. A stat/open race with the writer's rename can
+        only store a newer parse under an older key, which the next call
+        re-parses."""
+        meta_path = os.path.join(folder, "metadata.json")
+        try:
+            st = os.stat(meta_path)
+        except OSError:
+            self._meta.pop(folder, None)
+            return None
+        key = (st.st_ino, st.st_mtime_ns, st.st_size)
+        hit = self._meta.get(folder)
+        if hit is None or hit[0] != key:
+            try:
+                with open(meta_path) as f:
+                    meta = json.load(f)
+            except (OSError, ValueError):
+                meta = None
+            hit = (key, meta if isinstance(meta, dict) else None)
+            self._meta[folder] = hit
+        return hit[1]
+
+    def _prune_folder(self, folder: str, tr: TimeRange) -> list[str] | None:
         """metadata.json folder: rollup check, then per-file overlap +
         existence (reference enumFolderWithMetadata, :358-391). None when
-        the file is absent or unparseable: the caller lists the folder."""
-        try:
-            with open(meta_path) as f:
-                meta = json.load(f)
-        except (OSError, ValueError):
-            return None
-        if not isinstance(meta, dict):
+        the metadata is absent or unparseable: the caller lists the folder."""
+        meta = self._folder_meta(folder)
+        if meta is None:
             return None
         if not _overlaps(tr, meta.get("min_time"), meta.get("max_time")):
             return []
-        folder = os.path.dirname(meta_path)
         res = []
         for fe in meta.get("files", []):
             if not _overlaps(tr, fe.get("min_time"), fe.get("max_time")):
@@ -169,39 +188,69 @@ class Catalog:
                 if not os.path.isfile(alt):
                     continue
                 p = alt
-            res.append(
-                FileEntry(
-                    path=p,
-                    size_bytes=fe.get("size_bytes", 0),
-                    row_count=fe.get("row_count", 0),
-                    min_time=fe.get("min_time"),
-                    max_time=fe.get("max_time"),
-                )
-            )
+            res.append(p)
         return res
+
+    def covers(self, files: list[str], tr: TimeRange) -> bool:
+        """True when the metadata ``find_files`` read proves that every row
+        of ``files`` has a non-null ``time`` inside ``tr``: each file is
+        listed in its folder's metadata.json with ``time_null_count`` 0,
+        the bounds of ``tr`` that are present hold for its
+        ``min_time``/``max_time``, and on disk it still has the catalogued
+        size and is no newer than that metadata file. Anything unknown
+        answers False. Answered from the cache without re-reading the
+        metadata: a file replaced since is newer than the cached version."""
+        for f in files:
+            folder, name = os.path.split(f)
+            hit = self._meta.get(folder)
+            if hit is None or hit[1] is None:
+                return False
+            (_, mtime_ns, _), meta = hit
+            fe = next(
+                (e for e in meta.get("files", []) if os.path.basename(e.get("path", "")) == name),
+                None,
+            )
+            if fe is None or fe.get("time_null_count") != 0:
+                return False
+            lo, hi = fe.get("min_time"), fe.get("max_time")
+            if tr.start is not None and (lo is None or lo < tr.start):
+                return False
+            if tr.end is not None and (hi is None or hi > tr.end):
+                return False
+            try:
+                st = os.stat(f)
+            except OSError:
+                return False
+            if st.st_size != fe.get("size_bytes") or st.st_mtime_ns > mtime_ns:
+                return False
+        return True
 
     # -- hive partition-dir pruning (A5/A6) -------------------------------
 
     @staticmethod
     def _date_in_range(date_str: str, tr: TimeRange) -> bool:
-        try:
-            day = datetime.strptime(date_str, "%Y-%m-%d").replace(tzinfo=timezone.utc)
-        except ValueError:
+        day = _day_start_s(date_str)
+        if day is None:
             return True  # unparseable dirs are never pruned
-        day_start = int(day.timestamp()) * NS_PER_S
-        day_end = day_start + 86_400 * NS_PER_S - 1
-        return _overlaps(tr, day_start, day_end)
+        return _overlaps(tr, day * NS_PER_S, (day + 86_400) * NS_PER_S - 1)
 
     def _hour_in_range(self, path: str, hour: int, tr: TimeRange) -> bool:
         # hour dirs only constrain within their date dir
         parent = os.path.basename(os.path.dirname(path))
         m = _DATE_DIR.match(parent)
-        if not m:
+        day = _day_start_s(m.group(1)) if m else None
+        if day is None:
             return True
-        try:
-            day = datetime.strptime(m.group(1), "%Y-%m-%d").replace(tzinfo=timezone.utc)
-        except ValueError:
-            return True
-        h_start = (int(day.timestamp()) + hour * 3600) * NS_PER_S
-        h_end = h_start + 3600 * NS_PER_S - 1
-        return _overlaps(tr, h_start, h_end)
+        h_start = (day + hour * 3600) * NS_PER_S
+        return _overlaps(tr, h_start, h_start + 3600 * NS_PER_S - 1)
+
+
+@functools.lru_cache(maxsize=4096)
+def _day_start_s(date_str: str) -> int | None:
+    """Epoch seconds of a ``YYYY-MM-DD`` UTC day, None when unparseable.
+    Cached: every hour dir of a day asks again on every query."""
+    try:
+        day = datetime.strptime(date_str, "%Y-%m-%d").replace(tzinfo=timezone.utc)
+    except ValueError:
+        return None
+    return int(day.timestamp())

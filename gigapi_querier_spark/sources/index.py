@@ -25,6 +25,11 @@ class TableIndex:
     def find_files(self, db: str, table: str, tr: TimeRange | None = None) -> list[str]:
         raise NotImplementedError
 
+    def covers(self, files: list[str], tr: TimeRange) -> bool:
+        """Whether every row of ``files`` is proven to have a non-null
+        ``time`` inside ``tr``. False unless the backend can prove it."""
+        return False
+
 
 class JSONIndex(TableIndex):
     """Filesystem-backed index (per-folder metadata.json + layout walk)."""
@@ -40,6 +45,9 @@ class JSONIndex(TableIndex):
 
     def find_files(self, db: str, table: str, tr: TimeRange | None = None) -> list[str]:
         return self._catalog.find_files(db, table, tr)
+
+    def covers(self, files: list[str], tr: TimeRange) -> bool:
+        return self._catalog.covers(files, tr)
 
 
 class RedisIndex(TableIndex):

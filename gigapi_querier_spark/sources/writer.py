@@ -4,7 +4,8 @@ The reference querier is read-only; its companion writer lays data out as
 
     {root}/{db}/{table}/data/date=YYYY-MM-DD/hour=HH/*.parquet
     + per-folder metadata.json  ({min_time, max_time, files:[...]} —
-      querier/queryClient.go:340-356)
+      querier/queryClient.go:340-356; each file entry also carries a
+      ``time_null_count``, which the reference does not write)
 
 This module writes that layout from any DataFrame with a time column
 (int64 ns or a timestamp; stored as int64 ns), so the engine's catalog
@@ -13,7 +14,8 @@ pruning (and the reference itself) can query the result.
 Scale: the write is a standard ``partitionBy("date", "hour")`` parquet
 write — fully distributed, one task per output partition split. Only the
 metadata.json generation is driver-side, and it reads parquet *footers*
-(not data) for min/max stats.
+(not data) for min/max and null-count stats. An append regenerates the
+metadata.json of the folders it wrote, not of the whole table.
 """
 
 from __future__ import annotations
@@ -55,6 +57,7 @@ def write_table(
         F.lit("1970-01-01").cast("date"), F.floor(secs / 86400).cast("int")
     )
     hour = F.floor(F.pmod(secs, 86400) / 3600)
+    before = _parquet_listing(base)
     (
         df.withColumn("date", F.date_format(day, "yyyy-MM-dd"))
         .withColumn("hour", F.lpad(hour.cast("int").cast("string"), 2, "0"))
@@ -62,28 +65,48 @@ def write_table(
         .mode(mode)
         .parquet(base)
     )
-    write_metadata(base, time_col=time_col)
+    after = _parquet_listing(base)
+    write_metadata(
+        base,
+        time_col=time_col,
+        folders=[d for d, names in after.items() if before.get(d) != names],
+    )
     return os.path.join(root, db, table)
 
 
-def write_metadata(base: str, time_col: str = "time") -> int:
+def _parquet_listing(base: str) -> dict[str, frozenset[str]]:
+    """Each folder under ``base`` holding parquet files (staging dirs
+    skipped) → the names of those files."""
+    out = {}
+    for dirpath, dirnames, filenames in os.walk(base):
+        dirnames[:] = [d for d in dirnames if not is_staging_dir(d)]
+        names = frozenset(f for f in filenames if f.endswith(".parquet"))
+        if names:
+            out[dirpath] = names
+    return out
+
+
+def write_metadata(
+    base: str, time_col: str = "time", folders: list[str] | None = None
+) -> int:
     """Generate per-folder metadata.json from parquet footer statistics
-    (no data reads), times in epoch ns whatever the parquet unit. Returns
-    the number of folders written. Each file is renamed into place from a
-    hidden unique name, so a concurrent reader never sees a partial one."""
+    (no data reads), times in epoch ns whatever the parquet unit. Rebuilds
+    every folder under ``base``, or only ``folders`` when given (an append
+    passes the folders it wrote). Returns the number of folders written.
+    Each file is renamed into place from a hidden unique name, so a
+    concurrent reader never sees a partial one."""
     import pyarrow.parquet as pq
 
     n = 0
-    for dirpath, dirnames, filenames in os.walk(base):
-        dirnames[:] = [d for d in dirnames if not is_staging_dir(d)]
-        parquet_files = sorted(f for f in filenames if f.endswith(".parquet"))
+    for dirpath in _parquet_listing(base) if folders is None else folders:
+        parquet_files = sorted(f for f in os.listdir(dirpath) if f.endswith(".parquet"))
         if not parquet_files:
             continue
         entries = []
         for name in parquet_files:
             fpath = os.path.join(dirpath, name)
             meta = pq.ParquetFile(fpath).metadata
-            min_t = max_t = None
+            min_t = max_t = nulls = None
             time_idx = None
             schema = meta.schema
             for i in range(len(schema)):
@@ -93,8 +116,13 @@ def write_metadata(base: str, time_col: str = "time") -> int:
             if time_idx is not None:
                 unit = getattr(schema.to_arrow_schema().field(time_col).type, "unit", "ns")
                 scale = {"s": NS_PER_S, "ms": 1_000_000, "us": 1_000, "ns": 1}[unit]
+                nulls = 0  # None once a row group lacks a null count
                 for rg in range(meta.num_row_groups):
                     stats = meta.row_group(rg).column(time_idx).statistics
+                    if stats is None or not stats.has_null_count:
+                        nulls = None
+                    elif nulls is not None:
+                        nulls += stats.null_count
                     if stats is None or not stats.has_min_max:
                         continue
                     lo, hi = stats.min_raw * scale, stats.max_raw * scale
@@ -107,6 +135,7 @@ def write_metadata(base: str, time_col: str = "time") -> int:
                     "row_count": meta.num_rows,
                     "min_time": min_t,
                     "max_time": max_t,
+                    "time_null_count": nulls,
                 }
             )
         folder_meta = {
@@ -163,7 +192,7 @@ def compact_table(
     import shutil
 
     base = os.path.join(root, db, table, "data")
-    compacted = 0
+    compacted = []
     for dirpath, dirnames, filenames in os.walk(base):
         dirnames[:] = [d for d in dirnames if not is_staging_dir(d)]
         files = sorted(f for f in filenames if f.endswith(".parquet"))
@@ -197,7 +226,6 @@ def compact_table(
             if p not in moved:
                 os.remove(p)
         shutil.rmtree(os.path.join(dirpath, "tmp"), ignore_errors=True)
-        compacted += 1
-    if compacted:
-        write_metadata(base)
-    return compacted
+        compacted.append(dirpath)
+    write_metadata(base, folders=compacted)
+    return len(compacted)

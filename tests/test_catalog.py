@@ -184,3 +184,68 @@ def test_metadata_rewrite_never_hides_files(tmp_path):
     assert counts and [c for c in counts if c != n] == []
     leftovers = [f for _, _, fs in os.walk(data) for f in fs if f.startswith(".metadata")]
     assert leftovers == []
+
+
+def test_metadata_parsed_once_per_version(tmp_path, monkeypatch):
+    """A catalog parses each metadata.json once; a replaced file misses,
+    and a shared catalog racing the writer still lists every file."""
+    import json
+    import sys
+    import threading
+    import time
+
+    from gigapi_querier_spark.sources import catalog as catalog_mod
+    from gigapi_querier_spark.sources.writer import write_metadata
+
+    root = str(tmp_path)
+    n = 48
+    data = _hourly_folders(root, n)
+    write_metadata(data)
+    loads = []
+    real_load = json.load
+
+    def counting_load(f):
+        loads.append(f.name)
+        return real_load(f)
+
+    monkeypatch.setattr(catalog_mod.json, "load", counting_load, raising=True)
+    cat = Catalog(root)
+    assert len(cat.find_files("mydb", "hourly")) == n
+    assert len(loads) == n
+    assert len(cat.find_files("mydb", "hourly")) == n
+    assert len(loads) == n  # every folder a cache hit
+
+    folder = os.path.join(data, "date=2024-01-01", "hour=05")
+    with open(os.path.join(folder, "metadata.json")) as f:
+        meta = real_load(f)
+    meta["files"] = []
+    tmp = os.path.join(folder, ".metadata.new.json")
+    with open(tmp, "w") as f:
+        json.dump(meta, f)
+    os.replace(tmp, os.path.join(folder, "metadata.json"))
+    assert len(cat.find_files("mydb", "hourly")) == n - 1
+    assert loads[n:] == [os.path.join(folder, "metadata.json")]
+
+    monkeypatch.undo()
+    write_metadata(data)
+    assert len(cat.find_files("mydb", "hourly")) == n
+    stop = threading.Event()
+
+    def rewrite():
+        while not stop.is_set():
+            write_metadata(data)
+
+    writer = threading.Thread(target=rewrite)
+    counts = []
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    writer.start()
+    try:
+        deadline = time.monotonic() + 1.0
+        while time.monotonic() < deadline:
+            counts.append(len(cat.find_files("mydb", "hourly")))
+    finally:
+        stop.set()
+        writer.join(timeout=60)
+        sys.setswitchinterval(interval)
+    assert counts and [c for c in counts if c != n] == []

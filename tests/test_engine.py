@@ -628,3 +628,140 @@ def test_timestamp_lake_matches_int64_ns_lake(spark, tmp_path, time_type):
     rows, n_files = got["ns"]
     assert n_files == 4 and len(rows) == 4 + 9 + 9 + 1
     assert got["us"] == got["ns"]
+
+
+# -- time conjuncts the catalog proves ---------------------------------------
+
+
+def _covered_lake(root: str) -> None:
+    """``mydb.c``: hours 00–05 of 2024-03-01, eight rows each, with
+    metadata.json from ``write_metadata``. Then, per hour: 02 holds a NULL
+    ``time`` row, 03's metadata has no ``time_null_count``, 04's file is
+    rewritten with one more row (its mtime set back to the metadata's) and
+    05's file is touched after its metadata was written."""
+    import json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gigapi_querier_spark.sources.writer import write_metadata
+    from tests.fixtures import NS, _ns
+
+    data = os.path.join(root, "mydb", "c", "data")
+
+    def hour_file(h: int, n: int = 8, null_time: bool = False) -> str:
+        folder = os.path.join(data, "date=2024-03-01", f"hour={h:02d}")
+        os.makedirs(folder, exist_ok=True)
+        times = [_ns(2024, 3, 1, h) + i * 7 * 60 * NS for i in range(n)]
+        if null_time:
+            times[3] = None
+        path = os.path.join(folder, "part-0.parquet")
+        pq.write_table(
+            pa.table({"time": pa.array(times, pa.int64()), "v": list(range(n))}), path
+        )
+        return path
+
+    for h in range(6):
+        hour_file(h, null_time=h == 2)
+    write_metadata(data)
+    meta3 = os.path.join(data, "date=2024-03-01", "hour=03", "metadata.json")
+    with open(meta3) as f:
+        meta = json.load(f)
+    for entry in meta["files"]:
+        del entry["time_null_count"]
+    with open(meta3, "w") as f:
+        json.dump(meta, f)
+    path4 = hour_file(4, n=9)
+    st = os.stat(os.path.join(os.path.dirname(path4), "metadata.json"))
+    os.utime(path4, ns=(st.st_atime_ns, st.st_mtime_ns))
+    path5 = os.path.join(data, "date=2024-03-01", "hour=05", "part-0.parquet")
+    st = os.stat(path5)
+    os.utime(path5, ns=(st.st_atime_ns, st.st_mtime_ns + 10 * NS))
+
+
+@pytest.fixture(scope="module")
+def covered(spark, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("covered"))
+    _covered_lake(root)
+    return QueryEngine(spark, root=root)
+
+
+def _pushed_filters(df) -> str:
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    # the plan string cuts long lists short with "..."
+    return " ".join(re.findall(r"PushedFilters: \[(.*?)(?:\]|\.\.\.)", plan))
+
+
+@pytest.mark.parametrize(
+    "start, end, dropped",
+    [
+        ("00:00", "02:00", True),  # hour-aligned, every file proven
+        ("02:00", "03:00", False),  # a NULL time row inside the hour
+        ("00:30", "02:00", False),  # the range cuts hour 00
+        ("03:00", "04:00", False),  # metadata without time_null_count
+        ("04:00", "05:00", False),  # file size differs from its metadata
+        ("05:00", "06:00", False),  # file newer than its metadata
+    ],
+    ids=["covered", "null_time", "cut_hour", "no_null_count", "size_changed", "newer_file"],
+)
+def test_covered_time_conjuncts_dropped(covered, start, end, dropped):
+    """The ``time`` conjuncts reach Spark unless the catalog proves them
+    true for every kept file; either way the rows equal DuckDB's over the
+    table's full file list."""
+    import duckdb
+
+    from gigapi_querier_spark.plans.sqlpass import rewrite_time_literals
+
+    sql = (
+        "SELECT count(*) AS n, sum(v) AS s, min(time) AS lo, max(time) AS hi FROM c"
+        f" WHERE time >= '2024-03-01T{start}:00Z' AND v >= 0"
+        f" AND time < '2024-03-01T{end}:00Z'"
+    )
+    df = covered.query(sql, "mydb")
+    assert covered.last_stats.time_conjuncts_dropped is dropped
+    pushed = _pushed_filters(df)
+    assert "IsNotNull(v)" in pushed and ("time" in pushed) is not dropped, pushed
+    files = covered.catalog.find_files("mydb", "c", None)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW c AS SELECT * FROM read_parquet({files!r})")
+    expect = con.execute(rewrite_time_literals(sql)).fetchall()
+    assert [tuple(r) for r in df.collect()] == expect
+    assert expect[0][0] > 0
+
+
+def test_from_inside_a_function_call_is_not_the_target(engine):
+    """``extract(hour FROM …)`` does not name the table: the query binds
+    ``weather`` rather than reusing the view an earlier pruned query left."""
+    engine.query_rows(
+        "SELECT count(*) AS n FROM weather WHERE time >= '2024-01-02T00:00:00Z'"
+        " AND time < '2024-01-03T00:00:00Z'",
+        "mydb",
+    )
+    rows = engine.query_rows(
+        "SELECT count(*) AS n, max(extract(hour FROM timestamp_micros(time DIV 1000)))"
+        " AS h FROM weather",
+        "mydb",
+    )
+    assert rows == [{"n": 84, "h": 12}]
+    assert engine.last_stats.n_files == 8
+    rows = engine.query_rows(
+        "SELECT count(*) AS n FROM (SELECT * FROM weather WHERE location = 'east') s",
+        "mydb",
+    )
+    assert rows == [{"n": 28}]
+
+
+def test_line_comment_ends_at_its_newline(engine):
+    rows = engine.query_rows(
+        "SELECT count(*) AS n FROM weather -- all rows\nWHERE location = 'east'", "mydb"
+    )
+    assert rows == [{"n": 28}]
+    rows = engine.query_rows(
+        "SELECT '--  x' AS dash, count(*) AS n FROM weather -- note\n"
+        "WHERE location <> '-- east'",
+        "mydb",
+    )
+    assert rows == [{"dash": "--  x", "n": 84}]

@@ -11,12 +11,14 @@ from __future__ import annotations
 import functools
 import itertools
 import operator
+import re
 from datetime import datetime, timezone
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from gigapi_querier_spark.plans.sqlpass import (
+    drop_time_conjuncts,
     extract_time_range,
     parse_query,
     parse_time_literal_ns,
@@ -229,3 +231,53 @@ def test_pruning_is_sound(clause):
                 continue
             for env in _ENVS:
                 assert value(t, env) is not True, (sql, tr, t, env)
+
+
+@given(_clause)
+@settings(max_examples=300, deadline=None)
+def test_dropping_time_conjuncts_keeps_rows_in_range(clause):
+    """Inside the extracted range, the statement with its top-level
+    ``time`` conjuncts replaced by TRUE selects exactly the rows the
+    clause is TRUE on, for every TRUE/FALSE/NULL assignment of the opaque
+    leaves (evaluated by DuckDB)."""
+    import duckdb
+    import pyarrow as pa
+
+    sql, _, value = clause
+    stmt = rewrite_time_literals(f"SELECT rid FROM rows WHERE {sql} ORDER BY rid")
+    tr = parse_query(stmt, "db").time_range
+    inside = [
+        t
+        for t in _PROBES
+        if (tr.start is None or t >= tr.start) and (tr.end is None or t <= tr.end)
+    ]
+    grid = [(t, env) for t in inside for env in _ENVS]
+    # leaf "x = 1" is TRUE at x = 1, FALSE at 0 and NULL at NULL
+    cols = {
+        leaf[0]: pa.array(
+            [{True: int(leaf[-1]), False: 0, None: None}[env[leaf]] for _, env in grid],
+            pa.int64(),
+        )
+        for leaf in _OPAQUE
+    }
+    rows = pa.table(
+        {"rid": list(range(len(grid))), "time": [t for t, _ in grid], **cols}
+    )
+    expect = [i for i, (t, env) in enumerate(grid) if value(t, env) is True]
+    con = duckdb.connect()
+    con.register("rows", rows)
+    for text in (stmt, drop_time_conjuncts(stmt)):
+        got = con.execute(_LITERAL.sub(_literal_ns, text)).fetchall()
+        assert [r for (r,) in got] == expect, (sql, text)
+
+
+#: a wrapped literal ``rewrite_time_literals`` left (one side of a BETWEEN
+#: whose other side is a bare integer), folded here so DuckDB can compare
+_LITERAL = re.compile(
+    r"epoch_ns\(cast\('([^']+)' as timestamp\)::TIMESTAMP\)"
+    r"|epoch_ns\('([^']+)'::TIMESTAMP\)|cast\('([^']+)' as timestamp\)|'([^']+)'"
+)
+
+
+def _literal_ns(m: re.Match) -> str:
+    return str(parse_time_literal_ns(next(g for g in m.groups() if g)))

@@ -313,3 +313,39 @@ def test_rollup_of_timestamp_lake_matches_int64_ns_lake(spark, tmp_path):
         )
     assert got["us"] == got["ns"]
     assert [r[0] for r in got["ns"]] == [t0 + hour] * 2 + [t0 + 2 * hour] * 2
+
+
+def test_append_rewrites_only_the_folders_it_wrote(spark, tmp_path):
+    """An append of one hour to a 48-folder table rewrites that folder's
+    metadata.json and leaves the other 47 untouched (same inode and
+    mtime). Every entry records its ``time_null_count``."""
+    from tests.fixtures import NS, _ns
+
+    root = str(tmp_path)
+
+    def hours(first: int, n: int, rows: int = 3):
+        return spark.createDataFrame(
+            [
+                (_ns(2024, 1, 1) + h * 3600 * NS + i * 60 * NS, h * 10 + i)
+                for h in range(first, first + n)
+                for i in range(rows)
+            ],
+            "time long, v long",
+        )
+
+    write_table(hours(0, 48), root, "mydb", "t")
+    data = os.path.join(root, "mydb", "t", "data")
+    metas = sorted(
+        os.path.join(dp, "metadata.json") for dp, _, fs in os.walk(data) if "metadata.json" in fs
+    )
+    assert len(metas) == 48
+    before = {m: (os.stat(m).st_ino, os.stat(m).st_mtime_ns) for m in metas}
+    write_table(hours(5, 1), root, "mydb", "t")
+    after = {m: (os.stat(m).st_ino, os.stat(m).st_mtime_ns) for m in metas}
+    changed = [m for m in metas if after[m] != before[m]]
+    appended = os.path.join(data, "date=2024-01-01", "hour=05", "metadata.json")
+    assert changed == [appended]
+    meta = json.load(open(appended))
+    assert meta["row_count"] == 6
+    for m in metas:
+        assert {e["time_null_count"] for e in json.load(open(m))["files"]} == {0}

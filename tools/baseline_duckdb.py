@@ -2,9 +2,9 @@
 engine of record is embedded DuckDB (README.md:60), so this is the number
 BENCH is graded against ("within 2× of baseline at the same scale factor").
 
-Same protocol as bench.py: an untimed warmup, then three measured passes
-taking the per-query MIN; results materialize as Arrow tables (the
-reference's FlightSQL result edge) on both engines.
+Same protocol as bench.py: an untimed warmup, then ``bench.PASSES``
+measured passes taking the per-query median; results materialize as Arrow
+tables (the reference's FlightSQL result edge) on both engines.
 
 Each query runs in its own subprocess. With ``--timeout SEC`` a query whose
 warmup plus passes exceed ``SEC`` per run is recorded as ``null`` with a
@@ -28,12 +28,10 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE, SF_DIR
-
-PASSES = 3
+from bench import HEADLINE, PASSES, SF_DIR
 
 _CHILD = r"""
-import json, sys, time
+import json, statistics, sys, time
 import duckdb
 sf_dir, sql, passes = sys.argv[1], sys.argv[2], int(sys.argv[3])
 con = duckdb.connect()
@@ -42,13 +40,12 @@ for t in ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split():
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 con.execute(sql).arrow()  # warmup
-best = None
+runs = []
 for _ in range(passes):
     t0 = time.perf_counter()
     con.execute(sql).arrow()
-    el = time.perf_counter() - t0
-    best = el if best is None else min(best, el)
-print(json.dumps({"sec": round(best, 3)}))
+    runs.append(time.perf_counter() - t0)
+print(json.dumps({"sec": round(statistics.median(runs), 3)}))
 """
 
 
