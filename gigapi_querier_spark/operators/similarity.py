@@ -12,7 +12,7 @@ are reproducible and oracle-checkable.
 Vector math comes in two forms:
 
 - JVM column expressions built from zip_with + aggregate (small-corpus
-  ``cosine_topk``, ``ivf_assign_expr_jvm``) — no Python worker round
+  ``cosine_topk``) — no Python worker round
   trip, but **interpreted** (higher-order functions are CodegenFallback);
 - Arrow-batched pandas UDFs (``_cosine_udf``/``_bucket_udf``/
   ``_nearest_cid_udf``) that do the same math as one BLAS matrix op per
@@ -283,46 +283,6 @@ def ivf_assign_expr(
     return _nearest_cid_udf(F.col(vec_col))
 
 
-def ivf_assign_expr_jvm(
-    centroids: Sequence[tuple[int, Sequence[float]]],
-    vec_col: str = "embedding",
-) -> Column:
-    """Nearest-centroid id as pure JVM expressions: per-centroid squared-L2
-    via ``zip_with``/``aggregate`` and an ``array_min`` over (dist, cid)
-    structs (lexicographic min ⇒ nearest centroid, lowest cid on ties —
-    the same tie-break as the vectorized kernel). No Python worker round
-    trip; the small-corpus twin of :func:`ivf_assign_expr`."""
-    v = F.col(vec_col).cast("array<double>")
-
-    def l2sq(c: Sequence[float]) -> Column:
-        clit = F.array(*[F.lit(float(x)) for x in c])
-        return F.aggregate(
-            F.zip_with(v, clit, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-
-    pairs = F.array(
-        *[
-            F.struct(l2sq(c).alias("d"), F.lit(int(cid)).cast("int").alias("cid"))
-            for cid, c in sorted(centroids, key=lambda t: int(t[0]))
-        ]
-    )
-    return F.array_min(pairs).getField("cid")
-
-
-def ivf_assign(
-    df: DataFrame,
-    centroids: Sequence[tuple[int, Sequence[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF coarse quantization: (id, cid) for every vector — one pass."""
-    return df.select(
-        F.col(id_col), ivf_assign_expr(centroids, vec_col=vec_col).alias("cid")
-    )
-
-
 def ivf_topk(
     df: DataFrame,
     query: Sequence[float],
@@ -347,7 +307,7 @@ def ivf_topk(
     # Nearest-centroid assignment is a deterministic function of the row,
     # so probe membership is an inline filter — ONE scan, zero joins/
     # shuffles before the final TakeOrderedAndProject. (Round 1 used a
-    # left-semi join against ivf_assign(df): two scans + a shuffle for a
+    # left-semi join against a per-row assignment: two scans + a shuffle for a
     # value derivable in place — 16x the oracle's latency.) The Arrow
     # kernel stays even for small inputs: K centroids need K per-row L2
     # folds, and Spark's higher-order array functions evaluate

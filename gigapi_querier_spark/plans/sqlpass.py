@@ -35,7 +35,12 @@ Divergences from the reference (documented; all strictly-saner):
 - the target table is the first ``FROM <name>`` at depth 0 or directly in
   a subquery, not one inside a function call (``extract(hour FROM …)``),
   and ``normalize`` ends each ``--`` comment at its newline (the
-  reference takes the first ``FROM`` anywhere).
+  reference takes the first ``FROM`` anywhere);
+- quoted text is never rewritten: every rewrite finds its matches on
+  ``_mask`` (``'…'``, ``"…"`` — a string literal in Spark's default mode
+  — and backtick identifiers blanked) and nesting is read by one scan,
+  ``_depth0_match`` (the reference splices only the ``FROM`` target and
+  hands DuckDB the rest untouched, queryClient.go:838-861).
 """
 
 from __future__ import annotations
@@ -90,6 +95,82 @@ def parse_time_literal_ns(literal: str) -> int | None:
     return base * NS_PER_S + ns
 
 
+# --- quoted text and nesting: one definition each ---------------------------
+
+#: Quoted text: string literals (with backslash escapes; ``''`` reads as
+#: two adjacent literals) and quoted identifiers. Spark's default mode
+#: reads ``"…"`` as a string literal too. No rewrite changes quoted text.
+_QUOTED = re.compile(r"'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\"|`[^`]*`")
+
+
+def _mask(sql: str) -> str:
+    """``sql`` with the inside of every quoted span blanked to spaces. It
+    keeps the length, so a span found in the mask is the same span of
+    ``sql``."""
+    return _QUOTED.sub(lambda m: m[0][0] + " " * (len(m[0]) - 2) + m[0][-1], sql)
+
+
+def _sub(pattern: re.Pattern, repl: Callable[[re.Match], str], sql: str) -> str:
+    """``pattern.sub(repl, sql)`` outside quoted text. Matches are found on
+    the mask, so none starts or ends inside a quoted span; ``repl`` gets
+    the same span matched on ``sql``, quoted text included. A span whose
+    quoted text the pattern rejects (an escaped quote) is left as is."""
+    out, pos = [], 0
+    for m in pattern.finditer(_mask(sql)):
+        orig = pattern.fullmatch(sql, m.start(), m.end())
+        if orig:
+            out += [sql[pos : m.start()], repl(orig)]
+            pos = m.end()
+    return "".join(out) + sql[pos:]
+
+
+_SUBQUERY = re.compile(r"\(\s*SELECT\b", re.IGNORECASE)
+
+
+def _depth0_match(
+    kw: re.Pattern, masked: str, pos: int = 0, in_subquery: bool = False
+) -> re.Match | None:
+    """First match of ``kw`` in a masked text from ``pos`` that is outside
+    the parentheses and brackets opened after ``pos``; with
+    ``in_subquery``, also directly inside a parenthesised SELECT (but not
+    in a function call's parentheses). The one scan that reads nesting."""
+    depth, subqueries = 0, set()
+    for i in range(pos, len(masked)):
+        if depth == 0 or depth in subqueries:
+            m = kw.match(masked, i)
+            if m:
+                return m
+        ch = masked[i]
+        if ch in "([":
+            depth += 1
+            if in_subquery and _SUBQUERY.match(masked, i):
+                subqueries.add(depth)
+        elif ch in ")]":
+            subqueries.discard(depth)
+            depth -= 1
+    return None
+
+
+_CLOSE = re.compile(r"[)\]]")
+_COMMA = re.compile(",")
+
+
+def _close(masked: str, i: int) -> int | None:
+    """Index just past the bracket that closes the one at ``masked[i]``."""
+    m = _depth0_match(_CLOSE, masked, i + 1)
+    return m and m.end()
+
+
+def _args(masked: str, start: int, end: int) -> list[tuple[int, int]]:
+    """The spans of the top-level comma-separated items of
+    ``masked[start:end]``."""
+    spans, masked = [], masked[:end]
+    while comma := _depth0_match(_COMMA, masked, start):
+        spans.append((start, comma.start()))
+        start = comma.end()
+    return spans + [(start, end)]
+
+
 # --- time literals: one grammar ---------------------------------------------
 
 #: A timestamp literal in any of the four wrappers the reference recognizes
@@ -133,7 +214,7 @@ def rewrite_time_literals(sql: str) -> str:
             return f"time {op} {ns[0]}"
         return f"time BETWEEN {ns[0]} AND {ns[1]}"
 
-    return _TIME_LITERAL_CMP.sub(fold, sql)
+    return _sub(_TIME_LITERAL_CMP, fold, sql)
 
 
 @dataclass
@@ -148,20 +229,6 @@ class TimeRange:
     def is_empty(self) -> bool:
         return self.start is None and self.end is None
 
-
-#: Quoted text: string literals (with backslash escapes) and quoted
-#: identifiers. Scans that look for SQL structure skip or mask these.
-_QUOTED = re.compile(r"'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\"|`[^`]*`")
-
-
-def _mask(sql: str) -> str:
-    """``sql`` with the inside of every quoted span blanked to spaces. It
-    keeps the length, so a span found in the mask is the same span of
-    ``sql``."""
-    return _QUOTED.sub(lambda m: m[0][0] + " " * (len(m[0]) - 2) + m[0][-1], sql)
-
-
-_SUBQUERY = re.compile(r"\(\s*SELECT\b", re.IGNORECASE)
 
 #: Text in whose presence a ``time`` conjunct of the WHERE clause need not
 #: bound every scan of the table: a subquery or CTE body, a set operation
@@ -253,34 +320,6 @@ def extract_time_range(where_clause: str) -> TimeRange:
         if end is not None:
             tr.end = end if tr.end is None else min(tr.end, end)
     return tr
-
-
-def _depth0_match(
-    kw: re.Pattern, sql: str, in_subquery: bool = False
-) -> re.Match | None:
-    """First match of ``kw`` outside parentheses and quoted text; with
-    ``in_subquery``, also directly inside a parenthesised SELECT (but not
-    in a function call's parentheses)."""
-    depth, subqueries, i, n = 0, set(), 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        q = _QUOTED.match(sql, i) if ch in "'\"`" else None
-        if q:
-            i = q.end()
-            continue
-        if ch == "(":
-            depth += 1
-            if in_subquery and _SUBQUERY.match(sql, i):
-                subqueries.add(depth)
-        elif ch == ")":
-            subqueries.discard(depth)
-            depth -= 1
-        elif depth == 0 or depth in subqueries:
-            m = kw.match(sql, i)
-            if m:
-                return m
-        i += 1
-    return None
 
 
 # --- query parsing -----------------------------------------------------------
@@ -377,8 +416,8 @@ def drop_time_conjuncts(sql: str) -> str:
 # --- DuckDB → Spark dialect shim ---------------------------------------------
 
 #: DuckDB list_/aggregate function names → Spark equivalents (same arity &
-#: argument order; applied only when followed by ``(`` and outside string
-#: literals). The reference accepts the full DuckDB dialect on its
+#: argument order; applied only when followed by ``(`` and outside quoted
+#: text). The reference accepts the full DuckDB dialect on its
 #: passthrough path (querier/queryClient.go:778-815); these cover the
 #: functions reference-README-style queries actually use.
 _FN_ALIASES = {
@@ -433,33 +472,17 @@ _LAMBDA_KW = re.compile(
 )
 
 
-def _rewrite_lambda_kw(sql: str) -> str:
-    def repl(m: re.Match) -> str:
-        params = [p.strip() for p in m.group(1).split(",")]
-        if len(params) == 1:
-            return f"{params[0]} ->"
-        return "(" + ", ".join(params) + ") ->"
+def _lambda_arrow(m: re.Match) -> str:
+    params = [p.strip() for p in m.group(1).split(",")]
+    if len(params) == 1:
+        return f"{params[0]} ->"
+    return "(" + ", ".join(params) + ") ->"
 
-    return _LAMBDA_KW.sub(repl, sql)
 
 _SIMILAR_TO = re.compile(r"\bSIMILAR\s+TO\s+'([^']*)'", re.IGNORECASE)
 
 #: DuckDB star modifier: SELECT * EXCLUDE (a, b) → Spark * EXCEPT (a, b)
 _STAR_EXCLUDE = re.compile(r"(\*\s+)EXCLUDE(\s*\()", re.IGNORECASE)
-
-#: DuckDB polymorphic list aggregates that need an argument wrap (balanced-
-#: paren extraction): list_sum(x) → aggregate(x, 0.0D, fold).
-_LIST_SUM = re.compile(r"\b(list_sum|list_avg|list_count)\s*\(", re.IGNORECASE)
-
-
-def _outside_quotes(sql: str, fn) -> str:
-    """Apply ``fn`` to the segments of ``sql`` outside single-quoted
-    literals (with '' escapes), leaving literal contents untouched."""
-    parts = re.split(r"('(?:[^']|'')*')", sql)
-    for i in range(0, len(parts), 2):
-        parts[i] = fn(parts[i])
-    return "".join(parts)
-
 
 #: Spark/DuckDB higher-order functions whose last argument is a lambda —
 #: `transform(xs, x -> 0)` must NOT be read as JSON extraction on `x`.
@@ -486,21 +509,21 @@ _HOF_FNS = frozenset(
 )
 
 
-def _in_lambda_position(sql: str, start: int) -> bool:
-    """True when the identifier at ``start`` sits directly after ``(`` or
-    ``,`` of a higher-order function call — i.e. it is a lambda
-    parameter, not a JSON column (ADVICE r2)."""
+def _in_lambda_position(masked: str, start: int) -> bool:
+    """True when the identifier at ``start`` of a masked statement sits
+    directly after ``(`` or ``,`` of a higher-order function call — i.e.
+    it is a lambda parameter, not a JSON column (ADVICE r2)."""
     j = start - 1
-    while j >= 0 and sql[j].isspace():
+    while j >= 0 and masked[j].isspace():
         j -= 1
-    if j < 0 or sql[j] not in "(,":
+    if j < 0 or masked[j] not in "(,":
         return False
     # find the innermost unmatched '(' before the identifier, then the
     # function name in front of it
     bal = 0
     k = start - 1
     while k >= 0:
-        ch = sql[k]
+        ch = masked[k]
         if ch == ")":
             bal += 1
         elif ch == "(":
@@ -511,15 +534,17 @@ def _in_lambda_position(sql: str, start: int) -> bool:
     if k <= 0:
         return False
     e = k - 1
-    while e >= 0 and sql[e].isspace():
+    while e >= 0 and masked[e].isspace():
         e -= 1
     s = e
-    while s >= 0 and (sql[s].isalnum() or sql[s] == "_"):
+    while s >= 0 and (masked[s].isalnum() or masked[s] == "_"):
         s -= 1
-    return sql[s + 1 : e + 1].lower() in _HOF_FNS
+    return masked[s + 1 : e + 1].lower() in _HOF_FNS
 
 
 def _rewrite_json_arrows(sql: str) -> str:
+    masked = _mask(sql)
+
     def repl(m: re.Match) -> str:
         base = m.group(1)
         if base.upper() in ("AND", "OR", "NOT", "WHERE", "ON", "THEN", "ELSE"):
@@ -536,7 +561,7 @@ def _rewrite_json_arrows(sql: str) -> str:
         ):
             return m.group(0)
         # bare identifier in lambda-parameter position of a HOF call
-        if "." not in base and _in_lambda_position(sql, m.start()):
+        if "." not in base and _in_lambda_position(masked, m.start()):
             return m.group(0)
         path = ""
         for step in steps:
@@ -544,32 +569,7 @@ def _rewrite_json_arrows(sql: str) -> str:
             path += f".{key}" if key is not None else f"[{idx}]"
         return f"get_json_object({base}, '${path}')"
 
-    return _JSON_ARROW.sub(repl, sql)
-
-
-def _balanced_arg(sql: str, start: int) -> int | None:
-    """Index just past the ``)`` closing the paren at ``start`` (which must
-    point at '('), honoring nesting and quoted strings."""
-    depth = 0
-    i = start
-    while i < len(sql):
-        ch = sql[i]
-        if ch == "'":
-            i += 1
-            while i < len(sql) and sql[i] != "'":
-                i += 1
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    return None
-
-
-def _quoted_spans(sql: str) -> list[tuple[int, int]]:
-    return [m.span() for m in re.finditer(r"'(?:[^']|'')*'", sql)]
+    return _sub(_JSON_ARROW, repl, sql)
 
 
 def _fold_sum(arg: str) -> str:
@@ -584,91 +584,69 @@ def _fold_sum(arg: str) -> str:
     )
 
 
+def _count(arg: str) -> str:
+    """DuckDB list count: the non-NULL elements."""
+    return f"size(filter({arg}, _e -> _e IS NOT NULL))"
+
+
 def _fold_avg(arg: str) -> str:
     """DuckDB-style list avg: sum of non-NULLs / count of non-NULLs
     (not array size — ADVICE r3); nullif keeps the empty case NULL
     without tripping ANSI division-by-zero."""
-    nn_size = f"size(filter({arg}, _e -> _e IS NOT NULL))"
-    return f"{_fold_sum(arg)} / nullif({nn_size}, 0)"
+    return f"{_fold_sum(arg)} / nullif({_count(arg)}, 0)"
 
 
-def _rewrite_list_aggs(sql: str) -> str:
-    """``list_sum/list_avg/list_count(x)`` → higher-order ``aggregate``
-    folds (Spark has no array-sum builtin). Runs over the full string —
-    the argument may contain quoted literals — but skips matches that
-    start inside one."""
-    spans = _quoted_spans(sql)
-    out = []
-    pos = 0
-    while True:
-        m = _LIST_SUM.search(sql, pos)
-        while m and any(a <= m.start() < b for a, b in spans):
-            m = _LIST_SUM.search(sql, m.end())
-        if not m:
-            out.append(sql[pos:])
-            return "".join(out)
-        end = _balanced_arg(sql, m.end() - 1)
-        if end is None:
-            out.append(sql[pos:])
-            return "".join(out)
-        arg = sql[m.end() : end - 1]
-        fn = m.group(1).lower()
-        if fn == "list_sum":
-            expr = _fold_sum(arg)
-        elif fn == "list_avg":
-            expr = _fold_avg(arg)
-        else:  # list_count: non-null elements
-            expr = f"size(filter({arg}, _e -> _e IS NOT NULL))"
-        out.append(sql[pos : m.start()])
-        out.append(expr)
-        pos = end
+#: list_aggregate's function-name argument → Spark array equivalents.
+#: Callables (not str.format templates — braces in the argument, e.g.
+#: struct literals, would abort a format; ADVICE r3). sum/avg/count share
+#: the NULL-correct bodies of list_sum/list_avg/list_count.
+_LIST_AGGR_FNS: dict[str, Callable[[str], str]] = {
+    "'sum'": _fold_sum,
+    "'min'": lambda a: f"array_min({a})",
+    "'max'": lambda a: f"array_max({a})",
+    "'count'": _count,
+    "'avg'": _fold_avg,
+}
+
+_PLAIN_LIT = re.compile(r"^'([^']*)'$")
 
 
-def _split_top_args(argstr: str) -> list[str]:
-    """Split a function's argument string on TOP-LEVEL commas (honoring
-    nested parens and quoted literals)."""
-    args: list[str] = []
-    depth = 0
-    cur_start = 0
-    i, n = 0, len(argstr)
-    while i < n:
-        ch = argstr[i]
-        if ch == "'":
-            i += 1
-            while i < n and argstr[i] != "'":
-                i += 1
-        elif ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            args.append(argstr[cur_start:i].strip())
-            cur_start = i + 1
-        i += 1
-    args.append(argstr[cur_start:].strip())
-    return args
+def _split_on_value(s: str, delim: str) -> str:
+    """DuckDB's ``str_split(s, delim)`` splits on the delimiter's VALUE;
+    Spark's ``split`` reads a REGEX. A literal delimiter is re.escape()d,
+    with backslashes doubled for the SQL string-literal layer (Spark drops
+    the backslash of unrecognized escapes, so a single ``\\.`` would reach
+    the regex engine as ``.`` — ADVICE r2). Any other delimiter has every
+    non-word character of its runtime value backslash-escaped (Java regex
+    reads a backslash before any non-alphabetic character as that
+    character; a \\Q…\\E wrapper broke on values containing \\E)."""
+    lit = _PLAIN_LIT.match(delim)
+    if lit:
+        escaped = re.escape(lit.group(1)).replace("\\", "\\\\")
+        return f"split({s}, '{escaped}')"
+    return f"split({s}, regexp_replace({delim}, '(\\\\W)', '\\\\\\\\$1'))"
 
 
-#: DuckDB functions whose Spark equivalent needs an ARGUMENT transform,
-#: not just a rename. Handled by _rewrite_arg_transforms with full
-#: balanced-paren extraction (args may be nested calls or quoted
-#: literals). Unrecognized arities are left untouched → Spark fails
-#: loudly instead of silently returning wrong rows (ADVICE r2).
-_ARG_XFORM = re.compile(
-    r"\b(str_split|string_split|string_to_array|string_split_regex"
-    r"|str_split_regex|list_slice|list_position|list_indexof"
-    r"|struct_pack|list_aggregate|list_aggr|list_prepend"
-    r"|epoch_ns|epoch_us|epoch_ms|epoch_s|time_bucket_ns)\s*\(",
-    re.IGNORECASE,
-)
+def _list_aggregate(xs: str, fn: str) -> str | None:
+    body = _LIST_AGGR_FNS.get(fn.lower())
+    return body and body(xs)
 
-#: Functions that become an expression over their arguments, by arity:
-#: DuckDB's epoch family, ``time_bucket_ns(width_ns, time_ns)`` (bucket
-#: start in ns, for the int64-ns time model), and ``list_prepend(elem,
-#: list)``, whose arguments Spark's ``array_prepend`` takes the other way
-#: round. Inline expressions need no per-session registration and stay
-#: inside whole-stage codegen.
-_ARG_TEMPLATES: dict[tuple[str, int], Callable[..., str]] = {
+
+def _position(xs: str, v: str) -> str:
+    """DuckDB's list_position returns NULL on a miss; Spark returns 0."""
+    return f"nullif(array_position({xs}, {v}), 0)"
+
+
+#: DuckDB functions whose Spark equivalent is an expression over their
+#: arguments, by arity; an arity not listed is left untouched, so Spark
+#: fails loudly instead of silently returning wrong rows (ADVICE r2). The
+#: epoch family and ``time_bucket_ns(width_ns, time_ns)`` (bucket start in
+#: ns, for the int64-ns time model) become inline expressions that need no
+#: per-session registration and stay inside whole-stage codegen;
+#: ``list_slice``'s end is inclusive (DuckDB 1.0; Spark's ``slice`` takes a
+#: length); ``list_prepend(elem, list)`` takes Spark's arguments the other
+#: way round; Spark has no array sum.
+_ARG_TEMPLATES: dict[tuple[str, int], Callable[..., str | None]] = {
     ("epoch_ns", 1): lambda x: f"(unix_micros(CAST({x} AS TIMESTAMP)) * 1000)",
     ("epoch_us", 1): lambda x: f"unix_micros(CAST({x} AS TIMESTAMP))",
     ("epoch_ms", 1): lambda x: f"(unix_micros(CAST({x} AS TIMESTAMP)) DIV 1000)",
@@ -677,109 +655,60 @@ _ARG_TEMPLATES: dict[tuple[str, int], Callable[..., str]] = {
         f"((CAST({t} AS BIGINT) DIV CAST({w} AS BIGINT)) * CAST({w} AS BIGINT))"
     ),
     ("list_prepend", 2): lambda e, xs: f"array_prepend({xs}, {e})",
+    ("list_slice", 3): lambda xs, b, e: f"slice({xs}, {b}, ({e}) - ({b}) + 1)",
+    ("list_position", 2): _position,
+    ("list_indexof", 2): _position,
+    ("list_sum", 1): _fold_sum,
+    ("list_avg", 1): _fold_avg,
+    ("list_count", 1): _count,
+    ("list_aggregate", 2): _list_aggregate,
+    ("list_aggr", 2): _list_aggregate,
+    ("str_split", 2): _split_on_value,
+    ("string_split", 2): _split_on_value,
+    ("string_to_array", 2): _split_on_value,
 }
 
 #: struct_pack named argument: name := expr
 _NAMED_ARG = re.compile(r"^([A-Za-z_]\w*)\s*:=\s*(.+)$", re.DOTALL)
 
-#: list_aggregate's function-name argument → Spark array equivalents.
-#: Callables (not str.format templates — braces in the argument, e.g.
-#: struct literals, would abort a format; ADVICE r3). sum/avg share the
-#: NULL-correct folds above.
-_LIST_AGGR_FNS: dict[str, Callable[[str], str]] = {
-    "'sum'": _fold_sum,
-    "'min'": lambda a: f"array_min({a})",
-    "'max'": lambda a: f"array_max({a})",
-    "'count'": lambda a: f"size(filter({a}, _e -> _e IS NOT NULL))",
-    "'avg'": _fold_avg,
-}
-
-_PLAIN_LIT = re.compile(r"^'([^']*)'$")
+_ARG_XFORM = re.compile(
+    r"\b(" + "|".join(sorted({fn for fn, _ in _ARG_TEMPLATES} | {"struct_pack"}))
+    + r")\s*\(",
+    re.IGNORECASE,
+)
 
 
 def _rewrite_arg_transforms(sql: str) -> str:
-    """Semantics-preserving rewrites that must touch arguments:
-
-    - ``str_split(x, '<lit>')`` → ``split(x, '<escaped>')``. DuckDB's
-      delimiter is a LITERAL; Spark's is a REGEX. Metachars are
-      re.escape()d and backslashes doubled for the SQL string-literal
-      layer (Spark drops the backslash of unrecognized escapes, so a
-      single ``\\.`` would reach the regex engine as ``.`` — ADVICE r2).
-    - ``list_slice(l, b, e)`` (inclusive end) → ``slice(l, b, e-b+1)``
-      (length). DuckDB 1.0 semantics; mixed-sign b/e unsupported → wrong
-      only where DuckDB itself is surprising.
-    - ``list_position/list_indexof(l, v)`` → ``nullif(array_position(l,
-      v), 0)`` — DuckDB returns NULL on a miss, Spark returns 0.
-    - ``_ARG_TEMPLATES`` (epoch family, ``time_bucket_ns``,
-      ``list_prepend``).
-
-    Arguments are rewritten first, so calls nest.
-    """
-    spans = _quoted_spans(sql)
-    out = []
-    pos = 0
-    while True:
-        m = _ARG_XFORM.search(sql, pos)
-        while m and any(a <= m.start() < b for a, b in spans):
-            m = _ARG_XFORM.search(sql, m.end())
-        if not m:
-            out.append(sql[pos:])
-            return "".join(out)
-        end = _balanced_arg(sql, m.end() - 1)
+    """Rewrite the calls ``_ARG_TEMPLATES`` lists, and ``struct_pack(a :=
+    1, b := x)`` → ``named_struct('a', 1, 'b', x)``. Arguments are
+    rewritten first, so calls nest."""
+    masked, out, pos = _mask(sql), [], 0
+    for m in _ARG_XFORM.finditer(masked):
+        end = _close(masked, m.end() - 1) if m.start() >= pos else None
         if end is None:
-            out.append(sql[pos:])
-            return "".join(out)
+            continue
         fn = m.group(1).lower()
         args = [
-            _rewrite_arg_transforms(a) for a in _split_top_args(sql[m.end() : end - 1])
+            _rewrite_arg_transforms(sql[a:b].strip())
+            for a, b in _args(masked, m.end(), end - 1)
         ]
-        repl = None
-        if (fn, len(args)) in _ARG_TEMPLATES:
-            repl = _ARG_TEMPLATES[fn, len(args)](*args)
-        elif fn in ("str_split", "string_split", "string_to_array") and len(args) == 2:
-            lit = _PLAIN_LIT.match(args[1])
-            if lit:
-                delim = re.escape(lit.group(1)).replace("\\", "\\\\")
-                repl = f"split({args[0]}, '{delim}')"
-            else:
-                # Non-literal delimiter: DuckDB splits on the VALUE, Spark
-                # split() treats it as a regex — backslash-escape every
-                # non-word character of the runtime value so it matches
-                # literally (Java regex reads a backslash before any
-                # non-alphabetic character as that character; a \Q…\E
-                # wrapper broke on values containing \E). The SQL string
-                # layer eats one backslash, hence the doubles.
-                repl = (
-                    f"split({args[0]}, "
-                    f"regexp_replace({args[1]}, '(\\\\W)', '\\\\\\\\$1'))"
-                )
-        elif fn in ("string_split_regex", "str_split_regex") and len(args) == 2:
-            repl = f"split({args[0]}, {args[1]})"
-        elif fn == "list_slice" and len(args) == 3:
-            b, e = args[1], args[2]
-            repl = f"slice({args[0]}, {b}, ({e}) - ({b}) + 1)"
-        elif fn in ("list_position", "list_indexof") and len(args) == 2:
-            repl = f"nullif(array_position({args[0]}, {args[1]}), 0)"
-        elif fn == "struct_pack":
-            # struct_pack(a := 1, b := x) → named_struct('a', 1, 'b', x)
+        if fn == "struct_pack":
             named = [_NAMED_ARG.match(a) for a in args]
-            if all(named):
-                inner = ", ".join(
-                    f"'{m.group(1)}', {m.group(2).strip()}" for m in named
-                )
-                repl = f"named_struct({inner})"
-        elif fn in ("list_aggregate", "list_aggr") and len(args) == 2:
-            template = _LIST_AGGR_FNS.get(args[1].lower())
-            if template:
-                repl = template(args[0])
-        if repl is None:
-            # no rewrite for this call: keep it, rewrite inside it
-            out.append(sql[pos : m.end()])
-            pos = m.end()
+            repl = all(named) and "named_struct({})".format(
+                ", ".join(f"'{n.group(1)}', {n.group(2).strip()}" for n in named)
+            )
         else:
-            out.append(sql[pos : m.start()])
-            out.append(repl)
+            template = _ARG_TEMPLATES.get((fn, len(args)))
+            repl = template and template(*args)
+        if repl:
+            out += [sql[pos : m.start()], repl]
             pos = end
+    return "".join(out) + sql[pos:]
+
+
+def _tablesample(m: re.Match) -> str:
+    unit = "ROWS" if (m.group(2) or "").upper() == "ROWS" else "PERCENT"
+    return f"TABLESAMPLE ({m.group(1)} {unit})"
 
 
 def to_spark_sql(sql: str) -> str:
@@ -788,147 +717,89 @@ def to_spark_sql(sql: str) -> str:
     its embedded engine, queryClient.go:778-815; ``x::TYPE`` needs none):
 
     - ``x -> 'a' ->> 'b'``      → ``get_json_object(x, '$.a.b')``
+    - ``lambda x: body``        → ``x -> body``
     - ``list_*``/``str_split``/… → Spark array/string equivalents
     - ``list_sum/avg/count(x)`` → higher-order ``aggregate`` folds
     - ``USING SAMPLE n% | n ROWS`` → ``TABLESAMPLE (…)``
     - ``SIMILAR TO 'pat'``      → anchored ``RLIKE``
     - ``epoch_ns/epoch_us/epoch_ms/epoch_s(ts)``, ``time_bucket_ns(w, t)``
       → inline ``unix_micros``/``DIV`` expressions
+    - ``* EXCLUDE (cols)``      → ``* EXCEPT (cols)``
+
+    Quoted text is never rewritten.
     """
     sql = _rewrite_json_arrows(sql)
-    sql = _outside_quotes(sql, _rewrite_lambda_kw)
+    sql = _sub(_LAMBDA_KW, _lambda_arrow, sql)
     sql = _rewrite_arg_transforms(sql)
-    sql = _rewrite_list_aggs(sql)
-    sql = _outside_quotes(
-        sql,
-        lambda s: _FN_ALIAS_RE.sub(
-            lambda m: _FN_ALIASES[m.group(1).lower()] + "(", s
-        ),
-    )
-    sql = _outside_quotes(
-        sql,
-        lambda s: _USING_SAMPLE.sub(
-            lambda m: f"TABLESAMPLE ({m.group(1)} "
-            + ("ROWS" if (m.group(2) or "").upper() == "ROWS" else "PERCENT")
-            + ")",
-            s,
-        ),
-    )
-    sql = _SIMILAR_TO.sub(lambda m: f"RLIKE '^(?:{m.group(1)})$'", sql)
-    sql = _outside_quotes(sql, lambda s: _STAR_EXCLUDE.sub(r"\1EXCEPT\2", s))
-    return sql
+    sql = _sub(_FN_ALIAS_RE, lambda m: _FN_ALIASES[m.group(1).lower()] + "(", sql)
+    sql = _sub(_USING_SAMPLE, _tablesample, sql)
+    sql = _sub(_SIMILAR_TO, lambda m: f"RLIKE '^(?:{m.group(1)})$'", sql)
+    return _sub(_STAR_EXCLUDE, lambda m: f"{m.group(1)}EXCEPT{m.group(2)}", sql)
 
 
-#: synthetic column the QUALIFY rewrite adds; the engine drops it after
-#: execution (engine.py).
-QUALIFY_COL = "__qualify__"
+#: the column the QUALIFY rewrite adds to a query level and excludes again
+#: one level up
+_QUALIFY_COL = "__qualify__"
 
 _QUALIFY_KW = re.compile(r"\sQUALIFY\s", re.IGNORECASE)
 _TAIL_KW = re.compile(r"\s(ORDER\s+BY|LIMIT)\s", re.IGNORECASE)
-
-
-def _split_top_level_tail(s: str) -> tuple[str, str]:
-    """Split off a trailing ORDER BY / LIMIT that sits OUTSIDE any
-    parentheses (an ORDER BY inside an OVER(...) must stay put)."""
-    m = _depth0_match(_TAIL_KW, s)
-    return (s[: m.start()], s[m.start() :]) if m else (s, "")
-
-
 _FROM_KW = re.compile(r"\sFROM\s", re.IGNORECASE)
 
 
-def rewrite_qualify(sql: str) -> str:
-    """DuckDB ``QUALIFY <pred>`` → standard SQL Spark parses.
+def _qualify_one(sql: str) -> str:
+    """Rewrite THIS query level's QUALIFY. The predicate is appended to the
+    level's own select list (so it can reference any column of the source
+    relation, projected or not), and filtered one level up:
 
-    The predicate is appended to the query's own select list (so it can
-    reference any column of the source relation, projected or not), and
-    filtered one level up:
+        SELECT <sel> FROM <rest> QUALIFY <pred> [ORDER BY … | LIMIT …]
+        → SELECT * EXCEPT (__qualify__) FROM (SELECT <sel>,
+          (<pred>) AS __qualify__ FROM <rest>) __qw WHERE __qualify__
+          [ORDER BY … | LIMIT …]
 
-        SELECT <sel>, (<pred>) AS __qualify__ FROM <rest>
-        → SELECT * FROM ( ... ) WHERE __qualify__ [ORDER BY|LIMIT tail]
-
-    The engine drops ``__qualify__`` from the result. Top-level QUALIFY
-    only; QUALIFY on a SELECT DISTINCT changes the distinct key —
-    documented limitations.
-    """
-    return _qualify_one(normalize(sql), drop=False)
-
-
-def _qualify_one(sql: str, drop: bool) -> str:
-    """Rewrite THIS query level's QUALIFY. ``drop=True`` excludes the
-    helper column in the rewritten text (``SELECT * EXCEPT``) — needed
-    when the query is a subquery whose schema must not grow; the
-    top-level form leaves it for the engine to drop post-execution
-    (pre-Spark-3.4 EXCEPT-free compatibility)."""
-    m = _depth0_match(_QUALIFY_KW, sql)
-    if not m:
+    QUALIFY on a SELECT DISTINCT changes the distinct key — a documented
+    limitation."""
+    masked = _mask(sql)
+    q = _depth0_match(_QUALIFY_KW, masked)
+    fm = q and _depth0_match(_FROM_KW, masked[: q.start()])
+    if not fm:
         return sql
-    body = sql[: m.start()]
-    pred, tail = _split_top_level_tail(sql[m.end() :])
-    fm = None
-    depth = 0
-    for i, ch in enumerate(body):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and fm is None:
-            mm = _FROM_KW.match(body, i)
-            if mm:
-                fm = i
-                break
-    if fm is None:
-        return sql
-    body_with_pred = f"{body[:fm]}, ({pred.strip()}) AS {QUALIFY_COL}{body[fm:]}"
-    sel = f"* EXCEPT ({QUALIFY_COL})" if drop else "*"
+    tail = _depth0_match(_TAIL_KW, masked, q.end())
+    cut = tail.start() if tail else len(sql)
+    pred = sql[q.end() : cut].strip()
     return (
-        f"SELECT {sel} FROM ({body_with_pred}) __qw WHERE {QUALIFY_COL}{tail}"
+        f"SELECT * EXCEPT ({_QUALIFY_COL}) FROM ({sql[: fm.start()]}, ({pred})"
+        f" AS {_QUALIFY_COL}{sql[fm.start() : q.start()]}) __qw"
+        f" WHERE {_QUALIFY_COL}{sql[cut:]}"
     )
 
 
-def _qualify_recurse(sql: str, drop: bool) -> str:
-    out = []
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            j = i + 1
-            while j < n and sql[j] != "'":
-                j += 1
-            out.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        if ch == "(":
-            end = _balanced_arg(sql, i)
-            if end is not None:
-                inner = sql[i + 1 : end - 1]
-                if re.match(r"\s*SELECT\b", inner, re.IGNORECASE):
-                    out.append("(" + _qualify_recurse(inner, drop=True) + ")")
-                    i = end
-                    continue
-        out.append(ch)
-        i += 1
-    return _qualify_one("".join(out), drop=drop)
+def _qualify_levels(sql: str) -> str:
+    masked, out, pos = _mask(sql), [], 0
+    for m in _SUBQUERY.finditer(masked):
+        end = _close(masked, m.start()) if m.start() >= pos else None
+        if end is not None:
+            inner = _qualify_levels(sql[m.start() + 1 : end - 1])
+            out += [sql[pos : m.start()], f"({inner})"]
+            pos = end
+    return _qualify_one("".join(out) + sql[pos:])
 
 
 def rewrite_qualify_all(sql: str) -> str:
-    """``rewrite_qualify`` extended into subqueries and CTE bodies: every
-    parenthesized ``( SELECT ... )`` group is rewritten recursively (its
-    helper column EXCEPT-dropped so the subquery schema is unchanged),
-    then the top level rewrites as before (engine drops the column
-    post-execution)."""
-    return _qualify_recurse(normalize(sql), drop=False)
+    """DuckDB ``QUALIFY <pred>`` → standard SQL Spark parses, at every
+    query level: each parenthesised ``(SELECT …)`` (subquery or CTE body),
+    innermost first, then the statement itself. Every level excludes its
+    helper column again, so no level's schema grows."""
+    return _qualify_levels(normalize(sql))
 
 
 def strip_db_qualifier(sql: str, db_name: str, measurement: str) -> str:
     """Rewrite ``FROM db.table`` → ``FROM table`` so the bound temp view
     resolves (temp views live outside database namespaces).
 
-    The rewrite fires only in FROM/JOIN position and never inside
-    single-quoted string literals — a blind ``re.sub`` over the whole
-    text is the reference's own bug class (string splicing,
-    querier/queryClient.go:844-846) and corrupts literals/comments that
-    happen to contain ``db.table``.
+    The rewrite fires only in FROM/JOIN position and never inside quoted
+    text — a blind ``re.sub`` over the whole text is the reference's own
+    bug class (string splicing, querier/queryClient.go:844-846) and
+    corrupts literals/comments that happen to contain ``db.table``.
     """
     if not db_name:
         return sql
@@ -936,9 +807,4 @@ def strip_db_qualifier(sql: str, db_name: str, measurement: str) -> str:
         rf"((?:\bFROM|\bJOIN|,)\s+){re.escape(db_name)}\.{re.escape(measurement)}\b",
         re.IGNORECASE,
     )
-    # Split on single-quoted literals (with '' escapes); rewrite only the
-    # unquoted segments.
-    parts = re.split(r"('(?:[^']|'')*')", sql)
-    for i in range(0, len(parts), 2):
-        parts[i] = pat.sub(rf"\g<1>{measurement}", parts[i])
-    return "".join(parts)
+    return _sub(pat, lambda m: m.group(1) + measurement, sql)

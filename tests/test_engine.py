@@ -765,3 +765,96 @@ def test_line_comment_ends_at_its_newline(engine):
         "mydb",
     )
     assert rows == [{"dash": "--  x", "n": 84}]
+
+
+@pytest.mark.parametrize(
+    "sql, expect",
+    [
+        ('SELECT "strpos(" AS s', "strpos("),
+        ("SELECT \"x SIMILAR TO 'a'\" AS s", "x SIMILAR TO 'a'"),
+        ('SELECT "x USING SAMPLE 5%" AS s', "x USING SAMPLE 5%"),
+        ('SELECT "lambda x: 1" AS s', "lambda x: 1"),
+    ],
+    ids=["strpos", "similar_to", "using_sample", "lambda"],
+)
+def test_quoted_text_is_never_rewritten(engine, sql, expect):
+    """A double-quoted string is a string literal in Spark's default mode;
+    no dialect rewrite changes it."""
+    assert engine.query_rows(sql, "mydb") == [{"s": expect}]
+
+
+def test_quoted_call_name_leaves_the_real_call_rewritten(engine):
+    rows = engine.query_rows('SELECT "list_sum(" AS s, list_sum(array(1, 2)) AS t', "mydb")
+    assert rows == [{"s": "list_sum(", "t": 3.0}]
+
+
+def test_qualify_with_from_in_a_string(engine):
+    rows = engine.query_rows(
+        "SELECT ' FROM ' AS s, location FROM weather"
+        " QUALIFY row_number() OVER (PARTITION BY location ORDER BY time) = 1",
+        "mydb",
+    )
+    assert sorted(rows, key=lambda r: r["location"]) == [
+        {"s": " FROM ", "location": loc} for loc in ("east", "north", "south")
+    ]
+
+
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def test_no_temp_view_left_behind(engine, spark):
+    """A lake query, a DESCRIBE and a ``read_parquet`` query bind their
+    views for the statement's analysis only."""
+    before = _temp_views(spark)
+    engine.query_rows(
+        "SELECT count(*) AS n FROM weather WHERE time >= '2024-01-02T00:00:00Z'"
+        " AND time < '2024-01-03T00:00:00Z'",
+        "mydb",
+    )
+    assert _temp_views(spark) == before
+    engine.query_rows("DESCRIBE weather", "mydb")
+    assert _temp_views(spark) == before
+    engine.query_rows(
+        "SELECT count(*) AS n FROM read_parquet(['/root/testdata/sf0.001/region.parquet'])"
+    )
+    assert _temp_views(spark) == before
+
+
+def test_unbound_table_does_not_resolve_to_an_earlier_view(engine):
+    """``metrics`` is the statement's target, so ``weather`` is not bound;
+    it must not resolve to the view a pruned query bound earlier."""
+    rows = engine.query_rows(
+        "SELECT count(*) AS n FROM weather WHERE time >= '2024-01-02T00:00:00Z'"
+        " AND time < '2024-01-03T00:00:00Z'",
+        "mydb",
+    )
+    assert rows == [{"n": 24}]
+    with pytest.raises(QueryError, match="TABLE_OR_VIEW_NOT_FOUND"):
+        engine.query_rows(
+            "SELECT (SELECT count(*) FROM metrics) AS m, count(*) AS n FROM weather",
+            "mydb",
+        )
+
+
+def test_concurrent_read_parquet_queries_keep_their_own_views(engine):
+    """Each statement's ``read_parquet`` views are its own, even when two
+    threads bind views of the same name."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    def count(table: str) -> int:
+        return engine.query_rows(
+            "SELECT count(*) AS n FROM"
+            f" read_parquet(['/root/testdata/sf0.001/{table}.parquet'])"
+        )[0]["n"]
+
+    tables = ["region", "nation"] * 12
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(2) as ex:
+            counts = list(ex.map(count, tables, timeout=300))
+    finally:
+        sys.setswitchinterval(interval)
+    assert counts == [{"region": 5, "nation": 25}[t] for t in tables]

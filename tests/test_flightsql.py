@@ -146,7 +146,7 @@ def test_ticket_store_byte_budget(server, client):
         with pytest.raises(flight.FlightServerError, match="too large"):
             client.get_flight_info(
                 flight.FlightDescriptor.for_command(
-                    b"SELECT * FROM weather"  # 84 rows x several cols > 1 KiB
+                    b"SELECT * FROM mydb.weather"  # 84 rows x several cols > 1 KiB
                 )
             )
         # small results still work, and older tickets evict under pressure

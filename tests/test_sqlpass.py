@@ -126,17 +126,17 @@ def test_strip_db_qualifier():
 
 
 def test_rewrite_qualify():
-    from gigapi_querier_spark.plans.sqlpass import rewrite_qualify
+    from gigapi_querier_spark.plans.sqlpass import rewrite_qualify_all
 
     sql = (
         "SELECT o_custkey, o_totalprice FROM orders "
         "QUALIFY row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC) = 1"
     )
-    out = rewrite_qualify(sql)
+    out = rewrite_qualify_all(sql)
     assert "QUALIFY" not in out.upper().replace("__QUALIFY__", "")
     assert "__qualify__" in out
     # no QUALIFY → untouched
-    assert rewrite_qualify("SELECT 1") == "SELECT 1"
+    assert rewrite_qualify_all("SELECT 1") == "SELECT 1"
 
 
 def test_rewrite_qualify_in_subquery_and_cte(spark):
@@ -175,9 +175,9 @@ def test_rewrite_qualify_in_subquery_and_cte(spark):
 
 
 def test_rewrite_qualify_preserves_tail():
-    from gigapi_querier_spark.plans.sqlpass import rewrite_qualify
+    from gigapi_querier_spark.plans.sqlpass import rewrite_qualify_all
 
-    out = rewrite_qualify(
+    out = rewrite_qualify_all(
         "SELECT x FROM t QUALIFY rank() OVER (ORDER BY x) <= 2 ORDER BY x LIMIT 5"
     )
     assert out.endswith("ORDER BY x LIMIT 5")
