@@ -50,6 +50,7 @@ from gigapi_querier_spark.plans.sqlpass import (
     rewrite_qualify_all,
     rewrite_time_literals,
     strip_db_qualifier,
+    sub_unquoted,
     to_spark_sql,
 )
 from gigapi_querier_spark.session import TIMESTAMP_TYPES, time_ns
@@ -285,10 +286,9 @@ class QueryEngine:
 
             return bind
 
-        sql = self._READ_PARQUET.sub(binder("read_parquet"), sql)
-        sql = self._READ_CSV.sub(binder("read_csv"), sql)
-        sql = self._READ_JSON.sub(binder("read_json"), sql)
-        return sql
+        sql = sub_unquoted(self._READ_PARQUET, binder("read_parquet"), sql)
+        sql = sub_unquoted(self._READ_CSV, binder("read_csv"), sql)
+        return sub_unquoted(self._READ_JSON, binder("read_json"), sql)
 
     def _run_sql(
         self, sql: str, views: dict[str, DataFrame] | None = None
@@ -301,21 +301,23 @@ class QueryEngine:
         left behind. ``spark.sql`` resolves every view into the plan
         eagerly, so the returned frame stays valid once they are dropped."""
         views = dict(views or {})
-        if re.search(r"read_(parquet|csv|n?json)", sql, re.IGNORECASE):
-            sql = self._bind_file_readers(sql, views)
-        sql = to_spark_sql(rewrite_qualify_all(sql))
-        with self._bind_lock:
-            try:
-                for name, df in views.items():
-                    df.createOrReplaceTempView(name)
-                return self.spark.sql(sql)
-            except Exception as e:
-                # DuckDB-isms beyond the regex shims (e.g. a `[1, 2]` list
-                # literal) surface as a QueryError with Spark's message.
-                raise QueryError(str(e)) from e
-            finally:
-                for name in views:
-                    self.spark.catalog.dropTempView(name)
+        try:
+            if re.search(r"read_(parquet|csv|n?json)", sql, re.IGNORECASE):
+                sql = self._bind_file_readers(sql, views)
+            sql = to_spark_sql(rewrite_qualify_all(sql))
+            with self._bind_lock:
+                try:
+                    for name, df in views.items():
+                        df.createOrReplaceTempView(name)
+                    return self.spark.sql(sql)
+                finally:
+                    for name in views:
+                        self.spark.catalog.dropTempView(name)
+        except Exception as e:
+            # DuckDB-isms beyond the regex shims (e.g. a `[1, 2]` list
+            # literal) and unreadable files surface as a QueryError with
+            # Spark's message.
+            raise QueryError(str(e)) from e
 
     def _one_col_df(self, col: str, values: list[str]) -> DataFrame:
         schema = StructType([StructField(col, StringType())])

@@ -110,7 +110,9 @@ def _mask(sql: str) -> str:
     return _QUOTED.sub(lambda m: m[0][0] + " " * (len(m[0]) - 2) + m[0][-1], sql)
 
 
-def _sub(pattern: re.Pattern, repl: Callable[[re.Match], str], sql: str) -> str:
+def sub_unquoted(
+    pattern: re.Pattern, repl: Callable[[re.Match], str], sql: str
+) -> str:
     """``pattern.sub(repl, sql)`` outside quoted text. Matches are found on
     the mask, so none starts or ends inside a quoted span; ``repl`` gets
     the same span matched on ``sql``, quoted text included. A span whose
@@ -214,7 +216,7 @@ def rewrite_time_literals(sql: str) -> str:
             return f"time {op} {ns[0]}"
         return f"time BETWEEN {ns[0]} AND {ns[1]}"
 
-    return _sub(_TIME_LITERAL_CMP, fold, sql)
+    return sub_unquoted(_TIME_LITERAL_CMP, fold, sql)
 
 
 @dataclass
@@ -569,7 +571,7 @@ def _rewrite_json_arrows(sql: str) -> str:
             path += f".{key}" if key is not None else f"[{idx}]"
         return f"get_json_object({base}, '${path}')"
 
-    return _sub(_JSON_ARROW, repl, sql)
+    return sub_unquoted(_JSON_ARROW, repl, sql)
 
 
 def _fold_sum(arg: str) -> str:
@@ -729,12 +731,12 @@ def to_spark_sql(sql: str) -> str:
     Quoted text is never rewritten.
     """
     sql = _rewrite_json_arrows(sql)
-    sql = _sub(_LAMBDA_KW, _lambda_arrow, sql)
+    sql = sub_unquoted(_LAMBDA_KW, _lambda_arrow, sql)
     sql = _rewrite_arg_transforms(sql)
-    sql = _sub(_FN_ALIAS_RE, lambda m: _FN_ALIASES[m.group(1).lower()] + "(", sql)
-    sql = _sub(_USING_SAMPLE, _tablesample, sql)
-    sql = _sub(_SIMILAR_TO, lambda m: f"RLIKE '^(?:{m.group(1)})$'", sql)
-    return _sub(_STAR_EXCLUDE, lambda m: f"{m.group(1)}EXCEPT{m.group(2)}", sql)
+    sql = sub_unquoted(_FN_ALIAS_RE, lambda m: _FN_ALIASES[m.group(1).lower()] + "(", sql)
+    sql = sub_unquoted(_USING_SAMPLE, _tablesample, sql)
+    sql = sub_unquoted(_SIMILAR_TO, lambda m: f"RLIKE '^(?:{m.group(1)})$'", sql)
+    return sub_unquoted(_STAR_EXCLUDE, lambda m: f"{m.group(1)}EXCEPT{m.group(2)}", sql)
 
 
 #: the column the QUALIFY rewrite adds to a query level and excludes again
@@ -807,4 +809,4 @@ def strip_db_qualifier(sql: str, db_name: str, measurement: str) -> str:
         rf"((?:\bFROM|\bJOIN|,)\s+){re.escape(db_name)}\.{re.escape(measurement)}\b",
         re.IGNORECASE,
     )
-    return _sub(pat, lambda m: m.group(1) + measurement, sql)
+    return sub_unquoted(pat, lambda m: m.group(1) + measurement, sql)

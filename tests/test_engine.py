@@ -774,13 +774,22 @@ def test_line_comment_ends_at_its_newline(engine):
         ("SELECT \"x SIMILAR TO 'a'\" AS s", "x SIMILAR TO 'a'"),
         ('SELECT "x USING SAMPLE 5%" AS s', "x USING SAMPLE 5%"),
         ('SELECT "lambda x: 1" AS s', "lambda x: 1"),
+        (
+            "SELECT \"read_parquet('/root/testdata/sf0.001/region.parquet')\" AS s",
+            "read_parquet('/root/testdata/sf0.001/region.parquet')",
+        ),
     ],
-    ids=["strpos", "similar_to", "using_sample", "lambda"],
+    ids=["strpos", "similar_to", "using_sample", "lambda", "read_parquet"],
 )
 def test_quoted_text_is_never_rewritten(engine, sql, expect):
     """A double-quoted string is a string literal in Spark's default mode;
     no dialect rewrite changes it."""
     assert engine.query_rows(sql, "mydb") == [{"s": expect}]
+
+
+def test_unreadable_file_is_a_query_error(engine, tmp_path):
+    with pytest.raises(QueryError, match="PATH_NOT_FOUND"):
+        engine.query_rows(f"SELECT count(*) AS n FROM read_csv_auto('{tmp_path}/no.csv')")
 
 
 def test_quoted_call_name_leaves_the_real_call_rewritten(engine):
@@ -799,26 +808,25 @@ def test_qualify_with_from_in_a_string(engine):
     ]
 
 
-def _temp_views(spark) -> set[str]:
-    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
-
-
 def test_no_temp_view_left_behind(engine, spark):
     """A lake query, a DESCRIBE and a ``read_parquet`` query bind their
     views for the statement's analysis only."""
-    before = _temp_views(spark)
+
+    def views() -> set[str]:
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
     engine.query_rows(
         "SELECT count(*) AS n FROM weather WHERE time >= '2024-01-02T00:00:00Z'"
         " AND time < '2024-01-03T00:00:00Z'",
         "mydb",
     )
-    assert _temp_views(spark) == before
+    assert "weather" not in views()
     engine.query_rows("DESCRIBE weather", "mydb")
-    assert _temp_views(spark) == before
+    assert "weather" not in views()
     engine.query_rows(
         "SELECT count(*) AS n FROM read_parquet(['/root/testdata/sf0.001/region.parquet'])"
     )
-    assert _temp_views(spark) == before
+    assert not any(v.startswith("__read_parquet") for v in views())
 
 
 def test_unbound_table_does_not_resolve_to_an_earlier_view(engine):
@@ -849,7 +857,7 @@ def test_concurrent_read_parquet_queries_keep_their_own_views(engine):
             f" read_parquet(['/root/testdata/sf0.001/{table}.parquet'])"
         )[0]["n"]
 
-    tables = ["region", "nation"] * 12
+    tables = ["region", "nation"] * 40
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-5)
     try:
