@@ -18,9 +18,7 @@ re-expresses that architecture Spark-first:
                   (any stored unit → ns).
 - ``operators`` — Spark-native extensions: dedup (exact/minhash/simhash/
                   jaccard), similarity search, text analysis, multimodal
-                  column plumbing, as-of join.
-- ``streaming`` — Structured Streaming ingestion (extension; the reference
-                  is strictly request/response).
+                  column plumbing, as-of join, sessionization.
 - ``engine``    — the QueryClient equivalent: Query(sql, db) -> DataFrame.
 - ``formats``   — JSON / NDJSON encoders (int64-as-string, RFC3339Nano;
                   reference: querier/formatJson.go).

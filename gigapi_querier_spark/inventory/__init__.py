@@ -7,8 +7,8 @@ compare sorts columns by name and hashes values). Float aggregates are
 rounded identically on both sides so cross-engine summation order can't
 flip the hash.
 
-Queries whose semantics aren't SQL-expressible (streaming, stubs over
-binary payloads) register ``oracle=None`` → the driver records a weaker
+Queries whose semantics aren't SQL-expressible (stubs over binary
+payloads) register ``oracle=None`` → the driver records a weaker
 rows-only check.
 """
 

@@ -204,8 +204,8 @@ def asof_signup_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Sessionization (30-min inactivity gap) — lag → cumulative-sum window
-# composition (streaming twin: streaming/ingest.py sessionize/windows).
+# Sessionization (30-min inactivity gap) — operators/sessionize.py; the
+# oracle is the lag → cumulative-sum window composition.
 # Both sides computed at µs so DuckDB's ns→µs truncation can't skew gaps.
 # --------------------------------------------------------------------------
 @register(
@@ -237,9 +237,9 @@ FROM sess GROUP BY user_id, session_id
 )
 def ts_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # native session_window path — same rows as the two-window
-    # sessionize_batch reference (which stays as the streaming oracle),
-    # one aggregation pass instead of two analytic windows
-    from gigapi_querier_spark.streaming.ingest import sessionize_native
+    # sessionize_batch reference, one aggregation pass instead of two
+    # analytic windows
+    from gigapi_querier_spark.operators.sessionize import sessionize_native
 
     t = load_tables(spark, sf_dir, ("events",))
     ev = t["events"].select(

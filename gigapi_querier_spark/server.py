@@ -101,15 +101,29 @@ def make_handler(engine: QueryEngine):
                 return
             try:
                 length = int(self.headers.get("Content-Length", 0))
+            except ValueError:
+                length = -1
+            if length < 0:
+                # the body's end is unknown: never read this connection again
+                self.close_connection = True
+                self._error("invalid Content-Length")
+                return
+            try:
                 payload = json.loads(self.rfile.read(length) or b"{}")
-            except json.JSONDecodeError:
+            except ValueError:  # JSONDecodeError, or bytes that are not UTF-8/16/32
                 self._error("invalid JSON body")
                 return
-            sql = payload.get("query", "")
+            if not isinstance(payload, dict):
+                self._error("JSON body must be an object")
+                return
+            sql, body_db = payload.get("query", ""), payload.get("db")
+            if not isinstance(sql, str) or not isinstance(body_db, (str, type(None))):
+                self._error("query and db must be strings")
+                return
             if not sql:
                 self._error("missing query")
                 return
-            db = qs.get("db", [None])[0] or payload.get("db") or engine.DEFAULT_DB
+            db = qs.get("db", [None])[0] or body_db or engine.DEFAULT_DB
             try:
                 if fmt == "ndjson":
                     self._stream_ndjson(sql, db)

@@ -90,7 +90,6 @@ SQL_CONF: dict[str, str] = {
     # files, median of 5 on 4 cores: 4.6 s -> 0.29 s).
     "spark.sql.sources.parallelPartitionDiscovery.threshold": "1000000",
     "spark.sql.parquet.filterPushdown": "true",
-    "spark.sql.parquet.aggregatePushdown": "true",
     # --- Python <-> JVM boundary is Arrow-batched everywhere ---
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",

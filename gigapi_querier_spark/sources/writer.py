@@ -159,73 +159,3 @@ def write_metadata(
         n += 1
     return n
 
-
-def compact_table(
-    spark,
-    root: str,
-    db: str,
-    table: str,
-    min_files: int = 2,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Compact each partition directory's small parquet files into
-    ~``target_file_bytes`` outputs; returns the number of directories
-    compacted.
-
-    Protocol (safe against concurrent readers by the layout's own rules):
-    new files are written under the partition's ``tmp/`` subdir — which
-    the catalog and scans ALWAYS skip (reference queryClient.go:496-499)
-    — then moved into place and the old files removed, and metadata.json
-    regenerated last. A reader mid-compaction sees either the old files
-    (plus ignorable tmp/) or the new ones; the engine's schema cache keys
-    on (path, size, mtime) so replaced files never serve stale schemas.
-
-    Scale: each directory compacts as an independent distributed
-    read→coalesce→write; the driver only lists directories and renames.
-
-    Output names carry a per-run unique token (``compacted-<run>-NNNNN``)
-    so re-compacting a directory that already contains a previous run's
-    output can never collide with — and then delete — its own freshly
-    moved files.
-    """
-    import math
-    import shutil
-
-    base = os.path.join(root, db, table, "data")
-    compacted = []
-    for dirpath, dirnames, filenames in os.walk(base):
-        dirnames[:] = [d for d in dirnames if not is_staging_dir(d)]
-        files = sorted(f for f in filenames if f.endswith(".parquet"))
-        if len(files) < min_files:
-            continue
-        paths = [os.path.join(dirpath, f) for f in files]
-        total = sum(os.path.getsize(p) for p in paths)
-        n_out = max(1, math.ceil(total / target_file_bytes))
-        if n_out >= len(files):
-            continue  # nothing to gain
-        tmp_out = os.path.join(dirpath, "tmp", "compact")
-        shutil.rmtree(tmp_out, ignore_errors=True)
-        spark.read.parquet(*paths).coalesce(n_out).write.mode("overwrite").parquet(
-            tmp_out
-        )
-        new_parts = sorted(
-            f for f in os.listdir(tmp_out) if f.endswith(".parquet")
-        )
-        # move new files in under run-unique names, then drop the old
-        # ones — the run token guarantees an input from a prior
-        # compaction is never the target of a move (which would make the
-        # cleanup loop delete the file we just wrote)
-        run = uuid.uuid4().hex[:8]
-        moved = []
-        for i, part in enumerate(new_parts):
-            dest = os.path.join(dirpath, f"compacted-{run}-{i:05d}.parquet")
-            assert dest not in paths, f"compaction name collision: {dest}"
-            os.replace(os.path.join(tmp_out, part), dest)
-            moved.append(dest)
-        for p in paths:
-            if p not in moved:
-                os.remove(p)
-        shutil.rmtree(os.path.join(dirpath, "tmp"), ignore_errors=True)
-        compacted.append(dirpath)
-    write_metadata(base, folders=compacted)
-    return len(compacted)

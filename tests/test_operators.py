@@ -9,6 +9,7 @@ from gigapi_querier_spark.operators import dedup as D
 from gigapi_querier_spark.operators import multimodal as M
 from gigapi_querier_spark.operators import similarity as S
 from gigapi_querier_spark.operators.asof import asof_join
+from gigapi_querier_spark.operators.sessionize import sessionize_batch, sessionize_native
 
 
 def test_asof_join_matches_latest_at_or_before(spark):
@@ -550,3 +551,35 @@ def test_neardup_pairs_tiled_matches_untiled(spark, sf_dir):
     }
     assert full == tiled
     assert len(full) > 0
+
+
+def test_sessionize_batch(spark, sf_dir):
+    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    sessions = sessionize_batch(events, time_col="ts", gap_minutes=30)
+    rows = sessions.collect()
+    assert sum(r["n_events"] for r in rows) == events.count()
+    # session bounds are ordered and per-user session ids start at 1
+    assert all(r["session_start"] <= r["session_end"] for r in rows)
+    assert min(r["session_id"] for r in rows) == 1
+
+
+def test_sessionize_native_matches_batch(spark):
+    """The session_window implementation must agree with the two-window
+    reference exactly, including the strict-gap boundary (an event at
+    exactly gap distance continues the session; +1µs starts a new one)."""
+    gap_us = 30 * 60 * 1_000_000
+    base = 1_700_000_000 * 1_000_000
+    rows = [
+        (1, 1, base),
+        (1, 2, base + gap_us),          # exactly gap -> SAME session
+        (1, 3, base + 2 * gap_us + 1),  # gap+1µs -> NEW session
+        (2, 4, base),
+        (2, 5, base + 1),
+    ]
+    ev = spark.createDataFrame(rows, "user_id long, event_id long, t_us long")
+    kw = dict(time_col="t_us", gap_minutes=30, ticks_per_second=1_000_000)
+    a = {tuple(r) for r in sessionize_batch(ev, **kw).collect()}
+    b = {tuple(r) for r in sessionize_native(ev, **kw).collect()}
+    assert a == b
+    sessions = {(r[0], r[1]) for r in b}
+    assert sessions == {(1, 1), (1, 2), (2, 1)}

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import http.client
 import json
 import threading
 import urllib.request
@@ -81,6 +82,41 @@ def test_missing_query_400(base_url):
 def test_unknown_format_400(base_url):
     code, body = _post(base_url + "/query?format=xml", {"query": "SELECT 1"})
     assert code == 400
+
+
+def _raw_post(base_url: str, body: bytes, length: str) -> tuple[int, dict]:
+    """POST ``body`` with ``length`` sent verbatim as Content-Length."""
+    host, port = base_url.removeprefix("http://").split(":")
+    conn = http.client.HTTPConnection(host, int(port), timeout=30)
+    try:
+        conn.putrequest("POST", "/query")
+        conn.putheader("Content-Type", "application/json")
+        conn.putheader("Content-Length", length)
+        conn.endheaders(body)
+        resp = conn.getresponse()
+        return resp.status, json.loads(resp.read())
+    finally:
+        conn.close()
+
+
+@pytest.mark.parametrize(
+    "body,error",
+    [
+        (b"[]", "JSON body must be an object"),
+        (b'"SELECT 1"', "JSON body must be an object"),
+        (b'{"query": 5}', "query and db must be strings"),
+        (b'{"query": "SHOW TABLES", "db": ["mydb"]}', "query and db must be strings"),
+        (b'{"query": "\xff"}', "invalid JSON body"),
+    ],
+    ids=["list", "string", "query_int", "db_list", "not_utf8"],
+)
+def test_malformed_body_400(base_url, body, error):
+    assert _raw_post(base_url, body, str(len(body))) == (400, {"error": error})
+
+
+@pytest.mark.parametrize("length", ["abc", "-1"])
+def test_malformed_content_length_400(base_url, length):
+    assert _raw_post(base_url, b"{}", length) == (400, {"error": "invalid Content-Length"})
 
 
 def test_health(base_url):

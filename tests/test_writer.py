@@ -137,184 +137,6 @@ def test_partition_layout_timezone_independent(spark, tmp_path):
         spark.conf.set("spark.sql.session.timeZone", old_tz)
 
 
-def test_compact_table_roundtrip(spark, tmp_path):
-    """Many small appended files → one file per partition dir; same rows,
-    catalog still prunes correctly, metadata refreshed."""
-    import glob
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    from gigapi_querier_spark.engine import QueryEngine
-    from gigapi_querier_spark.sources.writer import compact_table, write_table
-
-    root = str(tmp_path / "croot")
-    ns = 1_700_000_000 * 1_000_000_000
-    # five appends → five small files per touched partition dir
-    for batch in range(5):
-        df = spark.createDataFrame(
-            [(ns + (batch * 4 + i) * 60_000_000_000, float(i)) for i in range(4)],
-            "time long, v double",
-        ).coalesce(1)
-        write_table(df, root, "cdb", "ct")
-    data_glob = root + "/cdb/ct/data/date=*/hour=*/*.parquet"
-    before = glob.glob(data_glob)
-    assert len(before) > 2
-    eng = QueryEngine(spark, root=root)
-    rows_before = eng.query_rows("SELECT count(*) AS n FROM ct", "cdb")
-
-    n_dirs = compact_table(spark, root, "cdb", "ct")
-    assert n_dirs >= 1
-    after = glob.glob(data_glob)
-    assert len(after) < len(before)
-    assert all("compacted-" in p for p in after if "tmp" not in p)
-    # no stale tmp dirs remain
-    assert not glob.glob(root + "/cdb/ct/data/**/tmp", recursive=True)
-
-    eng2 = QueryEngine(spark, root=root)
-    assert eng2.query_rows("SELECT count(*) AS n FROM ct", "cdb") == rows_before
-    # metadata regenerated and consistent with the new files
-    metas = glob.glob(root + "/cdb/ct/data/date=*/hour=*/metadata.json")
-    assert metas
-    for m in metas:
-        meta = json.load(open(m))
-        for fe in meta["files"]:
-            assert os.path.exists(os.path.join(os.path.dirname(m), fe["path"]))
-
-
-def test_compact_table_twice_with_appends(spark, tmp_path):
-    """ADVICE r2 (high): re-compacting a directory whose prior compaction
-    output is among the inputs must not delete the fresh output. Compact,
-    append new small files, compact again — all rows must survive."""
-    import glob
-
-    from gigapi_querier_spark.engine import QueryEngine
-    from gigapi_querier_spark.sources.writer import compact_table, write_table
-
-    root = str(tmp_path / "c2root")
-    ns = 1_700_000_000 * 1_000_000_000
-    # all rows inside one hour so every append hits the SAME partition dir
-    def batch(b):
-        return spark.createDataFrame(
-            [(ns + (b * 4 + i) * 1_000_000_000, float(b * 4 + i)) for i in range(4)],
-            "time long, v double",
-        ).coalesce(1)
-
-    for b in range(3):
-        write_table(batch(b), root, "cdb", "ct")
-    assert compact_table(spark, root, "cdb", "ct") >= 1
-
-    for b in range(3, 6):
-        write_table(batch(b), root, "cdb", "ct")
-    assert compact_table(spark, root, "cdb", "ct") >= 1
-
-    data_glob = root + "/cdb/ct/data/date=*/hour=*/*.parquet"
-    remaining = [
-        p for p in glob.glob(data_glob) if "/tmp/" not in p[len(root) :]
-    ]
-    assert remaining, "re-compaction emptied the partition directory"
-    eng = QueryEngine(spark, root=root)
-    assert eng.query_rows("SELECT count(*) AS n FROM ct", "cdb") == [{"n": 24}]
-    got = eng.query_rows("SELECT sum(v) AS s FROM ct", "cdb")
-    assert got == [{"s": sum(float(i) for i in range(24))}]
-
-
-def test_materialize_rollup_roundtrip(spark, tmp_path):
-    """Hourly rollup lands in the reference layout, is queryable through
-    the engine, and matches direct aggregation of the raw table."""
-    from pyspark.sql import functions as F
-
-    from gigapi_querier_spark.engine import QueryEngine
-    from gigapi_querier_spark.sources.rollup import materialize_rollup
-    from gigapi_querier_spark.sources.writer import write_table
-
-    root = str(tmp_path / "ruroot")
-    ns = 1_700_000_000 * 1_000_000_000
-    raw = spark.createDataFrame(
-        [
-            (ns + i * 600_000_000_000, ("a" if i % 2 else "b"), float(i))
-            for i in range(24)  # 10-min spacing → 4h of data
-        ],
-        "time long, tag string, v double",
-    )
-    write_table(raw, root, "rdb", "raw")
-    materialize_rollup(
-        spark,
-        root,
-        "rdb",
-        "raw",
-        "raw_1h",
-        bucket_ns=3_600_000_000_000,
-        keys=["tag"],
-        aggs={"n": F.count("*"), "sum_v": F.sum("v"), "max_v": F.max("v")},
-    )
-    eng = QueryEngine(spark, root=root)
-    got = {
-        (r["time"], r["tag"]): (r["n"], r["sum_v"], r["max_v"])
-        for r in eng.query_rows("SELECT time, tag, n, sum_v, max_v FROM raw_1h", "rdb")
-    }
-    expect = {
-        (r["time"], r["tag"]): (r["n"], r["sum_v"], r["max_v"])
-        for r in raw.groupBy(
-            (F.expr("time DIV 3600000000000") * 3_600_000_000_000).alias("time"), "tag"
-        )
-        .agg(F.count("*").alias("n"), F.sum("v").alias("sum_v"), F.max("v").alias("max_v"))
-        .collect()
-    }
-    assert got == expect and len(got) == len(expect) > 0
-
-
-def test_rollup_of_timestamp_lake_matches_int64_ns_lake(spark, tmp_path):
-    """A raw table whose ``time`` is ``timestamp[us]`` rolls up to the same
-    rows as its int64-ns twin: the rollup reads ``time`` as ns."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from gigapi_querier_spark.sources.rollup import materialize_rollup
-
-    ns, hour = 1_000_000_000, 3_600_000_000_000
-    t0 = 1_709_251_200 * ns  # 2024-03-01T00:00:00Z
-    times = [t0 + h * hour + i * 7 * 60 * ns + i * 1000 for h in range(4) for i in range(9)]
-    twins = {
-        "ns": pa.array(times, pa.int64()),
-        "us": pa.array([t // 1000 for t in times], pa.int64()).cast(pa.timestamp("us")),
-    }
-    got = {}
-    for kind, time_col in twins.items():
-        root = str(tmp_path / kind)
-        data = os.path.join(root, "rdb", "raw", "data")
-        os.makedirs(data)
-        table = pa.table(
-            {
-                "time": time_col,
-                "tag": pa.array(["a" if i % 2 else "b" for i in range(len(times))]),
-                "v": pa.array([float(i) for i in range(len(times))]),
-            }
-        )
-        pq.write_table(table, os.path.join(data, "part-0.parquet"))
-        materialize_rollup(
-            spark,
-            root,
-            "rdb",
-            "raw",
-            "raw_1h",
-            bucket_ns=hour,
-            keys=["tag"],
-            aggs={"n": F.count("*"), "sum_v": F.sum("v")},
-            start_ns=t0 + hour,
-            end_ns=t0 + 3 * hour,
-        )
-        got[kind] = sorted(
-            tuple(r.values())
-            for r in QueryEngine(spark, root=root).query_rows(
-                "SELECT time, tag, n, sum_v FROM raw_1h", "rdb"
-            )
-        )
-    assert got["us"] == got["ns"]
-    assert [r[0] for r in got["ns"]] == [t0 + hour] * 2 + [t0 + 2 * hour] * 2
-
-
 def test_append_rewrites_only_the_folders_it_wrote(spark, tmp_path):
     """An append of one hour to a 48-folder table rewrites that folder's
     metadata.json and leaves the other 47 untouched (same inode and
