@@ -6,8 +6,9 @@ catalog/pruning/rewrite/serving layer over Parquet files; its relational
 surface is the embedded engine's SQL dialect (see SURVEY.md). This package
 re-expresses that architecture Spark-first:
 
-- ``sources``   — path-convention catalog, metadata.json time-range pruning,
-                  hive date=/hour= awareness, storage layers
+- ``sources``   — path-convention catalog (the json metadata index; Redis
+                  is the other backend), metadata.json time-range pruning,
+                  hive date=/hour= awareness
                   (reference: querier/queryClient.go:340-710).
 - ``plans``     — light SQL pre-pass: table + time-bound extraction and
                   dialect shims (``epoch_ns`` / ``time_bucket_ns`` become

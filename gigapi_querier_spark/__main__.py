@@ -15,6 +15,7 @@ import sys
 
 from gigapi_querier_spark.engine import QueryEngine, QueryError
 from gigapi_querier_spark.formats import transform_rows
+from gigapi_querier_spark.module import init
 from gigapi_querier_spark.session import get_spark
 
 
@@ -30,33 +31,27 @@ def main(argv: list[str] | None = None) -> int:
     args = parser.parse_args(argv)
 
     spark = get_spark(app_name="gigapi-querier-spark")
-    engine = QueryEngine(spark, root=args.root)
-
     if args.command == "query" or args.query:
         if not args.query:
             parser.error("--query is required in one-shot mode")
         try:
-            rows = engine.query_rows(args.query, args.db)
+            rows = QueryEngine(spark, root=args.root).query_rows(args.query, args.db)
         except QueryError as e:
             print(json.dumps({"error": str(e)}), file=sys.stderr)
             return 1
         print(json.dumps(transform_rows(rows), indent=2))
         return 0
 
-    # serve
-    from gigapi_querier_spark.server import serve
-
-    httpd = serve(engine, args.host, args.port)
-    if args.flight_port:
-        from gigapi_querier_spark.flightsql import GigapiFlightServer
-
-        fs = GigapiFlightServer(engine, f"grpc://{args.host}:{args.flight_port}")
-        import threading
-
-        threading.Thread(target=fs.serve, daemon=True).start()
+    mod = init(
+        args.root,
+        spark=spark,
+        http_port=args.port,
+        flight_port=args.flight_port or None,
+        host=args.host,
+    )
     print(f"listening on {args.host}:{args.port}", file=sys.stderr)
     try:
-        httpd.serve_forever()
+        mod.wait()
     except KeyboardInterrupt:
         pass
     return 0

@@ -34,7 +34,6 @@ from __future__ import annotations
 import os
 import re
 import threading
-import time
 from collections import OrderedDict
 from dataclasses import dataclass
 
@@ -53,7 +52,7 @@ from gigapi_querier_spark.plans.sqlpass import (
     sub_unquoted,
     to_spark_sql,
 )
-from gigapi_querier_spark.session import TIMESTAMP_TYPES, time_ns
+from gigapi_querier_spark.session import TIMESTAMP_TYPES, file_status, time_ns
 
 
 class QueryError(Exception):
@@ -63,12 +62,9 @@ class QueryError(Exception):
 
 @dataclass
 class QueryStats:
-    """Per-query timing mirroring the reference's instrumentation
-    (file discovery :442-445, build :863, fetch :922)."""
+    """What the last query bound: files kept and how the bind went."""
 
     n_files: int = 0
-    discovery_sec: float = 0.0
-    build_sec: float = 0.0
     relation_cached: bool = False  # the bind reused a cached relation
     time_conjuncts_dropped: bool = False  # the index covered the range
 
@@ -133,13 +129,10 @@ class QueryEngine:
             # Fallback: run verbatim (meta queries, SELECT 1, full dialect)
             return self._run_sql(sql)
 
-        t0 = time.perf_counter()
         files = self.catalog.find_files(
             parsed.db_name, parsed.measurement, parsed.time_range
         )
-        self.last_stats = QueryStats(
-            n_files=len(files), discovery_sec=time.perf_counter() - t0
-        )
+        self.last_stats = QueryStats(n_files=len(files))
         if not files:
             # The reference would hand DuckDB an empty read_parquet([]) and
             # surface its error; a catalogued-but-empty range is not an
@@ -150,7 +143,6 @@ class QueryEngine:
                 f"no files in time range for {parsed.db_name}.{parsed.measurement}"
             )
 
-        t0 = time.perf_counter()
         df = self._relation(parsed.db_name, parsed.measurement, files)
         run_sql = strip_db_qualifier(sql, parsed.db_name, parsed.measurement)
         # time-literal normalization (A10): comparisons against the int64-ns
@@ -160,9 +152,7 @@ class QueryEngine:
         if not tr.is_empty and self.catalog.covers(files, tr):
             run_sql = drop_time_conjuncts(run_sql)
             self.last_stats.time_conjuncts_dropped = True
-        out = self._run_sql(run_sql, {parsed.measurement: df})
-        self.last_stats.build_sec = time.perf_counter() - t0
-        return out
+        return self._run_sql(run_sql, {parsed.measurement: df})
 
     def _relation(self, db: str, table: str, files: list[str]) -> DataFrame:
         """The bound relation over ``files``: cached, or one mergeSchema
@@ -190,21 +180,13 @@ class QueryEngine:
     def _sig(self, f: str) -> tuple[str, int, int]:
         """(path, size, mtime) cache key component: a file REWRITTEN IN
         PLACE (compaction: same path, new schema) must miss the relation
-        cache, not just added/removed files. Local paths use ``os.stat``;
-        any ``scheme://`` path (file, s3a, hdfs, …) goes through the
-        Hadoop FileSystem API so object-store rewrites invalidate too (VERDICT
-        r2 wrong#2 — ``os.stat`` on s3a always errored, pinning ``(-1,
-        -1)`` and serving stale schemas forever). Both are metadata-only
-        calls, cheap relative to footer reads."""
+        cache, not just added/removed files. ``file_status`` stats local
+        paths with ``os.stat`` and any ``scheme://`` path (file, s3a, hdfs,
+        …) through the Hadoop FileSystem API, so object-store rewrites
+        invalidate too. Both are metadata-only calls, cheap relative to
+        footer reads; a file that cannot be stat'ed signs as ``(-1, -1)``."""
         try:
-            if "://" not in f:
-                st = os.stat(f)
-                return (f, st.st_size, int(st.st_mtime_ns))
-            jvm = self.spark._jvm
-            p = jvm.org.apache.hadoop.fs.Path(f)
-            fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
-            st = fs.getFileStatus(p)
-            return (f, int(st.getLen()), int(st.getModificationTime()))
+            return (f, *file_status(self.spark, f))
         except Exception:
             return (f, -1, -1)
 

@@ -48,7 +48,7 @@ def dedup_exact_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# DuckDB mirror of operators/dedup.py:shingles (1-based inclusive slices).
+# DuckDB mirror of operators/dedup.py:shingle_relation (1-based inclusive slices).
 _ORACLE_SHINGLES = """
   SELECT doc_id,
          unnest(list_transform(range(1, greatest(len(w) - 2, 1) + 1),

@@ -37,6 +37,11 @@ class Module:
         gives a first-class function instead)."""
         return self.engine.query(sql, db)
 
+    def wait(self) -> None:
+        """Block until the servers stop (a CLI's foreground)."""
+        for t in self._threads:
+            t.join()
+
     def shutdown(self) -> None:
         if self.httpd is not None:
             self.httpd.shutdown()
@@ -48,7 +53,7 @@ class Module:
 
 
 def init(
-    root: str,
+    root: str | None,
     mode: str = "readonly",
     spark: SparkSession | None = None,
     http_port: int | None = None,
@@ -60,7 +65,8 @@ def init(
     - ``mode`` outside ``readonly``/``aio`` → engine only, no servers
       (module/init.go:26-28 skips registration the same way);
     - ``http_port``/``flight_port`` of None skip that frontend;
-    - ``spark`` of None builds/joins the shared session.
+    - ``spark`` of None builds/joins the shared session;
+    - ``root`` of None reads ``GIGAPI_ROOT`` (``QueryEngine``).
     """
     if spark is None:
         from gigapi_querier_spark.session import get_spark

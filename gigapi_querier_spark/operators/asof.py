@@ -20,6 +20,54 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def _sides(direction: str, allow_exact_match: bool) -> tuple[int, int]:
+    """(left, right) sort position of the two sides at an EQUAL timestamp,
+    which decides exact-match semantics: backward scans carry the last
+    preceding right row (right first ⇔ exact counts); forward scans take
+    the first following right row (left first ⇔ exact counts)."""
+    if direction not in ("backward", "forward"):
+        raise ValueError(f"direction must be backward|forward, got {direction!r}")
+    if direction == "backward":
+        right_side = 0 if allow_exact_match else 1
+    else:
+        right_side = 1 if allow_exact_match else 0
+    return 1 - right_side, right_side
+
+
+def _carry(
+    tagged: DataFrame,
+    keep: Sequence[str],
+    on: Sequence[str],
+    time_col: str,
+    carried: Sequence[tuple[str, str]],
+    right_side: int,
+    direction: str,
+) -> DataFrame:
+    """The as-of core over ``tagged`` (both sides in one relation, each
+    row's side in ``__side``): per ``on`` keys in (``time_col``, side)
+    order, each ``(src, name)`` of ``carried`` takes ``src`` of the
+    nearest right row as ``name``. Returns the left rows' ``keep`` columns
+    plus the carried ones."""
+    base = Window.partitionBy(*on).orderBy(F.col(time_col), F.col("__side"))
+    if direction == "backward":
+        w = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    else:
+        w = base.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+
+    def carry(c: str) -> Column:
+        src = F.when(F.col("__side") == F.lit(right_side), F.col(c))
+        if direction == "backward":
+            return F.last(src, ignorenulls=True).over(w)
+        return F.first(src, ignorenulls=True).over(w)
+
+    out = tagged.select(
+        *keep,
+        F.col("__side"),
+        *[carry(src).alias(name) for src, name in carried],
+    )
+    return out.where(F.col("__side") != F.lit(right_side)).drop("__side")
+
+
 def asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -40,21 +88,12 @@ def asof_join(
     typical. Returns all left columns plus ``{v}{suffix}`` for each value
     column and ``{right_time}{suffix}``.
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward|forward, got {direction!r}")
+    left_side, right_side = _sides(direction, allow_exact_match)
     on = list(on)
     value_cols = list(value_cols)
 
-    # Tag sides and align schemas. Sort position of right rows at an EQUAL
-    # timestamp decides exact-match semantics: backward scans carry the
-    # last preceding right row (right first ⇔ exact counts); forward scans
-    # take the first following right row (left first ⇔ exact counts).
-    if direction == "backward":
-        right_side = 0 if allow_exact_match else 1
-    else:
-        right_side = 1 if allow_exact_match else 0
-    left_side = 1 - right_side
-
+    # Tag sides and align schemas: the right side's values and time move
+    # to __v_* / __vt, so they never collide with a left column.
     lcols = [c for c in left.columns]
     l_tagged = left.select(
         *[F.col(c) for c in lcols],
@@ -72,27 +111,11 @@ def asof_join(
         F.col(right_time).alias("__vt"),
     ).select(*[c for c in l_tagged.columns])  # column order alignment
 
-    unioned = l_tagged.unionByName(r_tagged)
-
-    base = Window.partitionBy(*on).orderBy(F.col("__t"), F.col("__side"))
-    if direction == "backward":
-        w = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    else:
-        w = base.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-
-    def carry(c: str) -> Column:
-        src = F.when(F.col("__side") == F.lit(right_side), F.col(c))
-        if direction == "backward":
-            return F.last(src, ignorenulls=True).over(w)
-        return F.first(src, ignorenulls=True).over(w)
-
-    out = unioned.select(
-        *lcols,
-        F.col("__side"),
-        *[carry(f"__v_{v}").alias(f"{v}{suffix}") for v in value_cols],
-        carry("__vt").alias(f"{right_time}{suffix}"),
+    carried = [(f"__v_{v}", f"{v}{suffix}") for v in value_cols]
+    carried.append(("__vt", f"{right_time}{suffix}"))
+    return _carry(
+        l_tagged.unionByName(r_tagged), lcols, on, "__t", carried, right_side, direction
     )
-    return out.where(F.col("__side") == F.lit(left_side)).drop("__side")
 
 
 def asof_self_join(
@@ -116,34 +139,11 @@ def asof_self_join(
     columns plus ``{v}{suffix}`` / ``{time_col}{suffix}`` carried from
     the nearest right row per the same semantics as :func:`asof_join`.
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward|forward, got {direction!r}")
-    if direction == "backward":
-        right_side = 0 if allow_exact_match else 1
-    else:
-        right_side = 1 if allow_exact_match else 0
-    left_side = 1 - right_side
-
+    left_side, right_side = _sides(direction, allow_exact_match)
     tagged = df.where(left_pred | right_pred).withColumn(
         "__side",
         F.when(right_pred, F.lit(right_side)).otherwise(F.lit(left_side)),
     )
-    base = Window.partitionBy(*on).orderBy(F.col(time_col), F.col("__side"))
-    if direction == "backward":
-        w = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    else:
-        w = base.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-
-    def carry(c: str) -> Column:
-        src = F.when(F.col("__side") == F.lit(right_side), F.col(c))
-        if direction == "backward":
-            return F.last(src, ignorenulls=True).over(w)
-        return F.first(src, ignorenulls=True).over(w)
-
-    out = tagged.select(
-        *df.columns,
-        F.col("__side"),
-        *[carry(v).alias(f"{v}{suffix}") for v in value_cols],
-        carry(time_col).alias(f"{time_col}{suffix}"),
-    )
-    return out.where(F.col("__side") == F.lit(left_side)).drop("__side")
+    carried = [(v, f"{v}{suffix}") for v in value_cols]
+    carried.append((time_col, f"{time_col}{suffix}"))
+    return _carry(tagged, df.columns, on, time_col, carried, right_side, direction)

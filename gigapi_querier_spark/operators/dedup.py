@@ -65,21 +65,6 @@ def _words(text: Column) -> Column:
     return F.split(text, " ")
 
 
-def shingles(text: Column, width: int = SHINGLE_WIDTH) -> Column:
-    """All ``width``-word shingles of a text as an array<string>.
-
-    Short texts (< width words) produce a single truncated shingle so no
-    document silently drops out of the signature stage.
-
-    Prefer :func:`shingle_relation` in pipelines — it computes the word
-    array as a real column once (this Column-level form re-derives it
-    inside the lambda's plan when composed).
-    """
-    w = _words(text)
-    idx = F.sequence(F.lit(1), F.greatest(F.size(w) - (width - 1), F.lit(1)))
-    return F.transform(idx, lambda i: F.array_join(F.slice(w, i, width), " "))
-
-
 def shingle_relation(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -119,11 +104,6 @@ def exact_dedup_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
         F.count_distinct("fp").alias("n_unique"),
         (F.count("*") - F.count_distinct("fp")).alias("n_dup_docs"),
     )
-
-
-def exact_dedup(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
-    """Keep one row per distinct ``subset`` (all columns when None)."""
-    return df.dropDuplicates(list(subset) if subset else None)
 
 
 #: Universal-hash permutation constants for MinHash: h_i(x) = (A_i·x + B_i)

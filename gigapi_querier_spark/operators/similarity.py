@@ -32,6 +32,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from gigapi_querier_spark.session import file_status
+
 
 def _mat(vecs: pd.Series) -> np.ndarray:
     """Stack an Arrow list<float> series into an (n, d) float64 matrix."""
@@ -47,27 +49,15 @@ _VECTORIZE_BYTES = 2 * 1024 * 1024
 
 
 def _input_bytes(df: DataFrame) -> int | None:
-    import os
-
+    """Total size of the frame's input files, None when unknown. Object-
+    store inputs (s3a/hdfs/…) are sized through the Hadoop FileSystem API
+    (``session.file_status``), so small object-store corpora also get the
+    JVM kernel."""
     try:
         files = df.inputFiles()
         if not files:
             return None
-        total = 0
-        for f in files:
-            if "://" not in f:
-                total += os.path.getsize(f.removeprefix("file:"))
-            else:
-                # Object-store input (s3a/hdfs/…): stat through the Hadoop
-                # FileSystem API, same as engine._sig — os.path.getsize on
-                # a URI always failed, so small object-store corpora were
-                # mis-routed to the Arrow-UDF path (VERDICT r3 wrong#3).
-                # Metadata-only call, cheap relative to the kernel choice.
-                spark = df.sparkSession
-                p = spark._jvm.org.apache.hadoop.fs.Path(f)
-                fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-                total += int(fs.getFileStatus(p).getLen())
-        return total
+        return sum(file_status(df.sparkSession, f)[0] for f in files)
     except Exception:
         return None
 

@@ -25,7 +25,7 @@ from datetime import datetime, timezone
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-from pyspark.sql.types import TimestampType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructType, TimestampType
 
 from gigapi_querier_spark.engine import QueryEngine, QueryError
 from gigapi_querier_spark.formats import json_format, transform_value
@@ -43,6 +43,33 @@ CHUNK_BYTES = 64 * 1024
 class _HeadersAlreadySent(Exception):
     """A streaming response failed after the status line went out; the
     connection must be closed, never re-responded."""
+
+
+def _to_utc(t: DataType):
+    """The function that makes every ``TimestampType`` value inside a row
+    value of type ``t`` UTC-aware (rows carry them as naive local time), or
+    None when ``t`` holds none. Structs come back as dicts, which
+    ``transform_value`` encodes as it encodes a ``Row``."""
+    if isinstance(t, TimestampType):
+        f = lambda v: v.astimezone(timezone.utc)
+    elif isinstance(t, ArrayType):
+        g = _to_utc(t.elementType)
+        if g is None:
+            return None
+        f = lambda v: [g(x) for x in v]
+    elif isinstance(t, MapType):
+        gk, gv = _to_utc(t.keyType), _to_utc(t.valueType)
+        if gk is None and gv is None:
+            return None
+        f = lambda v: {gk(k) if gk else k: gv(x) if gv else x for k, x in v.items()}
+    elif isinstance(t, StructType):
+        gs = [_to_utc(fld.dataType) for fld in t.fields]
+        if not any(gs):
+            return None
+        f = lambda v: {n: g(x) if g else x for n, g, x in zip(t.names, gs, v)}
+    else:
+        return None
+    return lambda v: None if v is None else f(v)
 
 
 def make_handler(engine: QueryEngine):
@@ -90,6 +117,18 @@ def make_handler(engine: QueryEngine):
             self._error("not found", 404)
 
         def do_POST(self):
+            # Read the body before any check can answer: a body left unread
+            # would be parsed as the next request on this connection.
+            try:
+                length = int(self.headers.get("Content-Length", 0))
+            except ValueError:
+                length = -1
+            if length < 0:
+                # the body's end is unknown: never read this connection again
+                self.close_connection = True
+                self._error("invalid Content-Length")
+                return
+            body = self.rfile.read(length)
             url = urlparse(self.path)
             if url.path != "/query":
                 self._error("not found", 404)
@@ -100,16 +139,7 @@ def make_handler(engine: QueryEngine):
                 self._error(f"unknown format: {fmt}")
                 return
             try:
-                length = int(self.headers.get("Content-Length", 0))
-            except ValueError:
-                length = -1
-            if length < 0:
-                # the body's end is unknown: never read this connection again
-                self.close_connection = True
-                self._error("invalid Content-Length")
-                return
-            try:
-                payload = json.loads(self.rfile.read(length) or b"{}")
+                payload = json.loads(body or b"{}")
             except ValueError:  # JSONDecodeError, or bytes that are not UTF-8/16/32
                 self._error("invalid JSON body")
                 return
@@ -147,11 +177,12 @@ def make_handler(engine: QueryEngine):
             df = engine.query(sql, db)
             names = df.columns
             count_idx = [i for i, c in enumerate(names) if "count" in c]
-            # Rows carry TimestampType as naive local time: make it UTC.
-            utc_idx = [
-                i
-                for i, f in enumerate(df.schema.fields)
-                if isinstance(f.dataType, TimestampType)
+            # Rows carry TimestampType as naive local time, at any depth:
+            # make it UTC.
+            utc = [
+                (i, f)
+                for i, f in enumerate(_to_utc(fld.dataType) for fld in df.schema.fields)
+                if f is not None
             ]
             it = df.toLocalIterator(True)  # prefetch the next partition
             self.send_response(200)
@@ -163,14 +194,13 @@ def make_handler(engine: QueryEngine):
             try:
                 lines, size = [], 0
                 for row in it:
-                    if count_idx or utc_idx:
+                    if count_idx or utc:
                         row = list(row)
                         for i in count_idx:
                             if row[i] is None:
                                 row[i] = 0
-                        for i in utc_idx:
-                            if row[i] is not None:
-                                row[i] = row[i].astimezone(timezone.utc)
+                        for i, f in utc:
+                            row[i] = f(row[i])
                     line = json.dumps({k: transform_value(v) for k, v in zip(names, row)})
                     lines.append(line)
                     size += len(line) + 1

@@ -113,6 +113,20 @@ def time_ns(df: DataFrame, name: str) -> Column:
     return c
 
 
+def file_status(spark: SparkSession, path: str) -> tuple[int, int]:
+    """(size in bytes, modification time) of a file, from metadata only.
+    A local path (``file:`` prefix allowed) uses ``os.stat`` (mtime in
+    ns); any ``scheme://`` URI (file, s3a, hdfs, …) goes through Hadoop's
+    FileSystem API (mtime in ms), so object-store files are stat'ed too.
+    Raises when the file cannot be stat'ed."""
+    if "://" not in path:
+        st = os.stat(path.removeprefix("file:"))
+        return st.st_size, st.st_mtime_ns
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    st = p.getFileSystem(spark._jsc.hadoopConfiguration()).getFileStatus(p)
+    return int(st.getLen()), int(st.getModificationTime())
+
+
 def get_spark(
     app_name: str = "gigapi-querier-spark",
     master: str | None = None,

@@ -17,8 +17,9 @@ This is the engine-side counterpart of the reference's catalog layer:
 Spark-first division of labor: this module only *lists files* (pure
 Python, no Spark); the pruned list feeds ``spark.read.parquet(*files)``
 where Catalyst adds row-group min/max skipping and column pruning on top.
-At cluster scale the listing consults an index (JSON here; the reference
-also supports Redis) rather than statting 100 TB of objects.
+At cluster scale the listing consults an index (this catalog is the JSON
+one; sources/index.py also has Redis, as the reference does) rather than
+statting 100 TB of objects.
 
 Each folder's parsed metadata.json is kept, keyed on the file's
 ``(st_ino, st_mtime_ns, st_size)``: a query stats a metadata file instead
@@ -41,6 +42,7 @@ import re
 from datetime import datetime, timezone
 
 from gigapi_querier_spark.plans.sqlpass import NS_PER_S, TimeRange
+from gigapi_querier_spark.sources.index import TableIndex
 
 _DATE_DIR = re.compile(r"^date=(.+)$")
 _HOUR_DIR = re.compile(r"^hour=(\d+)$")
@@ -67,8 +69,9 @@ def _overlaps(tr: TimeRange, min_time: int | None, max_time: int | None) -> bool
     return True
 
 
-class Catalog:
-    """Filesystem catalog rooted at ``{root}/{db}/{table}``."""
+class Catalog(TableIndex):
+    """Filesystem catalog rooted at ``{root}/{db}/{table}``: the ``json``
+    metadata index (``index_from_env``)."""
 
     def __init__(self, root: str):
         self.root = root

@@ -1,16 +1,18 @@
 """Metadata index backends (reference: github.com/gigapi/metadata — JSON
 or Redis backed; selection in querier/queryClient.go:408-433).
 
-``JSONIndex`` wraps the filesystem Catalog (metadata.json trees).
-``RedisIndex`` mirrors the reference's Redis layout; the redis client
-isn't installed in every environment, so it import-gates and raises a
-clear error at construction when unavailable.
+``TableIndex`` is the contract the engine prunes through. Two backends
+implement it: the filesystem ``Catalog`` (per-folder metadata.json trees,
+sources/catalog.py) for ``json``, and ``RedisIndex`` for ``redis``. The
+redis client isn't installed in every environment, so ``RedisIndex``
+import-gates and raises a clear error at construction when unavailable.
+An index may return local paths or ``scheme://`` URIs; the engine binds
+either through Spark's Hadoop FileSystem layer.
 """
 
 from __future__ import annotations
 
 from gigapi_querier_spark.plans.sqlpass import TimeRange
-from gigapi_querier_spark.sources.catalog import Catalog
 
 
 class TableIndex:
@@ -29,25 +31,6 @@ class TableIndex:
         """Whether every row of ``files`` is proven to have a non-null
         ``time`` inside ``tr``. False unless the backend can prove it."""
         return False
-
-
-class JSONIndex(TableIndex):
-    """Filesystem-backed index (per-folder metadata.json + layout walk)."""
-
-    def __init__(self, root: str):
-        self._catalog = Catalog(root)
-
-    def databases(self) -> list[str]:
-        return self._catalog.databases()
-
-    def tables(self, db: str) -> list[str]:
-        return self._catalog.tables(db)
-
-    def find_files(self, db: str, table: str, tr: TimeRange | None = None) -> list[str]:
-        return self._catalog.find_files(db, table, tr)
-
-    def covers(self, files: list[str], tr: TimeRange) -> bool:
-        return self._catalog.covers(files, tr)
 
 
 class RedisIndex(TableIndex):
@@ -102,23 +85,20 @@ class RedisIndex(TableIndex):
         return sorted(out)
 
 
-def make_index(kind: str, root_or_url: str) -> TableIndex:
-    """Index factory (reference config switch, queryClient.go:421-433)."""
-    if kind == "json":
-        return JSONIndex(root_or_url)
-    if kind == "redis":
-        return RedisIndex(root_or_url)
-    raise ValueError(f"unknown metadata index type: {kind!r}")
-
-
 def index_from_env(root: str) -> TableIndex:
     """Resolve the metadata backend the way the reference does
     (queryClient.go:408-433): ``GIGAPI_METADATA_TYPE`` selects json
     (default, filesystem metadata.json trees under ``root``) or redis
-    (``GIGAPI_METADATA_URL`` = redis:// URL)."""
+    (``GIGAPI_METADATA_URL`` = redis:// URL). Any other value is a
+    ValueError rather than a silent fall back to json."""
     import os
 
+    # imported here: catalog.py imports TableIndex from this module
+    from gigapi_querier_spark.sources.catalog import Catalog
+
     kind = os.environ.get("GIGAPI_METADATA_TYPE", "json").lower()
+    if kind == "json":
+        return Catalog(root)
     if kind == "redis":
-        return make_index("redis", os.environ.get("GIGAPI_METADATA_URL", ""))
-    return make_index("json", root)
+        return RedisIndex(os.environ.get("GIGAPI_METADATA_URL", ""))
+    raise ValueError(f"unknown metadata index type: {kind!r}")

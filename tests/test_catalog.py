@@ -92,35 +92,38 @@ def test_show_namespaces(root):
     assert cat.tables("missing") == []
 
 
-def test_json_index_wraps_catalog(root):
-    from gigapi_querier_spark.sources.index import JSONIndex, make_index
+def test_json_index_wraps_catalog(root, monkeypatch):
+    """The json metadata index is the filesystem catalog itself."""
+    from gigapi_querier_spark.sources.index import index_from_env
 
     path, manifest = root
-    idx = make_index("json", path)
-    assert isinstance(idx, JSONIndex)
+    monkeypatch.setenv("GIGAPI_METADATA_TYPE", "json")
+    idx = index_from_env(path)
+    assert isinstance(idx, Catalog)
     assert idx.databases() == ["mydb", "otherdb"]
     assert len(idx.find_files("mydb", "weather")) == len(manifest["files"])
 
 
-def test_redis_index_gated():
-    from gigapi_querier_spark.sources.index import make_index
+def test_redis_index_gated(monkeypatch):
+    from gigapi_querier_spark.sources.index import index_from_env
 
+    monkeypatch.setenv("GIGAPI_METADATA_TYPE", "redis")
+    monkeypatch.setenv("GIGAPI_METADATA_URL", "redis://localhost:6379/0")
     try:
         import redis  # noqa: F401
     except ImportError:
-        import pytest as _pytest
-
-        with _pytest.raises(RuntimeError, match="redis"):
-            make_index("redis", "redis://localhost:6379/0")
+        with pytest.raises(RuntimeError, match="redis"):
+            index_from_env("/nonexistent")
 
 
-def test_unknown_index_kind():
-    import pytest as _pytest
+def test_unknown_index_kind(monkeypatch):
+    """An unknown GIGAPI_METADATA_TYPE fails loudly instead of silently
+    serving the filesystem index."""
+    from gigapi_querier_spark.sources.index import index_from_env
 
-    from gigapi_querier_spark.sources.index import make_index
-
-    with _pytest.raises(ValueError):
-        make_index("zookeeper", "x")
+    monkeypatch.setenv("GIGAPI_METADATA_TYPE", "zookeeper")
+    with pytest.raises(ValueError, match="zookeeper"):
+        index_from_env("/nonexistent")
 
 
 def _hourly_folders(root: str, n: int) -> str:

@@ -17,12 +17,8 @@ from pyspark.sql import functions as F
 
 from gigapi_querier_spark.engine import QueryEngine
 from gigapi_querier_spark.plans.sqlpass import TimeRange
-from gigapi_querier_spark.sources.index import (
-    JSONIndex,
-    RedisIndex,
-    index_from_env,
-    make_index,
-)
+from gigapi_querier_spark.sources.catalog import Catalog
+from gigapi_querier_spark.sources.index import RedisIndex, index_from_env
 
 
 class FakeRedis:
@@ -157,11 +153,12 @@ def test_engine_scans_uri_paths_from_index(spark, redis_root):
 
 def test_index_from_env_selects_backend(tmp_path, monkeypatch):
     monkeypatch.delenv("GIGAPI_METADATA_TYPE", raising=False)
-    assert isinstance(index_from_env(str(tmp_path)), JSONIndex)
+    assert isinstance(index_from_env(str(tmp_path)), Catalog)
     monkeypatch.setenv("GIGAPI_METADATA_TYPE", "json")
-    assert isinstance(index_from_env(str(tmp_path)), JSONIndex)
+    assert isinstance(index_from_env(str(tmp_path)), Catalog)
+    monkeypatch.setenv("GIGAPI_METADATA_TYPE", "mongo")
     with pytest.raises(ValueError):
-        make_index("mongo", "x")
+        index_from_env(str(tmp_path))
 
 
 def test_sig_local_and_hadoop_paths(spark, tmp_path):
@@ -184,13 +181,12 @@ def test_sig_local_and_hadoop_paths(spark, tmp_path):
 
 
 def test_engine_time_prunes_layer_resolved_uris(spark, tmp_path):
-    """VERDICT r3 next#4: the FULL engine lifecycle — layer resolution →
-    index range pruning → URI bind → scan — over ``file://``-scheme URIs,
-    the same code path an ``s3a://`` layer takes (parse_layer builds the
-    per-bucket S3A conf; LocalFileSystem stands in for S3AFileSystem since
-    hadoop-aws isn't bundled). Asserts the time filter prunes at the INDEX
-    level (n_files), not just in the scan."""
-    from gigapi_querier_spark.sources.layers import parse_layer, resolve_path
+    """The FULL engine lifecycle — index range pruning → URI bind → scan —
+    over ``file://``-scheme URIs laid out as the reference resolves an fs
+    layer (``{root}/{db}/{table}/data/{path}``, queryClient.go:680): the
+    same code path an ``s3a://`` index takes (LocalFileSystem stands in
+    for S3AFileSystem since hadoop-aws isn't bundled). Asserts the time
+    filter prunes at the INDEX level (n_files), not just in the scan."""
     from gigapi_querier_spark.sources.writer import write_table
 
     root = str(tmp_path / "layer_root")
@@ -202,7 +198,6 @@ def test_engine_time_prunes_layer_resolved_uris(spark, tmp_path):
         "time long, v double",
     )
     write_table(df, root, "ldb", "metrics")
-    layer = parse_layer("local", f"file://{root}")
 
     import glob
 
@@ -213,9 +208,9 @@ def test_engine_time_prunes_layer_resolved_uris(spark, tmp_path):
     entries = {}
     for p in glob.glob(os.path.join(data_dir, "**", "*.parquet"), recursive=True):
         rel = os.path.relpath(p, data_dir)
-        # resolve through the layer exactly as a writer-side indexer would,
-        # then scheme-qualify (an s3 layer emits s3a://… here instead)
-        uri = "file://" + resolve_path(layer, "ldb", "metrics", rel)
+        # the fs-layer path of the entry, scheme-qualified as a writer-side
+        # indexer would (an object store emits s3a://… here instead)
+        uri = "file://" + os.path.join(root, "ldb", "metrics", "data", rel)
         import pyarrow.parquet as _pq
 
         t = _pq.read_table(p, columns=["time"])["time"].to_pylist()

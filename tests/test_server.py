@@ -239,11 +239,18 @@ def test_json_and_ndjson_rows_agree(base_url, spark):
 
 
 def test_timestamps_are_utc_on_a_non_utc_host(base_url):
+    """Timestamps render in UTC on both edges, nested ones too (the ndjson
+    rows carry them as naive local time at every depth)."""
     import os
     import time
 
-    body = {"query": "SELECT TIMESTAMP'2024-01-02 03:04:05.123456 UTC' AS ts"}
-    want = {"ts": "2024-01-02T03:04:05.123456Z"}
+    ts = "TIMESTAMP'2024-01-02 03:04:05.123456 UTC'"
+    body = {
+        "query": f"SELECT {ts} AS ts, named_struct('t', {ts}) AS st,"
+        f" array({ts}, NULL) AS arr, map('k', {ts}) AS m"
+    }
+    want_ts = "2024-01-02T03:04:05.123456Z"
+    want = {"ts": want_ts, "st": {"t": want_ts}, "arr": [want_ts, None], "m": {"k": want_ts}}
     old = os.environ.get("TZ")
     os.environ["TZ"] = "America/New_York"
     time.tzset()
@@ -258,3 +265,27 @@ def test_timestamps_are_utc_on_a_non_utc_host(base_url):
         else:
             os.environ["TZ"] = old
         time.tzset()
+
+
+@pytest.mark.parametrize(
+    "path,code",
+    [("/query?format=xml", 400), ("/nope", 404)],
+    ids=["unknown_format", "unknown_path"],
+)
+def test_early_error_keeps_the_connection_usable(base_url, path, code):
+    """A request refused before its body is parsed still consumes that
+    body, so the next request on the same keep-alive connection is read
+    from its own request line."""
+    host, port = base_url.removeprefix("http://").split(":")
+    conn = http.client.HTTPConnection(host, int(port), timeout=30)
+    headers = {"Content-Type": "application/json"}
+    try:
+        conn.request("POST", path, json.dumps({"query": "SELECT 1 AS x"}), headers)
+        resp = conn.getresponse()
+        assert resp.status == code
+        resp.read()
+        conn.request("POST", "/query", json.dumps({"query": "SELECT 1 AS x"}), headers)
+        resp = conn.getresponse()
+        assert (resp.status, json.loads(resp.read())) == (200, {"results": [{"x": "1"}]})
+    finally:
+        conn.close()
