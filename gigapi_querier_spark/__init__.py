@@ -21,8 +21,8 @@ re-expresses that architecture Spark-first:
                   jaccard), similarity search, text analysis, multimodal
                   column plumbing, as-of join, sessionization.
 - ``engine``    — the QueryClient equivalent: Query(sql, db) -> DataFrame.
-- ``formats``   — JSON / NDJSON encoders (int64-as-string, RFC3339Nano;
-                  reference: querier/formatJson.go).
+- ``formats``   — JSON / NDJSON encoders, column by column (int64-as-string,
+                  RFC3339Nano; reference: querier/formatJson.go).
 - ``server``    — HTTP POST /query + /health (reference: querier/server.go).
 - ``flightsql`` — Arrow Flight server (reference: querier/flightsql.go).
 """

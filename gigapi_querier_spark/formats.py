@@ -4,17 +4,26 @@ rules (querier/formatJson.go:41-67):
 - int64 values render as **strings** (BigInt-safe for JS clients);
 - timestamps render as RFC3339Nano.
 
-Plus the count-null→0 rule applied by the engine (queryClient.go:911-914).
+Decimals render as their exact text in a string, by the int64 rule. Plus
+the count-null→0 rule applied by the engine (queryClient.go:911-914).
 JSON shape: {"results": [...]} (formatJson.go:10-19); NDJSON (one object
-per line, formatJson.go:21-38) is streamed by the HTTP handler, which
-encodes each row with ``transform_value``.
+per line, formatJson.go:21-38) is streamed by the HTTP handler.
+
+Both edges encode with ``encode_rows``, column by column: a column of
+only ints, only strings or only floats is encoded by one rule with no
+per-value dispatch, any other column value by value with
+``transform_value``. The text equals ``json.dumps`` of the row dict of
+transformed values, byte for byte.
 """
 
 from __future__ import annotations
 
 import json
-from collections.abc import Iterable
+import math
+from collections.abc import Iterable, Sequence
 from datetime import date, datetime, timezone
+from decimal import Decimal
+from json.encoder import encode_basestring_ascii
 
 import pyarrow as pa
 from pyspark.sql import Row
@@ -49,6 +58,8 @@ def transform_value(v):
         return {k: transform_value(x) for k, x in zip(v.__fields__, v)}
     if isinstance(v, (list, tuple)):
         return [transform_value(x) for x in v]
+    if isinstance(v, Decimal):
+        return format(v, "f")  # exact, BigInt-safe like int64
     return v
 
 
@@ -56,8 +67,63 @@ def transform_rows(rows: Iterable[dict]) -> list[dict]:
     return [{k: transform_value(v) for k, v in r.items()} for r in rows]
 
 
-def json_format(rows: Iterable[dict]) -> str:
-    return json.dumps({"results": transform_rows(rows)})
+def json_format(rows: Sequence[dict]) -> str:
+    """``{"results": [...]}`` of row dicts that share one key order."""
+    if not rows:
+        return '{"results": []}'
+    names = list(rows[0])
+    cols = [[r[k] for r in rows] for k in names]
+    return '{"results": [' + ", ".join(encode_rows(names, cols, len(rows))) + "]}"
+
+
+def encode_rows(names: Sequence[str], cols: Sequence[Sequence], n_rows: int) -> list[str]:
+    """One JSON object text per row of the columns ``cols`` (named
+    ``names``, ``n_rows`` values each): the text of
+    ``json.dumps({k: transform_value(v) for k, v in zip(names, row)})``.
+    A name given twice keeps its first position and takes its last
+    column, as that dict does.
+
+    Each row is one ``%`` of a template made per call, whose slot for a
+    column of ints or finite floats without nulls formats the values
+    themselves."""
+    last = {}
+    for i, name in enumerate(names):
+        last[name] = i
+    if not last:
+        return ["{}"] * n_rows
+    slots, vals = [], []
+    for k, i in last.items():
+        slot, col = _encode_column(cols[i])
+        slots.append(encode_basestring_ascii(k).replace("%", "%%") + ": " + slot)
+        vals.append(col)
+    template = "{" + ", ".join(slots) + "}"
+    return [template % row for row in zip(*vals)]
+
+
+#: ``json.dumps`` spellings of the floats ``repr`` spells otherwise
+_FLOAT_WORDS = {"nan": "NaN", "inf": "Infinity", "-inf": "-Infinity"}
+
+
+def _encode_column(col: Sequence) -> tuple[str, Sequence]:
+    """A ``%`` slot and the values to fill it with, giving the JSON text
+    of ``transform_value(v)`` for each value ``v`` of ``col``."""
+    kinds = set(map(type, col))
+    nulls = type(None) in kinds
+    kinds.discard(type(None))
+    if kinds <= {int}:  # int64 → decimal string (formatJson.go:53-54)
+        if not nulls:
+            return '"%d"', col
+        return "%s", ["null" if v is None else '"%d"' % v for v in col]
+    if kinds == {str}:
+        if not nulls:
+            return "%s", list(map(encode_basestring_ascii, col))
+        return "%s", ["null" if v is None else encode_basestring_ascii(v) for v in col]
+    if kinds == {float}:
+        if not nulls and all(map(math.isfinite, col)):
+            return "%r", col
+        reprs = ("null" if v is None else float.__repr__(v) for v in col)
+        return "%s", [_FLOAT_WORDS.get(r, r) for r in reprs]
+    return "%s", [json.dumps(transform_value(v)) for v in col]
 
 
 def arrow_rows(table: pa.Table) -> list[dict]:

@@ -13,8 +13,12 @@ reference's single DuckDB handle). JSON is fetched with one parallel
 Arrow collect (``QueryEngine.query_rows``), as the reference materializes
 a result once per request (queryClient.go:886-920). NDJSON streams
 partition by partition from ``toLocalIterator``, prefetching the next
-partition while one is encoded, and writes one HTTP chunk per ~64 KB of
-lines — results never fully materialize in driver memory.
+partition while one is encoded, and writes one HTTP chunk per
+``CHUNK_ROWS`` rows — results never fully materialize in driver memory.
+Both edges encode column by column (``formats.encode_rows``). A failure
+after the NDJSON status line went out closes the connection with the
+chunked body unterminated, so the client sees a truncated response, never
+a complete one.
 """
 
 from __future__ import annotations
@@ -23,12 +27,15 @@ import json
 import os
 from datetime import datetime, timezone
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from itertools import islice
 from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql.types import ArrayType, DataType, MapType, StructType, TimestampType
 
 from gigapi_querier_spark.engine import QueryEngine, QueryError
-from gigapi_querier_spark.formats import json_format, transform_value
+# transform_value is not called here; it stays a module attribute because
+# the lake benchmark's traced pass (lakebench/spans.py) wraps it
+from gigapi_querier_spark.formats import encode_rows, json_format, transform_value  # noqa: F401
 
 _CORS = {
     "Access-Control-Allow-Origin": "*",
@@ -36,8 +43,8 @@ _CORS = {
     "Access-Control-Allow-Headers": "Content-Type",
 }
 
-#: NDJSON lines are joined into HTTP chunks of about this many bytes.
-CHUNK_BYTES = 64 * 1024
+#: NDJSON rows per HTTP chunk: the handler holds at most this many rows.
+CHUNK_ROWS = 1024
 
 
 class _HeadersAlreadySent(Exception):
@@ -163,7 +170,7 @@ def make_handler(engine: QueryEngine):
             except _HeadersAlreadySent:
                 # mid-stream ndjson failure: headers (200 + chunked) are on
                 # the wire — a second send_response would corrupt the
-                # framing. The chunked body was already terminated; close.
+                # framing. Close with the chunked body unterminated.
                 self.close_connection = True
             except QueryError as e:
                 self._error(str(e))
@@ -192,29 +199,15 @@ def make_handler(engine: QueryEngine):
             self.send_header("Transfer-Encoding", "chunked")
             self.end_headers()
             try:
-                lines, size = [], 0
-                for row in it:
-                    if count_idx or utc:
-                        row = list(row)
-                        for i in count_idx:
-                            if row[i] is None:
-                                row[i] = 0
-                        for i, f in utc:
-                            row[i] = f(row[i])
-                    line = json.dumps({k: transform_value(v) for k, v in zip(names, row)})
-                    lines.append(line)
-                    size += len(line) + 1
-                    if size >= CHUNK_BYTES:
-                        self._write_chunk(lines)
-                        lines, size = [], 0
-                if lines:
-                    self._write_chunk(lines)
+                while chunk := list(islice(it, CHUNK_ROWS)):
+                    cols = list(zip(*chunk))
+                    for i in count_idx:
+                        cols[i] = [0 if v is None else v for v in cols[i]]
+                    for i, f in utc:
+                        cols[i] = list(map(f, cols[i]))
+                    self._write_chunk(encode_rows(names, cols, len(chunk)))
             except Exception as e:
-                # terminate the chunked body; do NOT start a second response
-                try:
-                    self.wfile.write(b"0\r\n\r\n")
-                except OSError:
-                    pass
+                # no terminating chunk: the body must not read as complete
                 raise _HeadersAlreadySent(str(e)) from e
             self.wfile.write(b"0\r\n\r\n")
 

@@ -3,12 +3,23 @@
 from __future__ import annotations
 
 import json
-from datetime import datetime, timezone
+import math
+from datetime import datetime, timedelta, timezone
+from decimal import Decimal
 
 import pyarrow as pa
+from hypothesis import given, settings
+from hypothesis import strategies as st
+from pyspark.sql import Row
 
 from gigapi_querier_spark.arrow_out import normalize_arrow
-from gigapi_querier_spark.formats import arrow_rows, json_format, transform_value
+from gigapi_querier_spark.formats import (
+    arrow_rows,
+    encode_rows,
+    json_format,
+    transform_rows,
+    transform_value,
+)
 
 
 def test_int64_renders_as_string():
@@ -33,9 +44,71 @@ def test_timestamp_rfc3339nano():
     assert transform_value(datetime(2024, 1, 2)) == "2024-01-02T00:00:00Z"
 
 
+def test_decimal_renders_as_exact_string():
+    # Spark types 1.5 as DECIMAL(2,1); like int64, a decimal is a string
+    assert transform_value(Decimal("1.50")) == "1.50"
+    assert transform_value(Decimal("12345678901234567890")) == "12345678901234567890"
+    assert transform_value(Decimal("1E+2")) == "100"
+
+
 def test_json_envelope():
     out = json.loads(json_format([{"a": 1, "b": "x"}]))
     assert out == {"results": [{"a": "1", "b": "x"}]}
+    assert json_format([]) == '{"results": []}'
+    assert json_format([{}, {}]) == '{"results": [{}, {}]}'
+
+
+#: text with non-ASCII and control characters, quotes, backslashes and ``%``
+_text = st.text(st.one_of(st.characters(), st.sampled_from('"%\\\n\x00\x7fé☃')), max_size=8)
+_scalars = {
+    "int": st.one_of(
+        st.integers(), st.integers(min_value=2**53), st.integers(max_value=-1)
+    ),
+    "float": st.one_of(
+        st.floats(), st.sampled_from([-0.0, 1e16, math.nan, math.inf, -math.inf])
+    ),
+    "str": _text,
+    "bool": st.booleans(),
+    "datetime": st.datetimes(
+        timezones=st.sampled_from(
+            [None, timezone.utc, timezone(timedelta(hours=-5)), timezone(timedelta(hours=5, minutes=30))]
+        )
+    ),
+    "date": st.dates(),
+    "bytes": st.binary(max_size=8),
+    "decimal": st.decimals(allow_nan=False, allow_infinity=False),
+}
+_nested = st.recursive(
+    st.one_of(st.none(), *_scalars.values()),
+    lambda inner: st.one_of(
+        st.lists(inner, max_size=3),
+        st.dictionaries(_text, inner, max_size=3),
+        st.dictionaries(_text, inner, min_size=1, max_size=3).map(lambda d: Row(**d)),
+    ),
+    max_leaves=6,
+)
+#: a column's values: one scalar kind (the encoder's fast paths) or anything
+_column_values = st.sampled_from([*_scalars.values(), _nested])
+
+
+@given(st.data())
+@settings(max_examples=300, deadline=None)
+def test_encode_rows_is_json_dumps_of_the_row_dict(data):
+    """Byte for byte the text ``json.dumps`` gives for the row dict of
+    transformed values, duplicate names included (first position, last
+    value), and ``json_format`` is the same texts in the envelope."""
+    names = data.draw(st.lists(_text, min_size=1, max_size=5), label="names")
+    n = data.draw(st.integers(0, 5), label="rows")
+    cols = [
+        data.draw(st.lists(st.none() | data.draw(_column_values), min_size=n, max_size=n))
+        for _ in names
+    ]
+    rows = list(zip(*cols))
+    want = [json.dumps({k: transform_value(v) for k, v in zip(names, r)}) for r in rows]
+    assert encode_rows(names, cols, n) == want
+    dicts = [dict(zip(names, r)) for r in rows]
+    if len(set(names)) == len(names):
+        assert json_format(dicts) == json.dumps({"results": transform_rows(dicts)})
 
 
 def test_arrow_column_order_time_first_rest_alpha():

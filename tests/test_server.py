@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import http.client
 import json
+import socket
 import threading
 import urllib.request
 
@@ -289,3 +290,119 @@ def test_early_error_keeps_the_connection_usable(base_url, path, code):
         assert (resp.status, json.loads(resp.read())) == (200, {"results": [{"x": "1"}]})
     finally:
         conn.close()
+
+
+#: exact rows both edges send (json: in the ``{"results": [...]}``
+#: envelope, joined by ", "; ndjson: one per line). ``count`` holds nulls
+#: (rendered 0) and ``pressure`` exists in one file only (null elsewhere).
+PINNED = {
+    "SELECT * FROM weather ORDER BY time LIMIT 3": [
+        b'{"time": "1704067200000000000", "location": "north", "temperature": 10.0,'
+        b' "humidity": 40.0, "active": true, "count": "0", "pressure": null}',
+        b'{"time": "1704067500000000000", "location": "south", "temperature": 11.0,'
+        b' "humidity": 41.0, "active": false, "count": "1", "pressure": null}',
+        b'{"time": "1704067800000000000", "location": "east", "temperature": 12.0,'
+        b' "humidity": 42.0, "active": true, "count": "2", "pressure": null}',
+    ],
+    "SELECT * FROM weather WHERE time >= 1704283200000000000 ORDER BY time LIMIT 2": [
+        b'{"time": "1704283200000000000", "location": "north", "temperature": 10.0,'
+        b' "humidity": 40.0, "active": true, "count": "0", "pressure": 0.0}',
+        b'{"time": "1704283260000000000", "location": "south", "temperature": 11.0,'
+        b' "humidity": 41.0, "active": false, "count": "1", "pressure": 1.0}',
+    ],
+    # a duplicate name keeps its first position and takes the last value
+    "SELECT 1 AS a, 2 AS a": [b'{"a": "2"}'],
+    "SELECT * FROM weather WHERE 1 = 0": [],
+}
+
+
+@pytest.mark.parametrize("sql", list(PINNED))
+def test_response_bytes_are_pinned(base_url, sql):
+    rows = PINNED[sql]
+    body = {"query": sql}
+    assert _post(base_url + "/query?db=mydb", body) == (
+        200,
+        b'{"results": [' + b", ".join(rows) + b"]}",
+    )
+    assert _post(base_url + "/query?db=mydb&format=ndjson", body) == (
+        200,
+        b"".join(r + b"\n" for r in rows),
+    )
+
+
+@pytest.mark.parametrize(
+    "sql,text",
+    [
+        ("SELECT 1.5 AS x", '"1.5"'),  # Spark types 1.5 as DECIMAL(2,1)
+        ("SELECT CAST(2 AS DECIMAL(20,0)) AS x", '"2"'),
+        ("SELECT CAST('12345678901234567890.10' AS DECIMAL(22,2)) AS x",
+         '"12345678901234567890.10"'),
+        ("SELECT CAST(NULL AS DECIMAL(5,2)) AS x", "null"),
+    ],
+)
+def test_decimals_render_as_exact_strings(base_url, sql, text):
+    """A decimal is its exact text in a string, BigInt-safe like int64."""
+    row = '{"x": %s}' % text
+    assert _post(base_url + "/query", {"query": sql}) == (
+        200,
+        ('{"results": [%s]}' % row).encode(),
+    )
+    assert _post(base_url + "/query?format=ndjson", {"query": sql}) == (
+        200,
+        (row + "\n").encode(),
+    )
+
+
+def test_ndjson_failure_mid_stream_is_a_truncated_body(base_url):
+    """Rows are on the wire when the last partition fails: the chunked body
+    must not end with its terminating chunk, so the client cannot read the
+    response as complete."""
+    sql = (
+        "SELECT id, CASE WHEN id = 9000 THEN raise_error('boom') ELSE id END AS v"
+        " FROM range(0, 10000, 1, 4)"
+    )
+    host, port = base_url.removeprefix("http://").split(":")
+    conn = http.client.HTTPConnection(host, int(port), timeout=60)
+    try:
+        conn.request("POST", "/query?format=ndjson", json.dumps({"query": sql}))
+        resp = conn.getresponse()
+        assert resp.status == 200
+        with pytest.raises(http.client.IncompleteRead) as ei:
+            resp.read()
+    finally:
+        conn.close()
+    lines = ei.value.partial.splitlines()
+    assert 0 < len(lines) < 10000
+    assert json.loads(lines[0]) == {"id": "0", "v": "0"}
+
+
+def test_ndjson_chunks_stay_bounded(base_url):
+    """The handler holds at most ``CHUNK_ROWS`` rows: read the raw chunked
+    framing of a 10,000-row response."""
+    from gigapi_querier_spark.server import CHUNK_ROWS
+
+    host, port = base_url.removeprefix("http://").split(":")
+    body = json.dumps({"query": "SELECT id FROM range(10000)"}).encode()
+    with socket.create_connection((host, int(port)), timeout=60) as sock:
+        sock.sendall(
+            b"POST /query?format=ndjson HTTP/1.1\r\nHost: x\r\nConnection: close\r\n"
+            b"Content-Length: %d\r\n\r\n%s" % (len(body), body)
+        )
+        raw = b""
+        while data := sock.recv(1 << 16):
+            raw += data
+    head, rest = raw.split(b"\r\n\r\n", 1)
+    assert head.startswith(b"HTTP/1.1 200") and b"Transfer-Encoding: chunked" in head
+    chunks = []
+    while True:
+        size_line, rest = rest.split(b"\r\n", 1)
+        size = int(size_line, 16)
+        if size == 0:
+            assert rest == b"\r\n"
+            break
+        chunks.append(rest[:size])
+        assert rest[size : size + 2] == b"\r\n"
+        rest = rest[size + 2 :]
+    lines = [c.count(b"\n") for c in chunks]
+    assert sum(lines) == 10000 and len(chunks) > 1
+    assert max(lines) <= CHUNK_ROWS
